@@ -100,10 +100,12 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
             case "single" => size(filter(cc, el => p(el))) === 1
           }
         case Index(coll, idx) =>
-          // Cypher is 0-based from the front, negative from the back;
-          // element_at is 1-based from the front, negative from the back
+          // Cypher is 0-based from the front, negative from the back, and
+          // out of range is null; try_element_at is 1-based from the front,
+          // negative from the back, and null out of range whatever
+          // spark.sql.ansi.enabled says (element_at throws under ANSI)
           val i = c(idx)
-          element_at(c(coll), when(i >= 0, i + 1).otherwise(i).cast("int"))
+          try_element_at(c(coll), when(i >= 0, i + 1).otherwise(i).cast("int"))
         case MapProj(v, props, star, extras) =>
           // struct of selected properties + computed entries; a selected
           // property the label doesn't store reads null (Neo4j's

@@ -559,8 +559,8 @@ private[cypher] object LocalBfs {
     * is impossible; the task side resolves tokens through this
     * JVM-global map (driver == executor JVM under local[*]). On a
     * cluster master the cache is bypassed entirely (token = None) and
-    * the kernel rebuilds per call, exactly as before r19. Bounded like
-    * the edge-union cache: full clear at capacity.
+    * the kernel rebuilds per call, exactly as before r19. Bounded at
+    * `MaxEntries` plans, evicting the least recently used.
     */
   private[cypher] object CsrCache {
     private val MaxEntries = 16

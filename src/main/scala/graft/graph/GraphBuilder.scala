@@ -125,18 +125,23 @@ object GraphBuilder {
 
   /** Compute the reference's per-relationship audit numbers for one edge
     * type: raw rows, rows surviving null-drop + pair-dedup, and rows that
-    * passed FK validation (= the built edge set). Runs three counts — an
-    * explicit audit action, not part of the lazy build.
+    * passed FK validation (= the built edge set). Two concurrent actions
+    * ([[graft.util.Jobs.all]]) — one aggregate over the source table for
+    * the first two numbers, one count of the built set — an explicit
+    * audit, not part of the lazy build. `count(DISTINCT keyS, keyT)` skips
+    * rows with a null key, so it equals null-drop + pair-dedup; with
+    * unique pairs only the null-drop applies.
     */
   def edgeMetrics(tables: String => DataFrame, et: EdgeType, built: DataFrame): EdgeMetrics = {
-    val raw = tables(et.table)
-    val cleaned = raw
-      .select(col(et.keyS), col(et.keyT))
-      .na.drop("any", Seq(et.keyS, et.keyT))
+    val (s, t) = (col(et.keyS), col(et.keyT))
     val afterClean =
-      if (et.pairsUnique) cleaned.count()
-      else cleaned.dropDuplicates(Seq(et.keyS, et.keyT)).count()
-    EdgeMetrics(raw.count(), afterClean, built.count())
+      if (et.pairsUnique) count(when(s.isNotNull && t.isNotNull, lit(1)))
+      else count_distinct(s, t)
+    val stats = tables(et.table).agg(count(lit(1)), afterClean)
+    val Seq(input, clean, committed) = graft.util.Jobs.all(Seq(
+      () => { val r = stats.head(); Seq(r.getLong(0), r.getLong(1)) },
+      () => Seq(built.count()))).flatten
+    EdgeMetrics(input, clean, committed)
   }
 
   /** Build the whole declared graph from any table provider. */

@@ -202,20 +202,30 @@ final case class GraphStore(
     * elision instead of silently reverting (r12 ADVICE: `mutatedLabels`
     * was session-only — the same query returned different results across
     * a save/load).
+    *
+    * Every node, edge and membership write is submitted at once
+    * ([[graft.util.Jobs.all]]): each is a small job of a few tasks that
+    * alone leaves most cores idle. The manifest is the load signal
+    * ([[GraphBuilder.savedStoreRoot]]), so it is removed before the
+    * writes and written last, once every write has succeeded — a failed
+    * save never looks loadable.
     */
   def save(root: String): Unit = {
-    nodes.foreach { case (n, df) =>
-      df.sortWithinPartitions(schema.node(n).key)
-        .write.mode("overwrite").parquet(s"$root/nodes/$n")
-    }
-    edges.foreach { case (n, df) =>
-      val et = schema.edge(n)
-      df.sortWithinPartitions(et.keyS, et.keyT)
-        .write.mode("overwrite").parquet(s"$root/edges/$n")
-    }
-    memberships.foreach { case ((t, s), df) =>
-      df.write.mode("overwrite").parquet(s"$root/memberships/${t}__FROM__$s")
-    }
+    GraphStore.deleteMeta(root)
+    val writes: Seq[() => Unit] =
+      nodes.toSeq.map { case (n, df) => () =>
+        df.sortWithinPartitions(schema.node(n).key)
+          .write.mode("overwrite").parquet(s"$root/nodes/$n")
+      } ++
+      edges.toSeq.map { case (n, df) => () =>
+        val et = schema.edge(n)
+        df.sortWithinPartitions(et.keyS, et.keyT)
+          .write.mode("overwrite").parquet(s"$root/edges/$n")
+      } ++
+      memberships.toSeq.map { case ((t, s), df) => () =>
+        df.write.mode("overwrite").parquet(s"$root/memberships/${t}__FROM__$s")
+      }
+    graft.util.Jobs.all(writes)
     GraphStore.writeMeta(root, validatedEdges, memberships.keys.toSeq)
   }
 }
@@ -254,11 +264,19 @@ object GraphStore {
     val json =
       s"""{"validatedEdges":[${validated.toSeq.sorted.map(l => s""""$l"""").mkString(",")}],""" +
         s""""memberships":[${pairs.sorted.map { case (t, s) => s"""["$t","$s"]""" }.mkString(",")}]}"""
-    val path = new org.apache.hadoop.fs.Path(s"$root/_graft_meta.json")
-    val fs = path.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
+    val (fs, path) = metaPath(root)
     val out = fs.create(path, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def deleteMeta(root: String): Unit = {
+    val (fs, path) = metaPath(root)
+    fs.delete(path, false)
+  }
+
+  private def metaPath(root: String) = {
+    val path = new org.apache.hadoop.fs.Path(s"$root/_graft_meta.json")
+    (path.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration), path)
   }
 
   private def readMeta(spark: SparkSession,

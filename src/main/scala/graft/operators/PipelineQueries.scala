@@ -230,17 +230,15 @@ object PipelineQueries {
     val queries = emb.filter(col("vec_id") < 5)
     val k = 3
     // overlap the eager k-means fit with the exact baseline's
-    // materialization (same reasoning and same frames as q79 below)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val approxF = Future(Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-      k = k, nlist = 16, nprobe = 4))
-    // materialized ONCE (bounded 15 rows), referenced twice — see q50
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = k)
-      .select(col("query_id"), col("corpus_id"))
-      .localCheckpoint(true)
-    val approx = Await.result(approxF, Duration.Inf)
+    // materialization (same reasoning and same frames as q79 below); the
+    // exact side is materialized ONCE (bounded 15 rows), referenced twice —
+    // see q50
+    val Seq(approx, exact) = graft.util.Jobs.all(Seq(
+      () => Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
+        k = k, nlist = 16, nprobe = 4),
+      () => Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = k)
+        .select(col("query_id"), col("corpus_id"))
+        .localCheckpoint(true)))
     val hits = approx.select(col("query_id"), col("corpus_id"))
       .join(exact, Seq("query_id", "corpus_id"), "left_semi")
       .agg(count(lit(1)).as("h"))
@@ -263,28 +261,27 @@ object PipelineQueries {
     val queries = emb.filter(col("vec_id") < 50)
     val k = 5
     // The IVF side's k-means fit is EAGER (10 bounded MLlib jobs at
-    // construction time) and independent of the exact baseline — run it
-    // on a pool thread so the fit's small serial jobs back-fill executor
+    // construction time) and independent of the exact baseline — run the
+    // two concurrently so the fit's small serial jobs back-fill executor
     // slots the brute-force checkpoint's tail leaves idle (r19; guide
     // §2.6 "overlap independent jobs", the q81 bucketed-write pattern).
     // Frames are identical either way: overlap moves WHEN the fit runs,
     // not its input (same train rows, seed 42, maxIter 10).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ivfF = Future(Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-      k = k, nlist = 16, nprobe = 4))
-    // materialized ONCE (bounded: |queries| × k rows) — the exact top-k
-    // subtree is referenced FOUR times in the final plan (hits semi-join
-    // + denominator, for each of the two methods), and an un-checkpointed
-    // plan executes the full corpus×queries brute-force pass once per
-    // reference (r18 optimization round: plan 28 → 12 scans; wall time at
-    // sf0.1 within noise because the sf0.1 corpus is small and the four
-    // passes overlapped across cores — the cut is for the corpus-bound
-    // regime, where each redundant pass is a full corpus scan)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = k)
-      .select(col("query_id"), col("corpus_id"))
-      .localCheckpoint(true)
+    // The exact side is materialized ONCE (bounded: |queries| × k rows) —
+    // the exact top-k subtree is referenced FOUR times in the final plan
+    // (hits semi-join + denominator, for each of the two methods), and an
+    // un-checkpointed plan executes the full corpus×queries brute-force
+    // pass once per reference (r18 optimization round: plan 28 → 12
+    // scans; wall time at sf0.1 within noise because the sf0.1 corpus is
+    // small and the four passes overlapped across cores — the cut is for
+    // the corpus-bound regime, where each redundant pass is a full corpus
+    // scan)
+    val Seq(ivf, exact) = graft.util.Jobs.all(Seq(
+      () => Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
+        k = k, nlist = 16, nprobe = 4),
+      () => Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = k)
+        .select(col("query_id"), col("corpus_id"))
+        .localCheckpoint(true)))
     def recallOf(method: String, approx: DataFrame): DataFrame = {
       val hits = approx.select(col("query_id"), col("corpus_id"))
         .join(exact, Seq("query_id", "corpus_id"), "left_semi")
@@ -295,7 +292,7 @@ object PipelineQueries {
         round(col("hits").cast("double") / col("total"), 4).as("recall"))
     }
     recallOf("lsh", Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = k, bits = 6, tables = 12))
-      .unionByName(recallOf("ivf", Await.result(ivfF, Duration.Inf)))
+      .unionByName(recallOf("ivf", ivf))
       .orderBy("method")
   }
 

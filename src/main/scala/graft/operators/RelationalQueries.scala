@@ -343,27 +343,16 @@ object RelationalQueries {
       // two driver threads so the second job's tasks back-fill executor
       // slots freed by the first's straggling bucket tasks (optimization
       // guide §2.6 "overlap independent jobs"; bucket count 8 < cores, so
-      // a serial write leaves most slots idle). Spark's scheduler is
-      // thread-safe; failures propagate through Await.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq(
-        Future(graft.sources.Bucketing.saveBucketed(
+      // a serial write leaves most slots idle). Jobs.all awaits BOTH before
+      // any failure propagates, so the finally block never drops tables or
+      // deletes the shared temp directory under a write still in flight.
+      graft.util.Jobs.all(Seq(
+        () => graft.sources.Bucketing.saveBucketed(
           T(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus")),
-          tOrders, s"$base/orders", 8, Seq("o_orderkey"))),
-        Future(graft.sources.Bucketing.saveBucketed(
+          tOrders, s"$base/orders", 8, Seq("o_orderkey")),
+        () => graft.sources.Bucketing.saveBucketed(
           T(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
           tLineitem, s"$base/lineitem", 8, Seq("l_orderkey"))))
-      // Await BOTH to completion before any failure propagates (ADVICE
-      // r18: rethrowing on the first failed future let the finally block
-      // drop tables and recursively delete the shared temp directory
-      // while the sibling write was still in flight — racy secondary
-      // failures plus a leaked background job). Try each, then surface
-      // the first failure only once both jobs have finished.
-      import scala.util.Try
-      val outcomes = writes.map(w => Try(Await.result(w, Duration.Inf)))
-      outcomes.foreach(_.get)
       val grouped = s.table(tOrders)
         .join(s.table(tLineitem), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderstatus")

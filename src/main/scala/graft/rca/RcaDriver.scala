@@ -66,13 +66,10 @@ object Rca {
       hypotheses: Map[String, Planner],
       summarize: Summarizer = defaultSummary,
       maxRounds: Int = MaxRounds): Map[String, (Trace, String)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futures = hypotheses.map { case (name, planner) =>
-      name -> Future(run(engine, s"$question [$name]", planner, summarize, maxRounds))
-    }
-    futures.map { case (name, f) => name -> Await.result(f, Duration.Inf) }
+    val branches = hypotheses.toSeq
+    branches.map(_._1).zip(graft.util.Jobs.all(branches.map { case (name, planner) =>
+      () => run(engine, s"$question [$name]", planner, summarize, maxRounds)
+    })).toMap
   }
 
   /** Default summarizer: a readable trace report (the reference's summary

@@ -42,6 +42,12 @@ class GraftSpec extends SparkSpec {
     g.save(dir)
     val reopened = Graft.load(spark, dir, GraphSchema.testdata)
     assert(reopened.query(q).collect().toSeq == direct)
+    // every label's writes ran concurrently; each reloads row for row
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val (saved, loaded) = (g.store.get, reopened.store.get)
+    assert(loaded.nodes.keySet == saved.nodes.keySet && loaded.edges.keySet == saved.edges.keySet)
+    saved.nodes.foreach { case (l, df) => assert(rowsOf(loaded.nodes(l)) == rowsOf(df), l) }
+    saved.edges.foreach { case (l, df) => assert(rowsOf(loaded.edges(l)) == rowsOf(df), l) }
 
     // open(): build-once/query-many — the per-JVM cache hands every caller
     // the SAME persisted store, and answers still match

@@ -613,6 +613,22 @@ class CypherSpec extends SparkSpec {
     assert(r.getString(6) == "NATION")
   }
 
+  test("list index out of range is null under both ANSI settings") {
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      // the q77 shape: index into a comprehension that kept no element
+      val r = engine.run(
+        """MATCH (n:Nation) WHERE n.n_nationkey = 2
+           WITH n, [w IN split(n.n_name, '_') WHERE size(w) > 40 | toUpper(w)] AS words
+           RETURN [1, 2][5] AS past_end, [1, 2][-5] AS before_start,
+                  words[0] AS first_long, [1, 2][-2] AS first, [1, 2][1] AS second""")
+        .collect().head
+      assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2), s"ansi=$ansi")
+      assert(r.getLong(3) == 1L && r.getLong(4) == 2L, s"ansi=$ansi")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
   test("list predicates all/any/none/single") {
     val r = engine.run(
       """MATCH (n:Nation) WHERE n.n_nationkey = 2

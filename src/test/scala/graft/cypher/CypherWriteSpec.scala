@@ -774,6 +774,26 @@ class CypherWriteSpec extends SparkSpec {
     assert(probe(re) == Seq(1L))
   }
 
+  test("a save whose label frame fails throws and leaves no manifest") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import graft.graph.{GraphSchema, NodeType}
+    val boom = udf((k: Long) => if (k == 3L) throw new IllegalStateException("boom") else k)
+    val good = spark.range(5).select(col("id").as("k"))
+    def store(frames: (String, org.apache.spark.sql.DataFrame)*) =
+      GraphStore(GraphSchema(frames.map(f => NodeType(f._1, "k")), Nil), frames.toMap, Map.empty)
+    val parent = java.nio.file.Files.createTempDirectory("graft_failed_save").toString
+    val dir = s"$parent/sf"
+    store("Good" -> good).save(dir)
+    assert(GraphBuilder.savedStoreRoot(dir, Some(parent)).contains(dir))
+    // overwrite the loadable store with one whose Bad label throws mid-write
+    val e = intercept[Exception](store("Good" -> good,
+      "Bad" -> spark.range(5).select(boom(col("id")).as("k"))).save(dir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")))
+    assert(!new java.io.File(s"$dir/_graft_meta.json").exists)
+    assert(GraphBuilder.savedStoreRoot(dir, Some(parent)).isEmpty)
+  }
+
   test("chained SET/REMOVE resolve provenance to the TRUE source store") {
     var st = CypherEngine(GraphStore.empty).execute(
       """UNWIND $rows AS row MERGE (n:Person {pid: row.pid})

@@ -129,16 +129,33 @@ class GraphBuilderSpec extends SparkSpec {
     val edges = Seq(
       (Some(1L), Some(10L)), (Some(1L), Some(10L)), // dup pair
       (Some(2L), None), // null dst
+      (None, Some(10L)), // null src
+      (None, None),
       (Some(9L), Some(10L)), // dangling src
       (Some(2L), Some(11L))).toDF("s", "d")
     val src = Seq(1L, 2L).toDF("sk")
     val dst = Seq(10L, 11L).toDF("dk")
     val et = EdgeType("E", "S", "D", "s", "d", Nil, "e")
     val t = tables(Map("e" -> edges))
+    // the audit as three separate counts: raw rows, null-drop (+ pair
+    // dedup unless the catalog proves pairs unique), built rows
+    def threeCounts(et: EdgeType, built: DataFrame) = {
+      val cleaned = edges.select(col(et.keyS), col(et.keyT)).na.drop("any")
+      GraphBuilder.EdgeMetrics(edges.count(),
+        if (et.pairsUnique) cleaned.count() else cleaned.dropDuplicates().count(),
+        built.count())
+    }
     val built = GraphBuilder.buildEdges(t, et, src, dst, "sk", "dk")
     val m = GraphBuilder.edgeMetrics(t, et, built)
-    assert(m == GraphBuilder.EdgeMetrics(input = 5, afterClean = 3, committed = 2))
+    assert(m == GraphBuilder.EdgeMetrics(input = 7, afterClean = 3, committed = 2))
+    assert(m == threeCounts(et, built))
     assert(m.dropped == 1) // the dangling (9,10) edge
+    // pairsUnique: no dedup, so the duplicated pair counts (and commits) twice
+    val uet = et.copy(pairsUnique = true)
+    val ubuilt = GraphBuilder.buildEdges(t, uet, src, dst, "sk", "dk")
+    val um = GraphBuilder.edgeMetrics(t, uet, ubuilt)
+    assert(um == GraphBuilder.EdgeMetrics(input = 7, afterClean = 4, committed = 3))
+    assert(um == threeCounts(uet, ubuilt))
   }
 
   test("graph store describe counts nodes and edges per label") {

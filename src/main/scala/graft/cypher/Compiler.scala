@@ -104,7 +104,6 @@ final case class CypherEngine(store: GraphStore) {
     // pre-mutation stores stay readable) — GC + ContextCleaner reclaim
     // them once unreferenced.
     val st0 = st
-    val cutAt = planCutThreshold(df.sparkSession)
     // Cut policy (r18 optimization round, A/B in OPTIMIZATION_r18.md):
     // a mutated frame whose plan outgrew the tree-size gate is cut HERE
     // (single gigantic statement — the fuzzer-found rendering wedge);
@@ -123,7 +122,7 @@ final case class CypherEngine(store: GraphStore) {
     // copies). Chained plans stay bounded at ~1 statement's growth over
     // checkpointed blocks, so the rendering wedge cannot return.
     def cut(f: DataFrame): DataFrame =
-      if (planTreeSize(f.queryExecution.logical, cutAt) > cutAt)
+      if (planTreeSize(f.queryExecution.logical, PlanCutThreshold) > PlanCutThreshold)
         f.localCheckpoint(true)
       else {
         // marked lazy, not yet materialized (memo value null until the
@@ -196,20 +195,6 @@ object CypherEngine {
     * (the reference's write shape) never pays an eager materialization.
     */
   val PlanCutThreshold = 64
-
-  /** Runtime override for [[PlanCutThreshold]] (r18 optimization round):
-    * 0 restores the r17 eager per-statement cut (every mutated frame
-    * checkpointed — fastest for short interactive chains over small
-    * stores, block-manager-heaviest for long sessions over big ones), a
-    * large value defers cuts entirely. Exists so the trade can be A/B
-    * measured at any scale without a rebuild; the default stays the
-    * tree-size gate above.
-    */
-  val PlanCutThresholdKey = "graft.cypher.planCutThreshold"
-  private[cypher] def planCutThreshold(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption(PlanCutThresholdKey).map(_.toInt)
-      .getOrElse(PlanCutThreshold)
 
   /** Weak identity memo of store frames that left [[CypherEngine.execute]]
     * as LAZY mutations (under the tree-size gate): frame → its
@@ -442,10 +427,10 @@ object CypherEngine {
     * local, identical rows). Memory: 2M tagged edges ≈ low hundreds of MB
     * in one task, far under executor task memory; a 100 TB store fails
     * this cap on the store's own edge counts and keeps the distributed,
-    * level-synchronous shape. Tuned via [[LocalBfsEdgeCapKey]] (ADVICE
-    * r15: its own key, so raising it no longer rescales the walk
-    * enumeration gate); [[LocalPathEdgeCapKey]] = 0 still forces
-    * distributed everywhere — the spec A/B hook.
+    * level-synchronous shape. [[LocalPathEdgeCapKey]] = 0 forces
+    * distributed everywhere (the spec A/B hook); any other value of it
+    * leaves this cap alone (ADVICE r15: tuning the walk enumeration gate
+    * must not rescale this one, whose safe default differs by 30×).
     */
   private[cypher] val LocalBfsEdgeCap: Long = 2L * 1000 * 1000
 
@@ -454,29 +439,12 @@ object CypherEngine {
     */
   private[cypher] val LocalPathWorkCap: Long = 10L * 1000 * 1000
 
-  /** Dedicated conf key for the BFS single-task gate (ADVICE r15:
-    * [[LocalPathEdgeCapKey]] used to override BOTH this gate, default 2M,
-    * and the var-length walk ENUMERATION gate, default 65536 — so tuning
-    * one silently rescaled the other, whose safe defaults differ by 30×).
-    * Resolution order: this key if set; else [[LocalPathEdgeCapKey]] ONLY
-    * when it is 0 (the spec A/B hook "0 forces distributed everywhere"
-    * keeps working); else [[LocalBfsEdgeCap]].
+  /** The shortestPath BFS's single-task edge cap: 0 when
+    * [[LocalPathEdgeCapKey]] is 0, else [[LocalBfsEdgeCap]].
     */
-  val LocalBfsEdgeCapKey = "graft.shortestPath.localBfsEdgeCap"
   private[cypher] def bfsEdgeCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(LocalBfsEdgeCapKey).map(_.toLong)
-      .orElse(spark.conf.getOption(LocalPathEdgeCapKey).map(_.toLong).filter(_ == 0L))
-      .getOrElse(LocalBfsEdgeCap)
-
-  /** Spark-conf key for the distributed BFS's reached-set pruning
-    * position (r12): "true" (default) anti-joins reached pairs BEFORE
-    * each level's per-pair dedup/agg, "false" restores the pre-r12
-    * post-agg position. Both are row-identical (spec-pinned); the early
-    * position keeps back-edge rows out of the wide min-struct shuffle
-    * (q105 −13% / q85 −10% warm at sf0.1; within box noise at sf1 —
-    * BASELINE.md r12 A/B).
-    */
-  val BfsAntiEarlyKey = "graft.cypher.bfsAntiEarly"
+    if (spark.conf.getOption(LocalPathEdgeCapKey).exists(_.toLong == 0L)) 0L
+    else LocalBfsEdgeCap
 
   /** Frontier/reached-set frames at or under this many rows get an
     * EXPLICIT `broadcast()` hint in the distributed BFS's per-level

@@ -103,9 +103,14 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
           // Cypher is 0-based from the front, negative from the back, and
           // out of range is null; try_element_at is 1-based from the front,
           // negative from the back, and null out of range whatever
-          // spark.sql.ansi.enabled says (element_at throws under ANSI)
-          val i = c(idx)
-          try_element_at(c(coll), when(i >= 0, i + 1).otherwise(i).cast("int"))
+          // spark.sql.ansi.enabled says (element_at throws under ANSI).
+          // The long index is range-checked against the size BEFORE the
+          // +1 and the int cast: either would overflow (ANSI) or wrap onto
+          // a valid position (non-ANSI) for an index past the int range.
+          val (l, i) = (c(coll), c(idx))
+          val n = size(l)
+          try_element_at(l, when(i >= 0 && i < n, i + 1)
+            .when(i < 0 && i >= -n, i).cast("int"))
         case MapProj(v, props, star, extras) =>
           // struct of selected properties + computed entries; a selected
           // property the label doesn't store reads null (Neo4j's

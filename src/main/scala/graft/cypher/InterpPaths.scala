@@ -677,12 +677,6 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       // default, every k-th cut reliable when graft.checkpoint.dir is set
       // (fault tolerance on preemptible clusters — see GraphAnalytics)
       val ck = new graft.graph.GraphAnalytics.IterCheckpointer(e0.sparkSession)
-      // reached-set pruning position (r12): true = anti-join inside
-      // oneHop, before the per-pair dedup/agg (see the comment there);
-      // false = the pre-r12 post-agg position. A/B'd in BASELINE.md;
-      // CypherSpec pins both modes row-identical.
-      val antiEarly = e0.sparkSession.conf
-        .get(BfsAntiEarlyKey, "true").toBoolean
       // one hop forward. Frontier discipline per mode:
       //  - shortestPath + path read: keep ONE (lexicographically minimal)
       //    path per (src, dst) — frontier bounded by the pair closure;
@@ -709,8 +703,8 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
         // broadcast anti filters map-side before the only shuffle.
         // Pair-equivalent to anti-joining after the agg: the agg never
         // creates pairs, only collapses rows within one, so the removed
-        // rows all belong to removed pairs. Conf-gated for A/B; the
-        // caller skips its own post-agg anti when this one ran.
+        // rows all belong to removed pairs (q105 −13% / q85 −10% warm at
+        // sf0.1 against the post-agg position — BASELINE.md r12 A/B).
         val anti: DataFrame => DataFrame = reached match {
           case Some(r) => df => df.join(r, Seq("__ds", "__dd"), "left_anti")
           case None => identity
@@ -790,9 +784,7 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
           // stop as soon as a frontier comes back empty.
           val from = gated(frontier, frontierRows)
           val reached = gated(dist.select("__ds", "__dd"), distRows)
-          val fresh = ck.cut(
-            if (antiEarly) oneHop(from, Some(reached))
-            else oneHop(from).join(reached, Seq("__ds", "__dd"), "left_anti"))
+          val fresh = ck.cut(oneHop(from, Some(reached)))
           val freshRows = fresh.count()
           if (freshRows == 0) exhausted = true
           else {

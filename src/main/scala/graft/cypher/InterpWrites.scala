@@ -507,8 +507,8 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
               // eagerly checkpoint the provenance frame: it is re-read by
               // EVERY later membership lift / labels() / MATCH on the
               // label, and left lazy it re-pays its source scan + distinct
-              // per query (ProfileMembership measured 1.7 s/query at
-              // sf10); checkpointed it is a bounded broadcastable key set.
+              // per query (measured 1.7 s/query at sf10); checkpointed it
+              // is a bounded broadcastable key set.
               // localCheckpoint(true), not persist (r14 ADVICE): the new
               // frame derives from the superseded one, so it must be
               // MATERIALIZED before that parent's blocks release, and the

@@ -1,7 +1,7 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,26 +15,25 @@ import org.apache.spark.storage.StorageLevel
   * vertex ids (e.g. part ids offset by 10^9) before handing them in. Results
   * come back as DataFrames so the rest of the engine stays declarative.
   *
-  * Scale note: every entry point takes `edgePartitions` — when set, edges
-  * are re-partitioned with `EdgePartition2D` (√n×√n vertex-block grid, the
-  * strategy that bounds replication at 2·√numParts per vertex) before
-  * iterating; the right setting on a real cluster is ≈ the executor-core
-  * count. Left `None` locally: measured twice at local[8]/local[32], the
-  * re-partition pass cost more than it saved at sf0.1. At 100 TB the
-  * bipartite projections built from fact tables should also be
-  * pre-deduplicated (the builders do) so edge multiplicity never inflates
-  * the RDD.
+  * Scale note: the GraphX paths (PageRank, triangles, degrees) build the
+  * graph with GraphX's default edge partitioning. An `EdgePartition2D`
+  * re-partition pass (√n×√n vertex-block grid) was measured twice at
+  * local[8]/local[32] and cost more than it saved at sf0.1, so no entry
+  * point offers one. At 100 TB the bipartite projections built from fact
+  * tables should also be pre-deduplicated (the builders do) so edge
+  * multiplicity never inflates the RDD.
   */
 object GraphAnalytics {
 
   /** Edge-row threshold under which components/BFS run inside a single task
-    * (union-find / in-memory adjacency) instead of Pregel. 5M (Long, Long)
-    * pairs ≈ 80 MB — comfortably one task. Same philosophy as Spark's
-    * broadcast-join threshold: pick the physical strategy from the actual
-    * input size. A tiny derived graph should not pay ~15 Pregel rounds of
-    * job-scheduling overhead (measured ~0.25 s/round at local[32], i.e.
-    * ~4 s floor regardless of data); a 100 TB derived graph exceeds the
-    * threshold and takes the distributed path automatically. Callers that
+    * (union-find / in-memory adjacency) instead of the distributed loops.
+    * 5M (Long, Long) pairs ≈ 80 MB — comfortably one task. Same philosophy
+    * as Spark's broadcast-join threshold: pick the physical strategy from
+    * the actual input size. A tiny derived graph should not pay ~15
+    * distributed rounds of job-scheduling overhead (measured ~0.25
+    * s/round at local[32], i.e. ~4 s floor regardless of data); a 100 TB
+    * derived graph exceeds the threshold and takes the distributed path
+    * automatically. Callers that
     * persist their edge DataFrame (e.g. the Q33/Q34 bipartite cache) pay
     * the sizing count() against the cache.
     */
@@ -42,8 +41,8 @@ object GraphAnalytics {
 
   /** Conf key: when set to a (fault-tolerant, e.g. HDFS) directory, every
     * [[CheckpointIntervalKey]]-th lineage cut in an iterative loop
-    * (dfBfs / dfComponents / dfPageRank here, bfsFrames in the Cypher
-    * compiler) uses a RELIABLE `checkpoint()` into it instead of
+    * (dfBfs / contractComponents / dfComponents here, bfsFrames in the
+    * Cypher compiler) uses a RELIABLE `checkpoint()` into it instead of
     * `localCheckpoint`. Local checkpoints live in executor block storage:
     * losing ONE executor kills the whole iterative job, and the pinned
     * blocks block dynamic allocation — on a preemptible 100 TB cluster
@@ -110,34 +109,18 @@ object GraphAnalytics {
     }
   }
 
-  /** Conf key: delta-iteration rounds [[dfComponents]] runs before
-    * escalating to pointer-doubling ([[jumpComponents]]); default
-    * [[CcEscalateRoundsDefault]]. The delta iteration is O(component
-    * diameter) rounds with a SHRINKING frontier — cheapest on the
-    * bounded-diameter graphs FK schemas produce (3-5 rounds). A
+  /** Delta-iteration rounds [[dfComponents]] runs before escalating to
+    * pointer-doubling ([[jumpComponents]]). The delta iteration is
+    * O(component diameter) rounds with a SHRINKING frontier — cheapest on
+    * the bounded-diameter graphs FK schemas produce (3-5 rounds). A
     * chain-shaped graph (event sequences, linked logs) would run
     * thousands of rounds; once the round count passes this bound the
     * structure is provably deep, and pointer-doubling finishes in
-    * O(log n) further rounds regardless of diameter. 0 = always
-    * pointer-doubling (the tests' and A/B's lever).
+    * O(log n) further rounds regardless of diameter.
     */
-  val CcEscalateRoundsKey = "graft.cc.escalateRounds"
   val CcEscalateRoundsDefault = 10
 
-  /** Conf key: when `true`, the iterative loops (delta CC, pointer-jump
-    * CC) log one stderr line per round — round index, changed/frontier
-    * count where the loop already pays that action, and wall seconds.
-    * Observability for long iterative jobs: at 100 TB a CC can run for
-    * hours and an operator needs to see whether rounds are converging or
-    * the per-round cost is drifting (checkpoint-block pressure, skew)
-    * WITHOUT a UI. Off by default — the log line itself is free, but the
-    * knob keeps bench output byte-stable.
-    */
-  val IterVerboseKey = "graft.iter.verbose"
-  private def iterVerbose(spark: SparkSession): Boolean =
-    spark.conf.getOption(IterVerboseKey).contains("true")
-
-  /** Observability for tests/tools: (delta rounds, pointer-doubling
+  /** Observability for tests: (delta rounds, pointer-doubling
     * rounds) of the last [[dfComponents]] invocation in this JVM.
     */
   private[graft] val LastCcRounds =
@@ -152,7 +135,8 @@ object GraphAnalytics {
   private val StatsBytesPerRow = 64L
 
   /** Strategy sizing without an unconditional `count()`: at 100 TB a full
-    * scan per analytics call just to be told "use Pregel" is a real cost.
+    * scan per analytics call just to be told "go distributed" is a real
+    * cost.
     *
     * - Cached frames (the recommended calling convention — q33/q34 persist
     *   their bipartite projection) always get the exact count: it runs
@@ -172,39 +156,25 @@ object GraphAnalytics {
     edges.count() <= threshold
   }
 
-  private[graph] def toGraph(edges: DataFrame, undirected: Boolean,
-      edgePartitions: Option[Int] = None): Graph[Int, Int] = {
+  private[graph] def toGraph(edges: DataFrame, undirected: Boolean): Graph[Int, Int] = {
     val edgeRDD = edges.select("src", "dst").rdd.flatMap { r =>
       val e = Edge(r.getLong(0), r.getLong(1), 1)
       if (undirected) Iterator(e, Edge(r.getLong(1), r.getLong(0), 1)) else Iterator(e)
     }
-    val g = Graph.fromEdges(edgeRDD, 0, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    edgePartitions.fold(g)(n => g.partitionBy(PartitionStrategy.EdgePartition2D, n))
+    Graph.fromEdges(edgeRDD, 0, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Connected components. Output: (node: Long, component: Long) where
     * component = min vertex id in the component — deterministic. Adaptive
     * physical strategy: below `localThreshold` edge rows the whole graph
-    * fits one task and runs union-find there; above, Pregel min-label
-    * propagation (both produce identical min-id labels).
+    * fits one task and runs union-find there; above, contraction
+    * ([[contractComponents]]; both produce identical min-id labels).
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-      edgePartitions: Option[Int] = None,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     if (underThreshold(edges, localThreshold)) return localComponents(spark, edges)
-    spark.conf.getOption(CcStrategyKey).getOrElse("contract") match {
-      case "delta" => dfComponents(spark, edges)
-      case _ => contractComponents(spark, edges, localThreshold)
-    }
+    contractComponents(spark, edges, localThreshold)
   }
-
-  /** Conf key: distributed CC strategy. `contract` (default) physically
-    * shrinks the graph each round and finishes locally;
-    * `delta` is the r9-r15 min-label propagation (escalating to
-    * pointer-doubling), kept for the A/B and as the escalation target.
-    * The local path under `localThreshold` is taken regardless.
-    */
-  val CcStrategyKey = "graft.cc.strategy"
 
   /** Contraction cap before handing the (already much smaller) graph to
     * [[dfComponents]]: hook+shortcut at least halves a path per level and
@@ -250,8 +220,6 @@ object GraphAnalytics {
       localThreshold: Long): DataFrame = {
     import spark.implicits._
     val ck = new IterCheckpointer(spark)
-    val verbose = iterVerbose(spark)
-    val t00 = System.nanoTime()
     // canonical undirected edge set: (min, max), no self-loops, deduped
     var g = ck.cut(edges
       .select(least(col("src"), col("dst")).as("src"),
@@ -263,7 +231,6 @@ object GraphAnalytics {
     val floor = math.max(localThreshold, 1L)
     while (gEdges > floor && level < MaxContractionLevels) {
       level += 1
-      val t0 = System.nanoTime()
       val und = g.unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
       // hook: absorbed nodes only — (node, parent = min neighbor < node)
       var mCut = ck.cut(und.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
@@ -274,9 +241,7 @@ object GraphAnalytics {
       // compression per pass — so the stored map points straight at
       // level survivors and back-resolution is one join per level
       var jumping = true
-      var jumps = 0
       while (jumping) {
-        jumps += 1
         val j = mCut.select(col("node").as("__jn"), col("parent").as("__jp"))
         val m2 = ck.cut(mCut.join(j, col("parent") === col("__jn"), "left")
           .select(col("node"), coalesce(col("__jp"), col("parent")).as("parent"),
@@ -299,11 +264,7 @@ object GraphAnalytics {
       ck.release(g)
       maps ::= m // head = deepest level; mCut stays alive behind the projection
       g = g2
-      val prev = gEdges
       gEdges = g.count()
-      if (verbose) System.err.println(
-        f"[graft.cc] contract level $level%2d edges $prev%9d -> $gEdges%9d " +
-        f"(jump passes $jumps) ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     // finish: union-find in one task under the threshold; if contraction
     // ever stalls against MaxContractionLevels the graph is still far
@@ -339,9 +300,6 @@ object GraphAnalytics {
       .select(col("node"), col("node").as("component"))
     val out = comp.unionByName(selfOnly)
     LastCcRounds.set((level + finishDelta, finishJump))
-    if (verbose) System.err.println(
-      f"[graft.cc] contract done: $level levels, " +
-      f"${(System.nanoTime() - t00) / 1e9}%6.2f s")
     out
   }
 
@@ -352,14 +310,14 @@ object GraphAnalytics {
     * plan starts from materialized labels, and execution stays in
     * Tungsten memory (no VertexPartition caching / RDD GC churn — the
     * same stability argument that made the DataFrame BFS the distributed
-    * default; tools/ProfileBfs measured Pregel's 6-10x first-run spread
-    * in a loaded JVM). Labels converge to the min vertex id per
-    * component, matching [[localComponents]] and GraphX exactly.
+    * default; Pregel measured a 6-10x first-run spread in a loaded
+    * JVM). Labels converge to the min vertex id per component, matching
+    * [[localComponents]] and GraphX exactly. `escalateAfter` = 0 runs
+    * pointer-doubling from round 1 (the specs' lever).
     */
-  private[graph] def dfComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
+  private[graph] def dfComponents(spark: SparkSession, edges: DataFrame,
+      escalateAfter: Int = CcEscalateRoundsDefault): DataFrame = {
     val ck = new IterCheckpointer(spark)
-    val escalateAfter = spark.conf.getOption(CcEscalateRoundsKey)
-      .map(_.toInt).getOrElse(CcEscalateRoundsDefault)
     val e = edges.select(col("src"), col("dst"))
     val adj = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     var labels = ck.cut(adj.select(col("src").as("node")).distinct()
@@ -378,19 +336,12 @@ object GraphAnalytics {
     var prevCut = labels
     var active = labels
     var rounds = 0
-    val verbose = iterVerbose(spark)
-    while ({ val t0 = System.nanoTime()
-             val empty = active.isEmpty
-             if (verbose) System.err.println(
-               f"[graft.cc] delta round $rounds%3d emptiness probe " +
-               f"${(System.nanoTime() - t0) / 1e9}%7.2f s (empty=$empty)")
-             !empty }) {
+    while (!active.isEmpty) {
       if (rounds >= escalateAfter) {
         LastCcRounds.set((rounds, 0))
-        return jumpComponents(adj, labels, ck, verbose)
+        return jumpComponents(adj, labels, ck)
       }
       rounds += 1
-      val t0 = System.nanoTime()
       val cand = adj.join(active, col("src") === col("node"))
         .groupBy(col("dst").as("__n")).agg(min(col("component")).as("__cand"))
       val next = ck.cut(labels.join(cand, col("node") === col("__n"), "left")
@@ -402,9 +353,6 @@ object GraphAnalytics {
       // `next` is materialized; nothing references the previous round's
       // cut any more — drop its blocks so round cost stays flat
       ck.release(prevCut); prevCut = next
-      if (verbose) System.err.println(
-        f"[graft.cc] delta round $rounds%3d propagate+cut   " +
-        f"${(System.nanoTime() - t0) / 1e9}%7.2f s")
     }
     LastCcRounds.set((rounds, 0))
     labels
@@ -426,14 +374,13 @@ object GraphAnalytics {
     * GraphX.
     */
   private[graph] def jumpComponents(adj: DataFrame, labels0: DataFrame,
-      ck: IterCheckpointer, verbose: Boolean = false): DataFrame = {
+      ck: IterCheckpointer): DataFrame = {
     var labels = labels0
     var prevCut = labels0
     var rounds = 0
     var changed = 1L
     while (changed > 0) {
       rounds += 1
-      val t0 = System.nanoTime()
       val nbr = adj.join(labels, col("src") === col("node"))
         .groupBy(col("dst").as("__n")).agg(min(col("component")).as("__c"))
       val l1 = ck.cut(labels.join(nbr, col("node") === col("__n"), "left")
@@ -441,7 +388,6 @@ object GraphAnalytics {
           least(col("component"), coalesce(col("__c"), col("component")))
             .as("component")))
       ck.release(prevCut) // l1 is materialized; the previous labels are dead
-      val t1 = System.nanoTime()
       val jump = l1.select(col("node").as("__jn"), col("component").as("__jc"))
       val l2 = ck.cut(l1.join(jump, col("component") === col("__jn"), "left")
         .select(col("node"), col("__old"),
@@ -449,29 +395,11 @@ object GraphAnalytics {
             .as("component")))
       ck.release(l1) // l2 is materialized; the half-round frame is dead
       prevCut = l2
-      val t2 = System.nanoTime()
       changed = l2.filter(col("component") < col("__old")).count()
       labels = l2.drop("__old")
-      if (verbose) System.err.println(
-        f"[graft.cc] jump round $rounds%3d changed=$changed%9d  " +
-        f"prop ${(t1 - t0) / 1e9}%6.2f s  jump ${(t2 - t1) / 1e9}%6.2f s  " +
-        f"count ${(System.nanoTime() - t2) / 1e9}%6.2f s")
     }
     LastCcRounds.set((LastCcRounds.get()._1, rounds))
     labels
-  }
-
-  /** The GraphX CC the DataFrame path replaced as the distributed default
-    * — kept for the strategy A/B and as a reference implementation.
-    */
-  def pregelComponents(spark: SparkSession, edges: DataFrame,
-      edgePartitions: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    toGraph(edges, undirected = true, edgePartitions)
-      .connectedComponents()
-      .vertices
-      .map { case (id, comp) => (id, comp) }
-      .toDF("node", "component")
   }
 
   /** Single-task union-find CC (path compression + union by size), labeling
@@ -508,15 +436,13 @@ object GraphAnalytics {
     * (node: Long, dist: Int) for reached nodes only. Adaptive like
     * [[connectedComponents]]: single-task adjacency BFS under the local
     * threshold, level-synchronous DataFrame BFS ([[dfBfs]]) above it.
-    * The Pregel variant remains available ([[pregelBfs]]) for the A/B
-    * (tools/ProfileBfs) and as a fallback, but the DataFrame path is the
-    * distributed default: it stays in Tungsten memory end-to-end (no
-    * VertexPartition caching, no RDD GC churn — the source of q34's
-    * 10-75 s first-run spread at sf1), and per-level scans of the pruned
-    * edge frame are the normal distributed BFS shape at cluster scale.
+    * The DataFrame path replaced GraphX Pregel as the distributed
+    * strategy: it stays in Tungsten memory end-to-end (no VertexPartition
+    * caching, no RDD GC churn — the source of Pregel's 10-75 s q34
+    * first-run spread at sf1), and per-level scans of the pruned edge
+    * frame are the normal distributed BFS shape at cluster scale.
     */
   def bfs(spark: SparkSession, edges: DataFrame, source: Long, maxDepth: Int,
-      edgePartitions: Option[Int] = None,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     if (underThreshold(edges, localThreshold))
       // eager, like every dfBfs level: the local kernel's plan references
@@ -554,7 +480,7 @@ object GraphAnalytics {
       return seed.join(adj, col("node") === col("src"), "left_semi")
         .withColumn("dist", lit(0))
     // level 1 straight off the edge frame; source emitted at dist 0 iff it
-    // appears in some edge (matching Pregel/localBfs, which only
+    // appears in some edge (matching GraphX/localBfs, which only
     // materialize vertices present in the edge set)
     var frontier = ck.cut(adj.filter(col("src") === source)
       .select(col("dst").as("node")).distinct())
@@ -583,31 +509,9 @@ object GraphAnalytics {
       .select(col("node"), col("dist").cast(org.apache.spark.sql.types.IntegerType))
   }
 
-  /** The GraphX Pregel BFS the DataFrame path replaced as the distributed
-    * default — kept for the strategy A/B (tools/ProfileBfs; BfsSpec pins
-    * the two agree) and as a reference implementation.
-    */
-  def pregelBfs(spark: SparkSession, edges: DataFrame, source: Long,
-      maxDepth: Int, edgePartitions: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val g = toGraph(edges, undirected = true, edgePartitions)
-      .mapVertices((id, _) => if (id == source) 0 else Int.MaxValue)
-    val res = g.pregel(Int.MaxValue, maxIterations = maxDepth)(
-      (_, d, nd) => math.min(d, nd),
-      t =>
-        if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-          Iterator((t.dstId, t.srcAttr + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices
-      .filter { case (_, d) => d <= maxDepth }
-      .map { case (id, d) => (id, d) }
-      .toDF("node", "dist")
-  }
-
   /** Single-task level-synchronous BFS over an in-memory adjacency map.
     * Undirected; emits only nodes reached within `maxDepth` (the source is
-    * emitted at dist 0 iff it appears in some edge, matching Pregel which
+    * emitted at dist 0 iff it appears in some edge, matching GraphX which
     * only materializes vertices present in the edge set).
     */
   private def localBfs(spark: SparkSession, edges: DataFrame, source: Long,
@@ -646,10 +550,9 @@ object GraphAnalytics {
   /** PageRank (bench-only — float-iterative, not oracle-hashable). Adaptive:
     * single-task power iteration below the local threshold (same update rule
     * as GraphX `staticPageRank`: ranks start at 1.0, each round every vertex
-    * becomes 0.15 + 0.85 · Σ inbound rank/outDegree), Pregel above it.
+    * becomes 0.15 + 0.85 · Σ inbound rank/outDegree), GraphX above it.
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int = 10,
-      edgePartitions: Option[Int] = None,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     import spark.implicits._
     if (underThreshold(edges, localThreshold))
@@ -658,61 +561,17 @@ object GraphAnalytics {
     // DataFrame iterations (round 8): it is a dense every-vertex-every-
     // round algorithm run for a fixed 10+ iterations, so GraphX's
     // one-time partitioned graph build amortizes and its per-round cost
-    // beats a per-round DataFrame join — measured 2x at sf1
-    // (tools/ProfileBfs: df 15.8-17.8 s vs GraphX 6.9-8.8 s for 10
-    // iterations on the 6M-edge graph). The frontier algorithms moved
-    // because their per-round work SHRINKS (sparse frontiers, delta
-    // iteration); PageRank's never does. [[dfPageRank]] remains for the
-    // A/B, pinned equal within float tolerance by the spec.
-    toGraph(edges, undirected = false, edgePartitions)
+    // beats a per-round DataFrame join — measured 2x at sf1 (DataFrame
+    // power iteration 15.8-17.8 s vs GraphX 6.9-8.8 s for 10 iterations
+    // on the 6M-edge graph). The frontier algorithms moved because their
+    // per-round work SHRINKS (sparse frontiers, delta iteration);
+    // PageRank's never does.
+    toGraph(edges, undirected = false)
       .staticPageRank(iters)
       .vertices
       .map { case (id, pr) => (id, pr) }
       .toDF("node", "rank")
   }
-
-  /** Static power iteration as DataFrame joins — the A/B counterpart that
-    * measured SLOWER than GraphX for the dense fixed-iteration workload
-    * (see [[pageRank]]'s strategy note): per round, ranks join the
-    * directed edge frame, contributions hash-aggregate per destination,
-    * and the new ranks are localCheckpointed. Same update rule and final
-    * mass normalization as GraphX `staticPageRank` (ranks start at 1.0,
-    * r' = 0.15 + 0.85·Σ inbound r/outDeg, final mass scaled to the vertex
-    * count per SPARK-18847), which [[localPageRank]] mirrors — the spec
-    * pins all three within float tolerance.
-    */
-  def dfPageRank(spark: SparkSession, edges: DataFrame,
-      iters: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val vertices = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    // (src, dst, __deg) — the loop's constant; persist so 10 rounds don't
-    // re-derive the join (frame width: 2 keys + 1 long)
-    val contribEdges = e.join(outDeg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ck = new IterCheckpointer(spark)
-    var ranks = ck.cut(vertices.withColumn("rank", lit(1.0)))
-    for (_ <- 1 to iters) {
-      val msgs = contribEdges.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst").as("__n"))
-        .agg(sum(col("rank") / col("__deg")).as("__m"))
-      val prev = ranks
-      ranks = ck.cut(ranks.join(msgs, col("node") === col("__n"), "left")
-        .select(col("node"),
-          (lit(0.15) + lit(0.85) * coalesce(col("__m"), lit(0.0))).as("rank")))
-      ck.release(prev) // new ranks materialized; last round's frame is dead
-    }
-    contribEdges.unpersist(false)
-    // normalize final mass to the vertex count (GraphX SPARK-18847);
-    // coalesce guards the empty-graph degenerate (sum over zero rows is
-    // null, which would MatchError the Row extractor)
-    val Row(total: Double, n: Long) =
-      ranks.agg(coalesce(sum(col("rank")), lit(0.0)), count(lit(1))).head()
-    val scale = if (total == 0.0) 1.0 else n / total
-    ranks.select(col("node"), (col("rank") * scale).as("rank"))
-  }
-
 
   private def localPageRank(spark: SparkSession, edges: DataFrame,
       iters: Int): DataFrame = {

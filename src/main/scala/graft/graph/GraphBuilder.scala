@@ -52,7 +52,7 @@ object GraphBuilder {
     // aggregation still map-side; a dedup-by-exception alternative
     // (narrow keys-only duplicate count + broadcast anti/semi split)
     // avoids the payload shuffle but pays three source scans and measured
-    // slower at sf0.1 AND sf1 (tools/ProfileDedupAB). Struct comparison
+    // slower at sf0.1 AND sf1 (interleaved A/B). Struct comparison
     // orders nulls smallest, so max prefers non-null values, matching a
     // desc_nulls_last ranking. When the catalog proves the key unique
     // (declared PK, single table), dedup is skipped entirely.
@@ -93,7 +93,7 @@ object GraphBuilder {
     // physical caveat and A/B evidence as the node path: this is a
     // single-shuffle SortAggregate, and it beat the shuffle-free
     // dedup-by-exception scheme at both measured scales
-    // (tools/ProfileDedupAB; 65-71 duplicated pairs in 0.6-6M lineitem
+    // (interleaved A/B; 65-71 duplicated pairs in 0.6-6M lineitem
     // rows — duplicates are the exception, but the extra scans cost more
     // than the per-partition sorts save).
     val raw =

@@ -82,9 +82,9 @@ object PipelineQueries {
       // ordered pair before id_a<id_b even runs), undoing the pruning.
       // The checkpoint action evaluates the join with the written
       // cheap-first condition and scores each surviving pair once in the
-      // projection (interleaved A/B, ProfileJaccardAB: pair stage 1.14 →
-      // 0.40 s at sf0.1); it is bounded at ≤ sample²/2 scalar rows, and
-      // q47 reads it at two thresholds anyway.
+      // projection (interleaved A/B: pair stage 1.14 → 0.40 s at sf0.1);
+      // it is bounded at ≤ sample²/2 scalar rows, and q47 reads it at two
+      // thresholds anyway.
       .localCheckpoint(true)
   }
 

@@ -626,6 +626,15 @@ class CypherSpec extends SparkSpec {
         .collect().head
       assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2), s"ansi=$ansi")
       assert(r.getLong(3) == 1L && r.getLong(4) == 2L, s"ansi=$ansi")
+      // indices past the int range: an int cast would wrap them onto a
+      // valid position (2^32 -> 0) or onto the invalid index 0, and i + 1
+      // overflows at Long.MaxValue
+      Seq("4294967296", "4294967295", "-4294967296", "9223372036854775807").foreach { i =>
+        val big = engine.run(
+          s"MATCH (n:Nation) WHERE n.n_nationkey = 2 RETURN [1, 2][$i] AS x")
+          .collect().head
+        assert(big.isNullAt(0), s"ansi=$ansi index=$i")
+      }
     } finally spark.conf.set("spark.sql.ansi.enabled", prior)
   }
 
@@ -2779,13 +2788,11 @@ class CypherSpec extends SparkSpec {
     assert(err.getMessage.contains("node variable"))
   }
 
-  test("BFS reached-set pruning position: early and post-agg anti are row-identical") {
-    // the early anti runs only in the distributed bfsFrames — force it
-    spark.conf.set(CypherEngine.LocalPathEdgeCapKey, "0")
+  test("distributed shortestPath (LocalPathEdgeCapKey=0) equals the local kernel") {
     // one query per oneHop mode: withRels single-path, path single-path,
     // keepAll (allShortestPaths), and length-only — all on the undirected
     // hetero graph, where every level-2 step walks back into its seed
-    // (the case the early anti exists to prune)
+    // (the case bfsFrames' reached-set anti join prunes)
     val queries = Seq(
       """MATCH p = shortestPath((o:Order {o_orderkey: 1})-[:CONTAINS|PLACED_BY*1..3]-(c:Customer))
          RETURN toInteger(c.c_custkey) AS ck, length(p) AS len,
@@ -2798,15 +2805,26 @@ class CypherSpec extends SparkSpec {
          ORDER BY ok""",
       """MATCH p = shortestPath((o:Order {o_orderkey: 1})-[:CONTAINS|PLACED_BY*1..3]-(c:Customer))
          RETURN toInteger(c.c_custkey) AS ck, length(p) AS len ORDER BY ck""")
+    def runAll(): Seq[Seq[String]] =
+      queries.map(engine.run(_).collect().toSeq.map(_.toString))
+    val local = runAll()
+    assert(local.forall(_.nonEmpty))
+    spark.conf.set(CypherEngine.LocalPathEdgeCapKey, "0")
+    try assert(runAll() == local)
+    finally spark.conf.unset(CypherEngine.LocalPathEdgeCapKey)
+  }
+
+  test("bfsEdgeCap resolves from LocalPathEdgeCapKey: unset, 0 and a walk cap") {
+    val key = CypherEngine.LocalPathEdgeCapKey
+    assert(CypherEngine.bfsEdgeCap(spark) == 2000000L)
     try {
-      def runAll(): Seq[Seq[String]] =
-        queries.map(engine.run(_).collect().toSeq.map(_.toString))
-      val early = runAll() // default: BfsAntiEarlyKey unset = true
-      assert(early.forall(_.nonEmpty))
-      spark.conf.set(CypherEngine.BfsAntiEarlyKey, "false")
-      try assert(runAll() == early)
-      finally spark.conf.unset(CypherEngine.BfsAntiEarlyKey)
-    } finally spark.conf.unset(CypherEngine.LocalPathEdgeCapKey)
+      spark.conf.set(key, "0")
+      assert(CypherEngine.bfsEdgeCap(spark) == 0L)
+      // ADVICE r15: tuning the walk enumeration gate must not rescale
+      // the BFS gate
+      spark.conf.set(key, "1000")
+      assert(CypherEngine.bfsEdgeCap(spark) == 2000000L)
+    } finally spark.conf.unset(key)
   }
 
   test("point()/distance(): cartesian exact, wgs-84 haversine, mixed-CRS null, rejections") {

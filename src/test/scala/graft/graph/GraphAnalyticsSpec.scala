@@ -10,50 +10,52 @@ class GraphAnalyticsSpec extends SparkSpec {
   private lazy val edges =
     Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
 
-  test("EdgePartition2D flag changes partitioning, not results") {
-    val g = GraphAnalytics.toGraph(edges, undirected = true, edgePartitions = Some(4))
-    assert(g.edges.getNumPartitions == 4)
+  // Independent references for the DataFrame CC and BFS: GraphX's own
+  // connected components and a Pregel BFS over the undirected graph.
+  private def graphxComponents(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    GraphAnalytics.toGraph(df, undirected = true).connectedComponents()
+      .vertices.collect().toMap
 
-    val plain = GraphAnalytics.connectedComponents(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val partitioned = GraphAnalytics.connectedComponents(spark, edges, Some(4))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(partitioned == plain)
-    assert(plain(4L) == 1L && plain(11L) == 10L)
-
-    val bfsPlain = GraphAnalytics.bfs(spark, edges, source = 1L, maxDepth = 2)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfsPart = GraphAnalytics.bfs(spark, edges, source = 1L, maxDepth = 2, Some(4))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfsPart == bfsPlain)
-    assert(bfsPlain == Map(1L -> 0, 2L -> 1, 3L -> 2))
+  private def pregelBfs(df: org.apache.spark.sql.DataFrame, source: Long,
+      maxDepth: Int): Map[Long, Int] = {
+    val g = GraphAnalytics.toGraph(df, undirected = true)
+      .mapVertices((id, _) => if (id == source) 0 else Int.MaxValue)
+    g.pregel(Int.MaxValue, maxIterations = maxDepth)(
+      (_, d, nd) => math.min(d, nd),
+      t =>
+        if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
+          Iterator((t.dstId, t.srcAttr + 1))
+        else Iterator.empty,
+      (a, b) => math.min(a, b))
+      .vertices.filter { case (_, d) => d <= maxDepth }.collect().toMap
   }
 
   test("adaptive local path agrees with the Pregel path") {
-    // localThreshold = 0 forces the distributed Pregel implementation;
+    // localThreshold = 0 forces the distributed DataFrame implementation;
     // the default routes this 4-edge graph through single-task union-find.
     val ccDf = GraphAnalytics.connectedComponents(spark, edges, localThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ccPregel = GraphAnalytics.pregelComponents(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ccPregel = graphxComponents(edges)
     val ccLocal = GraphAnalytics.connectedComponents(spark, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ccLocal == ccDf)
     assert(ccLocal == ccPregel)
     assert(ccLocal(4L) == 1L && ccLocal(11L) == 10L)
 
-    // localThreshold = 0 forces the distributed DataFrame BFS; pregelBfs
-    // is exercised directly (no longer the default distributed strategy)
+    // localThreshold = 0 forces the distributed DataFrame BFS
     val bfsDf = GraphAnalytics.bfs(spark, edges, source = 2L, maxDepth = 3,
         localThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfsPregel = GraphAnalytics.pregelBfs(spark, edges, source = 2L, maxDepth = 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val bfsPregel = pregelBfs(edges, source = 2L, maxDepth = 3)
     val bfsLocal = GraphAnalytics.bfs(spark, edges, source = 2L, maxDepth = 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(bfsLocal == bfsDf)
     assert(bfsLocal == bfsPregel)
     assert(bfsLocal == Map(2L -> 0, 1L -> 1, 3L -> 1, 4L -> 2))
+    // a depth bound that stops short of the chain's far end
+    val bfs1 = GraphAnalytics.bfs(spark, edges, source = 1L, maxDepth = 2)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(bfs1 == Map(1L -> 0, 2L -> 1, 3L -> 2))
   }
 
   test("the three BFS strategies agree on random graphs") {
@@ -69,8 +71,7 @@ class GraphAnalyticsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val dist = GraphAnalytics.bfs(spark, df, src, depth, localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val pregel = GraphAnalytics.pregelBfs(spark, df, src, depth)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val pregel = pregelBfs(df, src, depth)
       assert(local == dist)
       assert(local == pregel)
     }
@@ -89,18 +90,17 @@ class GraphAnalyticsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val dist = GraphAnalytics.connectedComponents(spark, df, localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val pregel = GraphAnalytics.pregelComponents(spark, df)
+      val delta = GraphAnalytics.dfComponents(spark, df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist)
-      assert(local == pregel)
-      // the pointer-doubling escalation path (escalateRounds=0 forces it
-      // from round 1) must agree with all three
-      spark.conf.set(GraphAnalytics.CcEscalateRoundsKey, "0")
-      try {
-        val jump = GraphAnalytics.connectedComponents(spark, df, localThreshold = 0)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(local == jump)
-      } finally spark.conf.unset(GraphAnalytics.CcEscalateRoundsKey)
+      // pointer-doubling (the escalation path) from round 1
+      val jump = GraphAnalytics.dfComponents(spark, df, escalateAfter = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(GraphAnalytics.LastCcRounds.get()._2 > 0)
+      val graphx = graphxComponents(df)
+      assert(local == graphx)
+      assert(dist == graphx)
+      assert(delta == graphx)
+      assert(jump == graphx)
     }
   }
 
@@ -114,8 +114,6 @@ class GraphAnalyticsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val ccBefore = GraphAnalytics.dfComponents(spark, chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prBefore = GraphAnalytics.dfPageRank(spark, chain, 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     spark.conf.set(GraphAnalytics.CheckpointDirKey, dir)
     spark.conf.set(GraphAnalytics.CheckpointIntervalKey, "2")
     try {
@@ -123,12 +121,8 @@ class GraphAnalyticsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val ccAfter = GraphAnalytics.dfComponents(spark, chain)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prAfter = GraphAnalytics.dfPageRank(spark, chain, 5)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(bfsAfter == bfsBefore)
       assert(ccAfter == ccBefore)
-      assert(prAfter.keySet == prBefore.keySet &&
-        prAfter.forall { case (k, v) => math.abs(v - prBefore(k)) < 1e-9 })
       // the reliable cut actually wrote into the directory
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
@@ -181,20 +175,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("CC strategy conf key routes between contract and delta") {
-    val df = Seq((1L, 2L), (2L, 3L), (9L, 8L)).toDF("src", "dst")
-    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L)
-    try {
-      spark.conf.set(GraphAnalytics.CcStrategyKey, "delta")
-      val delta = GraphAnalytics.connectedComponents(spark, df, localThreshold = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set(GraphAnalytics.CcStrategyKey, "contract")
-      val contract = GraphAnalytics.connectedComponents(spark, df, localThreshold = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(delta == expected && contract == expected)
-    } finally spark.conf.unset(GraphAnalytics.CcStrategyKey)
-  }
-
   test("contraction CC on random graphs, including released-block reuse") {
     val rnd = new scala.util.Random(42)
     (1 to 3).foreach { _ =>
@@ -236,7 +216,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(st.rowCount.contains(BigInt(1)) && st.sizeInBytes == BigInt(64))
   }
 
-  test("the three PageRank strategies agree on random graphs (float tolerance)") {
+  test("local and GraphX PageRank agree on random graphs (float tolerance)") {
     val rnd = new scala.util.Random(13)
     val n = 25
     val es = Seq.fill(80)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -246,13 +226,11 @@ class GraphAnalyticsSpec extends SparkSpec {
       d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val local = toMap(GraphAnalytics.pageRank(spark, df, iters = 10))
     // localThreshold = 0 forces the distributed default (GraphX — see
-    // pageRank's strategy note); dfPageRank is the measured-slower A/B
+    // pageRank's strategy note)
     val graphx = toMap(GraphAnalytics.pageRank(spark, df, iters = 10, localThreshold = 0))
-    val dfIter = toMap(GraphAnalytics.dfPageRank(spark, df, iters = 10))
-    assert(local.keySet == graphx.keySet && local.keySet == dfIter.keySet)
+    assert(local.keySet == graphx.keySet)
     local.foreach { case (k, v) =>
       assert(math.abs(v - graphx(k)) < 1e-6, s"graphx mismatch at $k")
-      assert(math.abs(v - dfIter(k)) < 1e-6, s"df mismatch at $k")
     }
   }
 
@@ -274,7 +252,8 @@ class GraphAnalyticsSpec extends SparkSpec {
       localThreshold = 0).count() == 0)
     // empty edge frame: PageRank must not throw on the null mass sum
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(GraphAnalytics.dfPageRank(spark, empty, iters = 3).count() == 0)
+    assert(GraphAnalytics.pageRank(spark, empty, iters = 3).count() == 0)
+    assert(GraphAnalytics.pageRank(spark, empty, iters = 3, localThreshold = 0).count() == 0)
     assert(GraphAnalytics.dfComponents(spark, empty).count() == 0)
   }
 

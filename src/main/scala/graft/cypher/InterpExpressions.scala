@@ -646,8 +646,13 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
         // the time component only (a raw cast would leak '1970-01-01')
         if (isTimeTyped(rawArgs.head, ctx)) date_format(args.head, "HH:mm:ss")
         else args.head.cast(StringType)
-      case "tointeger" => args.head.cast("long")
-      case "tofloat" => args.head.cast("double")
+      // Spark's non-ANSI cast under either spark.sql.ansi.enabled setting:
+      // its string parse is Cypher's (an unparsable string is null, a
+      // decimal one truncates: '3.7' -> 3), where the ANSI cast throws on
+      // both and try_cast nulls the decimal one. A cast to the argument's
+      // own type still folds away.
+      case "tointeger" => legacyCast(args.head, LongType)
+      case "tofloat" => legacyCast(args.head, DoubleType)
       case "size" | "length" =>
         if (isStringTyped(rawArgs.head, ctx, lamStr)) length(args.head) else size(args.head)
       case "isempty" => // isEmpty(string | list) — same type dispatch as size()
@@ -880,6 +885,15 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
       case ListComp(_, c2, _, None) => elemIsString(c2, ctx, lamStr)
       case ListComp(_, _, _, Some(pr)) => isStringTyped(pr, ctx, lamStr)
       case _ => false
+    }
+
+    /** `c` cast to `to` in Spark's LEGACY (non-ANSI) eval mode, whatever
+      * the session's `spark.sql.ansi.enabled`.
+      */
+    def legacyCast(c: Column, to: DataType): Column = {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+      import org.apache.spark.sql.graftbridge.Bridge
+      Bridge.column(Cast(Bridge.expression(c), to, None, EvalMode.LEGACY))
     }
 
     def isStringTyped(e: Expr, ctx: Ctx, lamStr: Set[String] = Set.empty): Boolean = e match {

@@ -218,6 +218,11 @@ object Parser {
         val writes = writeClauses()
         if (tryKw("WITH"))
           stages :+= Stage(clauses, where, Some(projection(allowWhere = true)), writes)
+        else if (where.nonEmpty && writes.isEmpty && startsReading)
+          // `MATCH … WHERE … MATCH/OPTIONAL MATCH/UNWIND/CALL {…}`: the
+          // WHERE closes its stage, which carries every variable forward
+          // unprojected (the same rows as an explicit `WITH *`)
+          stages :+= Stage(clauses, where, None, Nil)
         else if (tryKw("RETURN")) {
           stages :+= Stage(clauses, where, None, writes)
           ret = projection(allowWhere = false)
@@ -251,6 +256,11 @@ object Parser {
         case t => throw ParseException(s"trailing input: $t")
       }
     }
+
+    /** The next token opens a reading clause of a stage's read loop. */
+    private def startsReading: Boolean =
+      isKw("MATCH") || isKw("OPTIONAL") || isKw("UNWIND") ||
+        (isKw("CALL") && peek2 == Sym("{"))
 
     /** The body of a MATCH: either a pattern list or the path-function form
       * `p = shortestPath((…)-[…]->(…))`.

@@ -1,8 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Per-label node stores + per-type edge stores — our analogue of the
   * reference's Neo4j database, laid out as Parquet datasets
@@ -98,25 +98,34 @@ final case class GraphStore(
     * against the target's native keys ([[membershipCollisionFrame]] —
     * nonzero means the §2.15 identity blur is LIVE in this store, not
     * just theoretical). One row per label/type: (kind, name, cnt),
-    * totally ordered.
+    * ordered by (kind, name).
+    *
+    * An eager snapshot: the counts run when `describe` is called, and the
+    * returned frame is a local relation holding the rows. Each frame is
+    * counted by its own job, all submitted at once ([[graft.util.Jobs.all]]),
+    * and each job counts rows with no aggregate ([[rowCount]]). Edge counts
+    * go through [[edgeCount]], so they also fill its memo for the path
+    * gates. A union of per-label `agg(count)` branches would be one job,
+    * but every branch of a union gets its own whole-stage-codegen stage id,
+    * and the id is part of the generated class name: a 9-frame store
+    * compiled 31-39 classes per call, enough to push an upload pass
+    * (build, save, describe, audit, analytics) past Spark's 100-entry
+    * generated-code cache, so every pass recompiled. The single-frame
+    * count plans here all have the same shape, and stage ids restart with
+    * each query, so they share 3-4 classes.
     */
   def describe(spark: SparkSession): DataFrame = {
-    val parts =
-      nodes.toSeq.map { case (n, df) =>
-        df.agg(count(lit(1)).as("cnt")).select(lit("node").as("kind"), lit(n).as("name"), col("cnt"))
-      } ++
-      edges.toSeq.map { case (n, df) =>
-        df.agg(count(lit(1)).as("cnt")).select(lit("edge").as("kind"), lit(n).as("name"), col("cnt"))
-      } ++
+    val counts: Seq[() => Row] =
+      nodes.toSeq.map { case (n, df) => () => Row("node", n, GraphStore.rowCount(df)) } ++
+      edges.keys.toSeq.map(n => () => Row("edge", n, edgeCount(n))) ++
       memberships.toSeq.map { case ((t, s), df) =>
-        df.agg(count(lit(1)).as("cnt"))
-          .select(lit("membership").as("kind"), lit(s"$t<-$s").as("name"), col("cnt"))
+        () => Row("membership", s"$t<-$s", GraphStore.rowCount(df))
       } ++
       memberships.keys.toSeq.map { case (t, s) =>
-        membershipCollisionFrame(t, s).agg(count(lit(1)).as("cnt"))
-          .select(lit("collision").as("kind"), lit(s"$t<-$s").as("name"), col("cnt"))
+        () => Row("collision", s"$t<-$s", GraphStore.rowCount(membershipCollisionFrame(t, s)))
       }
-    parts.reduce(_.unionByName(_)).orderBy("kind", "name")
+    val rows = graft.util.Jobs.all(counts).sortBy(r => (r.getString(0), r.getString(1)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), GraphStore.DescribeSchema)
   }
 
   /** The build-once/query-many posture: every node/edge frame persisted
@@ -143,7 +152,7 @@ final case class GraphStore(
     * construction.
     */
   def edgeCount(label: String): Long =
-    edgeCounts.computeIfAbsent(label, l => java.lang.Long.valueOf(edges(l).count()))
+    edgeCounts.computeIfAbsent(label, l => java.lang.Long.valueOf(GraphStore.rowCount(edges(l))))
 
   @transient private lazy val edgeCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -236,6 +245,20 @@ object GraphStore {
     * `.execute`) or [[GraphWriter]].
     */
   def empty: GraphStore = GraphStore(GraphSchema(Nil, Nil), Map.empty, Map.empty)
+
+  /** [[GraphStore.describe]]'s rows: (kind, name, cnt), none nullable. */
+  val DescribeSchema: StructType = StructType(Seq(
+    StructField("kind", StringType, nullable = false),
+    StructField("name", StringType, nullable = false),
+    StructField("cnt", LongType, nullable = false)))
+
+  /** Row count of `df` as one single-stage job: the zero-column projection
+    * counts the rows of the executed plan, with no partial/final aggregate
+    * and its shuffle. The count plans of any two frames read alike, so
+    * they reuse the same generated classes.
+    */
+  private[graph] def rowCount(df: DataFrame): Long =
+    df.select().queryExecution.toRdd.count()
 
   def load(spark: SparkSession, root: String, schema: GraphSchema): GraphStore = {
     val (validated, memberPairs) = readMeta(spark, root)

@@ -638,6 +638,53 @@ class CypherSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", prior)
   }
 
+  test("toInteger/toFloat on strings are null when unparsable under both ANSI settings") {
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val r = engine.run(
+        """MATCH (n:Nation) WHERE n.n_nationkey = 2
+           RETURN toInteger('3.7') AS dec, toInteger(' 42 ') AS padded,
+                  toInteger('abc') AS bad, toInteger('-9.9') AS neg,
+                  toInteger('9223372036854775807') AS max, toInteger(3.7) AS num,
+                  toFloat('x') AS badf, toFloat(' 1.5 ') AS f, toFloat(2) AS fi""")
+        .collect().head
+      assert(r.getLong(0) == 3L && r.getLong(1) == 42L, s"ansi=$ansi")
+      assert(r.isNullAt(2), s"ansi=$ansi")
+      assert(r.getLong(3) == -9L && r.getLong(4) == Long.MaxValue && r.getLong(5) == 3L, s"ansi=$ansi")
+      assert(r.isNullAt(6), s"ansi=$ansi")
+      assert(r.getDouble(7) == 1.5 && r.getDouble(8) == 2.0, s"ansi=$ansi")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
+  test("WHERE before MATCH, OPTIONAL MATCH, UNWIND or CALL {} closes the stage like WITH *") {
+    val forms = Seq(
+      """MATCH (n:Nation) WHERE n.n_nationkey < 6
+         OPTIONAL MATCH (n)-[:IN_REGION]->(r:Region {r_regionkey: 1})
+         RETURN n.n_nationkey AS k, r.r_regionkey AS rk ORDER BY k""",
+      """MATCH (n:Nation) WHERE n.n_nationkey < 3
+         MATCH (m:Nation) WHERE m.n_regionkey = n.n_regionkey
+         RETURN n.n_nationkey AS k, m.n_nationkey AS m ORDER BY k, m""",
+      """MATCH (n:Nation) WHERE n.n_nationkey < 3
+         CALL { WITH n MATCH (m:Nation) WHERE m.n_regionkey = n.n_regionkey
+                RETURN count(m) AS c }
+         RETURN n.n_nationkey AS k, c ORDER BY k""",
+      """MATCH (n:Nation) WHERE n.n_nationkey < 2
+         UNWIND [1, 2] AS x
+         RETURN n.n_nationkey AS k, x ORDER BY k, x""")
+    forms.foreach { q =>
+      val closed = Parser.parse(q).stages.head
+      assert(closed.where.isDefined && closed.projection.isEmpty && closed.writes.isEmpty, q)
+      val rows = engine.run(q).collect().toSeq
+      val withStar = engine.run(q.replaceFirst("WHERE", "WITH * WHERE")).collect().toSeq
+      assert(rows.nonEmpty, q)
+      assert(rows == withStar, q)
+    }
+    // the OPTIONAL MATCH form keeps the unmatched nations with a null region
+    val opt = engine.run(forms.head).collect()
+    assert(opt.length == 6 && opt.exists(_.isNullAt(1)) && opt.exists(r => !r.isNullAt(1)))
+  }
+
   test("list predicates all/any/none/single") {
     val r = engine.run(
       """MATCH (n:Nation) WHERE n.n_nationkey = 2

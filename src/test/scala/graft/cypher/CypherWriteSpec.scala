@@ -865,9 +865,12 @@ class CypherWriteSpec extends SparkSpec {
     val wr = CypherEngine(st).execute("MATCH (p:Person) SET p:Acct")
     assert(wr.observed.get("collisions:Acct<-Person").contains(2L))
     // the same count is auditable on the store itself, any time later
-    val desc = wr.store.describe(spark).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(desc.contains(("collision", "Acct<-Person", 2L)))
+    val described = wr.store.describe(spark).collect()
+    assert(described.toSeq ==
+      graft.graph.GraphBuilderSpec.unionDescribe(wr.store).collect().toSeq)
+    val desc = described.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    assert(desc.toSeq == Seq(("collision", "Acct<-Person", 2L), ("membership", "Acct<-Person", 3L),
+      ("node", "Acct", 2L), ("node", "Person", 3L)))
     // a collision-free SET publishes no observation and audits zero
     var st2 = GraphWriter.mergeNodes(GraphStore.empty, "TagA",
       Seq((1L, "x")).toDF("ta", "p"), Seq("ta"))

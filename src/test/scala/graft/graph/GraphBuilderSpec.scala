@@ -159,14 +159,28 @@ class GraphBuilderSpec extends SparkSpec {
   }
 
   test("graph store describe counts nodes and edges per label") {
+    import org.apache.spark.metrics.source.CodegenMetrics
     val dir = "/root/testdata/sf0.001"
-    val store = GraphBuilder.buildAll(spark, dir)
-    val stats = store.describe(spark).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toMap2
+    // the upload posture: a persisted store whose save has filled the
+    // cache, so the count below compiles only describe's own plans
+    val store = GraphBuilder.buildAll(spark, dir).persisted
+    val root = java.nio.file.Files.createTempDirectory("graft-describe").toString
+    store.save(root)
+    // every count plan has one shape, so they share a few generated
+    // classes; a union of per-label aggregates compiled one class per
+    // branch, more than the generated-code cache's 25-entry segment
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val described = store.describe(spark)
+    val rows = described.collect().toSeq
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles <= 6)
+    assert(rows == GraphBuilderSpec.unionDescribe(store).collect().toSeq)
+    assert(described.schema == GraphStore.DescribeSchema)
+    val stats = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toArray.toMap2
     assert(stats(("node", "Region")) == 5L)
     assert(stats(("edge", "IN_REGION")) == 25L)
     assert(stats.keys.count(_._1 == "node") == 6)
     assert(stats.keys.count(_._1 == "edge") == 5)
+    store.unpersistAll()
   }
 
   private implicit class Tup3Ops(rows: Array[(String, String, Long)]) {
@@ -212,5 +226,24 @@ class GraphBuilderSpec extends SparkSpec {
     val other = GraphBuilder.openOrBuild(spark, dir,
       storeRoot = Some(s"$root/empty-subdir"))
     assert(other.nodes("Region").count() == 5)
+  }
+}
+
+object GraphBuilderSpec {
+  /** [[GraphStore.describe]] as a single union job of per-frame
+    * aggregates, ordered by (kind, name): the reference its eager,
+    * per-frame counts must match row for row.
+    */
+  def unionDescribe(store: GraphStore): DataFrame = {
+    def counted(df: DataFrame, kind: String, name: String) =
+      df.agg(count(lit(1)).as("cnt")).select(lit(kind).as("kind"), lit(name).as("name"), col("cnt"))
+    val parts =
+      store.nodes.toSeq.map { case (n, df) => counted(df, "node", n) } ++
+      store.edges.toSeq.map { case (n, df) => counted(df, "edge", n) } ++
+      store.memberships.toSeq.map { case ((t, s), df) => counted(df, "membership", s"$t<-$s") } ++
+      store.memberships.keys.toSeq.map { case (t, s) =>
+        counted(store.membershipCollisionFrame(t, s), "collision", s"$t<-$s")
+      }
+    parts.reduce(_.unionByName(_)).orderBy("kind", "name")
   }
 }

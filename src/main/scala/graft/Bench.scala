@@ -5,35 +5,29 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 object Bench {
-  /** Committed full-suite records per sf-dir basename, as (query count,
-    * seconds): a fresh full run that exceeds its record by >15% is
+  /** Committed full-suite totals per sf-dir basename, as (query count,
+    * seconds): a fresh full run that exceeds its total by >15% is
     * flagged contended no matter what loadavg claimed — but ONLY when the
-    * suite size matches the record's. A grown suite legitimately costs
-    * more than the old record, so comparing across sizes would mislabel
-    * every clean run contended and the new suite could never certify; a
-    * size-mismatched run falls back to the loadavg-only check. Update
-    * when a new record is committed to BASELINE.md. Both are the
-    * round-14 144-query records (contended: false, best of 9/7 spaced
-    * load-gated attempts, cut at final HEAD): sf0.1 87.4 s — median
-    * 1.063 vs the FAST r12 per-query anchor, which the anchor's own
-    * 0.917 calibration puts at ≈0.975 vs the r11 baseline pace (tighter
-    * than the r13 record's 1.051); sf1 131.9 s — median 0.957 vs the
-    * r11 sf1 anchor, cleanly inside the ≤1.05 gate (the first certified
-    * sf1 record since the suite grew past 127 queries). See BASELINE.md
-    * "Round-14 records".
+    * suite size matches. A grown suite legitimately costs more, so
+    * comparing across sizes would mislabel every clean run contended and
+    * the new suite could never certify; a size-mismatched run falls back
+    * to the loadavg-only check. Update when a new anchor campaign is
+    * committed to BASELINE.md.
+    *
+    * Each value is its campaign's MEDIAN-OF-5 total for the 144-query
+    * suite, not the single fastest run (ADVICE r17: anchoring on the
+    * fastest run left only ~10% headroom over a typical clean run,
+    * routing clean-but-median runs to .contended.json; the median total
+    * is the statistic the per-query anchors use):
+    *  - sf0.1: 87.6 s, r17 campaign, per-run totals 84.2-91.4 s
+    *    (BASELINE.md "Round-17: anchor promotion");
+    *  - sf1: 133.0 s (132.96), r18 campaign, per-run totals
+    *    126.2-148.0 s, 5/5 contended:false (BASELINE.md "Round-18: sf1
+    *    anchor").
+    * The committed RECORDS are the best clean runs (BENCH_FULL*.json,
+    * listed in BASELINE.md); they do not enter this check.
     */
   val CommittedTotalSec: Map[String, (Int, Double)] =
-    // Both SFs anchor the >1.15× total clause on their campaign's
-    // MEDIAN-OF-5 total, NOT the single fastest run — ADVICE r17:
-    // anchoring on the fastest run left only ~10% headroom over a
-    // TYPICAL clean run, routing clean-but-median runs to
-    // .contended.json; the median total is the same statistic the
-    // per-query anchors use. sf0.1: 87.6 s (r17 campaign, per-run
-    // totals 84.2-91.4; BASELINE.md "Round-17: anchor promotion").
-    // sf1: 132.96 s (r18 campaign, per-run totals 126.2-148.0, 5/5
-    // contended:false; BASELINE.md "Round-18: sf1 anchor"). The
-    // committed RECORDS are the best clean runs (84.2 s / 126.2 s,
-    // BENCH_FULL*.json).
     Map("sf0.1" -> (144, 87.6), "sf1" -> (144, 133.0))
 
   /** Per-SF certified per-query ANCHOR for the median-ratio clause

@@ -1127,6 +1127,28 @@ object CypherEngine {
       main.join(subR, cond, if (negated) "left_anti" else "left_semi")
     }
 
+    /** Filter `df` by a clause-level WHERE: pattern predicates as
+      * semi/anti joins, everything else as a row filter.
+      */
+    def applyWhere(df0: DataFrame, ctx: Ctx, w: Expr): DataFrame = {
+      var df = df0
+      val (patternPreds, plain) = splitWhere(w)
+      patternPreds.foreach { case (ps, iw, negated) =>
+        df = applyPatternPred(df, ctx, ps, iw, negated)
+      }
+      plain.foreach { p =>
+        // lifted BLOCK columns serve the filter only — drop them so
+        // `RETURN *` never sees them (same contract as the WITH…WHERE
+        // site in [[project]]); lifted MEMBERSHIP booleans stay, so a
+        // later clause's identical predicate reuses the join (memoized
+        // per (var, label)) — star expansion filters them instead
+        val (d2, c2, p2) = liftCountBlocks(df, ctx, p)
+        val added = (c2.plains -- ctx.plains).toSeq.filterNot(isMembershipAlias)
+        df = d2.filter(column(p2, c2)).drop(added: _*)
+      }
+      df
+    }
+
     def compileSingle(q: Query): DataFrame =
       compilePipeline(q, None)._1
 
@@ -1711,6 +1733,11 @@ object CypherEngine {
     def runStage(q: Query, initial: Option[(DataFrame, Ctx)],
         st: Stage): (DataFrame, Ctx) = {
       var state: Option[(DataFrame, Ctx)] = initial
+      // a WHERE right after an OPTIONAL MATCH is part of that optional
+      // pattern (Cypher): it filters the optional side before the left
+      // join, so an outer row whose matches all fail it is null-extended
+      val optWhere =
+        st.reads.lastOption.collect { case MatchClause(_, true) => st.where }.flatten
         // reading clauses apply in written order: MATCH extends the frame
         // by pattern joins, OPTIONAL MATCH left-joins, UNWIND explodes a
         // list into rows (one output row per element; a row-batch param
@@ -1718,10 +1745,11 @@ object CypherEngine {
         st.reads.foreach {
           case MatchClause(paths, false) =>
             state = Some(assemble(paths, initial = state))
-          case MatchClause(paths, true) =>
+          case m @ MatchClause(paths, true) =>
             val (df, ctx) = state.getOrElse(
               throw CypherException("OPTIONAL MATCH cannot start a query"))
-            state = Some(attachOptional(df, ctx, paths))
+            state = Some(attachOptional(df, ctx, paths,
+              if (m eq st.reads.last) optWhere else None))
           case ShortestPathClause(pv, p, all, opt) =>
             val (needNodes, needRels) = Elision.pathUsage(q, pv)
             state = Some(shortestPathRead(state, pv, p, all,
@@ -1761,22 +1789,7 @@ object CypherEngine {
             throw CypherException("query must start with a MATCH pattern or UNWIND")
         }
         var (df, ctx) = state.get
-        st.where.foreach { w =>
-          val (patternPreds, plain) = splitWhere(w)
-          patternPreds.foreach { case (ps, iw, negated) =>
-            df = applyPatternPred(df, ctx, ps, iw, negated)
-          }
-          plain.foreach { p =>
-            // lifted BLOCK columns serve the filter only — drop them so
-            // `RETURN *` never sees them (same contract as the WITH…WHERE
-            // site in [[project]]); lifted MEMBERSHIP booleans stay, so a
-            // later clause's identical predicate reuses the join (memoized
-            // per (var, label)) — star expansion filters them instead
-            val (d2, c2, p2) = liftCountBlocks(df, ctx, p)
-            val added = (c2.plains -- ctx.plains).toSeq.filterNot(isMembershipAlias)
-            df = d2.filter(column(p2, c2)).drop(added: _*)
-          }
-        }
+        if (optWhere.isEmpty) st.where.foreach(w => df = applyWhere(df, ctx, w))
         if (st.writes.nonEmpty) {
           val (d2, c2) = applyWrites(df, ctx, st.writes)
           df = d2; ctx = c2

@@ -261,4 +261,47 @@ private[cypher] object Elision {
     go(q)
     (used || star, usedRels)
   }
+
+  /** Variables `e` reads from its enclosing scope: property, label and
+    * value references plus the variables of nested patterns and blocks,
+    * minus the names a list lambda binds inside it. Block-local pattern
+    * variables are included; callers intersect with what a scope binds.
+    */
+  private[cypher] def exprVars(e: Expr): Set[String] = {
+    def all(es: Iterable[Expr]): Set[String] = es.flatMap(exprVars).toSet
+    def pat(p: PathPat): Set[String] = {
+      val nodes = p.head +: p.hops.map(_._2)
+      val rels = p.hops.map(_._1)
+      (nodes.flatMap(_.variable) ++ rels.flatMap(_.variable)).toSet ++
+        all(nodes.flatMap(_.props.map(_._2)) ++ rels.flatMap(_.props.map(_._2)))
+    }
+    e match {
+      case Prop(v, _) => Set(v)
+      case Var(v) => Set(v)
+      case HasLabel(v, _) => Set(v)
+      case HasAnyLabel(v, _) => Set(v)
+      case MapProj(v, _, _, ex) => all(ex.map(_._2)) + v
+      case Fn(_, args, _) => all(args)
+      case Bin(_, l, r) => all(Seq(l, r))
+      case Not(x) => exprVars(x)
+      case IsNull(x, _) => exprVars(x)
+      case In(a, b) => all(Seq(a, b))
+      case ListLit(xs) => all(xs)
+      case MapLit(kvs) => all(kvs.map(_._2))
+      case ListComp(v, coll, w, p) => exprVars(coll) ++ (all(w ++ p) - v)
+      case ReduceExpr(acc, init, v, coll, step) =>
+        all(Seq(init, coll)) ++ (exprVars(step) - acc - v)
+      case ListPred(_, v, coll, p) => exprVars(coll) ++ (exprVars(p) - v)
+      case Index(c, i) => all(Seq(c, i))
+      case CaseExpr(s, bs, d) =>
+        all(s ++ bs.flatMap { case (c, r) => Seq(c, r) } ++ d)
+      case PatternPred(p) => pat(p)
+      case ExistsBlock(ps, w) => ps.flatMap(pat).toSet ++ all(w)
+      case CountBlock(ps, w) => ps.flatMap(pat).toSet ++ all(w)
+      case CollectBlock(ps, w, r, ob, _) =>
+        ps.flatMap(pat).toSet ++ all(w ++ Seq(r) ++ ob.map(_.expr))
+      case PatternComp(p, w, pr) => pat(p) ++ all(w ++ Seq(pr))
+      case Param(_) | Lit(_) | TypedNull(_) => Set.empty
+    }
+  }
 }

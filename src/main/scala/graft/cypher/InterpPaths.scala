@@ -423,41 +423,47 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       bfsMemoized(("scalar", System.identityHashCode(store),
         ets.map(_.label), lo, hi, undirected, reversed, keepAll, withPath,
         withRels, props, seeds0.queryExecution.analyzed.canonicalized)) {
-      val e0 =
-        if (props.nonEmpty) build(withRels)
-        else {
-          val u = cachedUnion(s"scalar:$undirected:$reversed", ets)(
-            build(withRt = true))
-          if (withRels) u else u.drop("__rt")
-        }
+        val e0 =
+          if (props.nonEmpty) build(withRels)
+          else {
+            val u = cachedUnion(s"scalar:$undirected:$reversed", ets)(
+              build(withRt = true))
+            if (withRels) u else u.drop("__rt")
+          }
+        runBfs(ets, if (undirected) 2L else 1L, e0, seeds0, lo, hi, keepAll,
+          withPath, withRels)
+      }
+    }
+
+    /** The one local/distributed switch of the shortestPath family, shared
+      * by [[distDf]] and [[heteroDistDf]]. Same philosophy as
+      * [[graft.graph.GraphAnalytics.LocalEdgeThreshold]]: the distributed
+      * BFS pays ~2 Spark jobs per level (eager checkpoint + emptiness
+      * probe), so a dimension-sized graph spends its whole wall-time on job
+      * scheduling, not compute. Under the edge cap AND the seed×edge work
+      * budget, and for the key types [[localDistKey]] admits, the whole BFS
+      * runs inside ONE task (the sizing counts are two tiny jobs; a 100 TB
+      * edge store fails the edge cap and takes the distributed path).
+      * `edgeMult` scales the member types' stored edge counts to the rows
+      * of `e0` (2 under an undirected union), so the store's memoized
+      * per-type counts replace an O(edges) sizing scan per query.
+      */
+    private def runBfs(ets: Seq[EdgeType], edgeMult: Long, e0: DataFrame,
+        seeds0: DataFrame, lo: Int, hi: Int, keepAll: Boolean,
+        withPath: Boolean, withRels: Boolean): DataFrame = {
       // seeds comes from the bound-side MATCH pipeline — persisted so the
-      // sizing probe's seeds.count() and the subsequent BFS (localDist's
-      // tagged union, or the distributed path's first-hop semi join) don't
-      // each re-execute that pipeline
+      // sizing probe's seeds.count() and the BFS (the local kernel, or the
+      // distributed path's first-hop semi join) don't each re-execute it
       val seeds = seeds0.persist(StorageLevel.MEMORY_AND_DISK)
       val keyType = e0.schema("__ds").dataType
-      // Adaptive physical strategy, same philosophy as
-      // [[graft.graph.GraphAnalytics.LocalEdgeThreshold]]: the distributed
-      // BFS pays ~2 Spark jobs per level (eager checkpoint + emptiness
-      // probe) — a dimension-sized graph spends its whole wall-time on job
-      // scheduling, not compute. Under the edge cap AND the seed×edge work
-      // budget, run the whole BFS inside ONE task (the sizing counts are
-      // two tiny jobs; a 100 TB edge store fails the edge cap on the first
-      // count and takes the distributed path).
-      val edgeCap = bfsEdgeCap(e0.sparkSession)
-      val local =
-        if (lo == 1 && keyComparator(keyType).isDefined) {
-          // exact, not an estimate: base unions the full member-type frames
-          // (doubled under the undirected union), so the store's memoized
-          // per-type counts replace the per-query O(edges) sizing scan
-          val edgeCnt = ets.map(et => store.edgeCount(et.label)).sum *
-            (if (undirected) 2L else 1L)
-          edgeCnt <= edgeCap &&
-            (seeds.count() + 1L) * (edgeCnt + 1L) <= LocalPathWorkCap
-        } else false
+      val local = lo == 1 && localDistKey(keyType) && {
+        val edgeCnt = ets.map(et => store.edgeCount(et.label)).sum * edgeMult
+        edgeCnt <= bfsEdgeCap(e0.sparkSession) &&
+          (seeds.count() + 1L) * (edgeCnt + 1L) <= LocalPathWorkCap
+      }
       // the eager localCheckpoint evaluates the single-task kernel here,
-      // so a keepAll multiplicity over-budget (ADVICE r15 medium) surfaces
-      // now and falls back to the distributed, spillable shape
+      // so a keepAll multiplicity over budget surfaces now and falls back
+      // to the distributed, spillable shape
       val out =
         if (local)
           try localDist(e0, seeds, hi, keyType, keepAll, withPath, withRels)
@@ -467,7 +473,6 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
         else bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels)
       seeds.unpersist(false)
       out
-      }
     }
 
     /** Shared bound validation for the shortestPath family. An open upper
@@ -611,33 +616,10 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
             val u = cachedUnion(s"hetero:$mixedKeys", ets)(build(withRt = true))
             if (withRels) u else u.drop("__rt")
           }
-        val seeds = seeds0.select(tag(seedLabel, col("__seed")).as("__seed"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // same adaptive strategy as [[distDf]] (r14): a dimension-sized
-        // tagged union spends its wall-time on per-level job scheduling,
-        // not compute — under the edge cap and the seed×edge work budget
-        // the whole BFS runs inside ONE task (the struct comparator
-        // handles the tagged keys; an Unbounded hi still terminates —
-        // the local loop exits on frontier exhaustion)
-        val keyType = e0.schema("__ds").dataType
-        val edgeCap = bfsEdgeCap(e0.sparkSession)
-        val local =
-          if (lo == 1 && keyComparator(keyType).isDefined) {
-            val edgeCnt = ets.map(et => store.edgeCount(et.label)).sum * 2L
-            edgeCnt <= edgeCap &&
-              (seeds.count() + 1L) * (edgeCnt + 1L) <= LocalPathWorkCap
-          } else false
-        // see distDf: over-budget keepAll multiplicity falls back to the
-        // distributed shape at the eager checkpoint
-        val out =
-          if (local)
-            try localDist(e0, seeds, hi, keyType, keepAll, withPath, withRels)
-              .localCheckpoint(true)
-            catch { case t: Throwable if isLocalPathsOverBudget(t) =>
-              bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels) }
-          else bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels)
-        seeds.unpersist(false)
-        out
+        // same local/distributed switch as [[distDf]]; the tagged union
+        // always carries both directions
+        runBfs(ets, 2L, e0, seeds0.select(tag(seedLabel, col("__seed")).as("__seed")),
+          lo, hi, keepAll, withPath, withRels)
       }
     }
 
@@ -859,14 +841,17 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
 
 
     /** Attach one OPTIONAL MATCH clause: assemble its paths independently
-      * (seeded with the enclosing labels) and LEFT-join on the shared
-      * variables' node keys. Unmatched rows carry nulls for the optional
-      * variables — `count(optVar)` then counts only matches, Cypher's
-      * semantics. The enclosing WHERE applies post-join (predicates on
-      * optional variables filter null rows unless guarded with IS NULL —
-      * standard Cypher gotcha, same here).
+      * (seeded with the enclosing labels), filter them by the clause's
+      * `where`, and LEFT-join on the shared variables' node keys.
+      * Unmatched rows carry nulls for the optional variables —
+      * `count(optVar)` then counts only matches, Cypher's semantics. The
+      * WHERE belongs to the optional pattern, so it may read only the
+      * variables the pattern binds (shared ones included); an enclosing
+      * variable outside it would need the whole frame, which is a
+      * `WITH … WHERE` after the OPTIONAL MATCH.
       */
-    def attachOptional(main: DataFrame, ctx: Ctx, paths: Seq[PathPat]): (DataFrame, Ctx) = {
+    def attachOptional(main: DataFrame, ctx: Ctx, paths: Seq[PathPat],
+        where: Option[Expr] = None): (DataFrame, Ctx) = {
       val patVars: Set[String] =
         paths.flatMap(p => p.head.variable.toSeq ++ p.hops.flatMap(_._2.variable)).toSet
       patVars.find(ctx.multi.contains).foreach(v => throw CypherException(
@@ -875,7 +860,17 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       val shared = patVars.filter(ctx.labels.contains)
       if (shared.isEmpty)
         throw CypherException("OPTIONAL MATCH must share at least one variable with the preceding MATCH")
-      val (sub, subCtx) = assemble(paths, ctx.labels.view.filterKeys(shared).toMap)
+      val (sub0, subCtx) = assemble(paths, ctx.labels.view.filterKeys(shared).toMap)
+      def bound(c: Ctx): Set[String] = c.labels.keySet ++ c.rels.keySet ++
+        c.plains ++ c.paths ++ c.multi.keySet ++ c.multiRels
+      val sub = where.fold(sub0) { w =>
+        (Elision.exprVars(w) & (bound(ctx) -- bound(subCtx))).headOption
+          .foreach(v => throw CypherException(
+            s"the WHERE of an OPTIONAL MATCH reads $v, which its pattern " +
+              s"does not bind — filter the whole row with `WITH * WHERE …` " +
+              "after the OPTIONAL MATCH instead"))
+        applyWhere(sub0, subCtx, w)
+      }
       def keyColOf(v: String, c: Ctx): String = s"${v}__${store.schema.node(c.labels(v)).key}"
       val sfx = "__opt"
       val subR = sub.columns.foldLeft(sub)((d, c) => d.withColumnRenamed(c, c + sfx))

@@ -1,35 +1,40 @@
 package graft.cypher
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import CypherEngine.{CypherException, UniqueWalkMaxPathsKey}
 
-/** Single-task local BFS / walk-enumeration kernels behind the
-  * shortestPath family's adaptive physical strategy (split out of
-  * [[CypherEngine]], r16 — the r14 <2,000-LoC file invariant). The
+/** Single-task local BFS / walk-enumeration kernels: the small-graph
+  * regime of the shortestPath family and of open-bound var-length walks.
+  * Each question has two regimes, chosen from the measured edge count:
+  * one kernel here, run inside ONE task, and one distributed loop on the
+  * interpreter ([[InterpPaths]] `bfsFrames`, and the per-level loop of
+  * [[InterpPatterns]] `uniqueWalkClosure`). The distributed loops are the
+  * reference the kernels must match row for row (LocalBfsFastSpec). The
   * kernels live on this OBJECT, not the Interp traits: their
   * mapPartitions closures must stay free of any reference to the
   * non-serializable interpreter instance (an anonymous class nested in
   * a trait method captures the trait as its outer pointer). Gate policy
-  * (edge caps, work budgets, conf keys) stays on [[CypherEngine]];
-  * this file is only the kernels and their orderings.
+  * (edge caps, work budgets, conf keys) stays on [[CypherEngine]] and
+  * [[InterpPaths]]; this file is only the kernels and their orderings.
   */
 private[cypher] object LocalBfs {
 
-  /** Materialized-row budget inside [[localDist]]'s keepAll / withRels
-    * branches (ADVICE r15 medium): the edge cap and the seeds×edges work
+  /** Materialized-row budget inside [[localDist]]'s keepAll branch
+    * (ADVICE r15 medium): the edge cap and the seeds×edges work
     * budget bound the TRAVERSAL, but allShortestPaths multiplicity — the
     * number of distinct minimum-length (path, type-sequence) pairs — is
     * unbounded by either (parallel edge types compound per hop), and those
     * rows accumulate in ONE task's heap. Over budget the kernel throws
     * [[LocalPathsOverBudget]]; the caller catches it (cause-chain scan —
     * Spark wraps task failures) and re-runs the SAME BFS on the
-    * distributed, spillable [[graft.cypher]] bfsFrames shape, which the
-    * old pre-r15 gate always took for these shapes.
+    * distributed, spillable [[graft.cypher]] bfsFrames shape.
     */
   private[cypher] val LocalKeepAllRowBudget: Long = 2L * 1000 * 1000
   final class LocalPathsOverBudget(msg: String) extends RuntimeException(msg)
@@ -46,20 +51,16 @@ private[cypher] object LocalBfs {
   }
 
   // ------------------------------------------------------------------
-  // Fast single-task ingest (r19). The kernels' measured cost at sf0.1
-  // was NOT the BFS: ~0.9 s of external Row conversion plus ~1.1 s of
-  // Row-keyed HashMap probes per call on the q105 edge union (~1.5 M
-  // rows through `coalesce(1).rdd`), vs ~0.2 s for the raw columnar
-  // scan. The fast path reads InternalRows straight off the physical
-  // plan (`queryExecution.toRdd` — no per-row external conversion, no
-  // nested Row allocation for struct keys) and interns every node key
-  // into a dense Int id through open-addressed primitive maps; the BFS
-  // then runs on Int ids, and lexicographic min-path pruning compares an
-  // order-preserving RANK array (ids sorted once by [[keyComparator]]),
-  // which is exactly the legacy ordering by construction. Key types
-  // without a fast reader take [[localDistGeneric]] — the pre-r19
-  // kernel, kept verbatim (it is also the A/B reference for
-  // LocalBfsFastSpec).
+  // Ingest. The kernels' measured cost at sf0.1 was not the BFS: ~0.9 s
+  // of external Row conversion plus ~1.1 s of Row-keyed HashMap probes
+  // per call on the q105 edge union (~1.5 M rows through
+  // `coalesce(1).rdd`), vs ~0.2 s for the raw columnar scan. So the
+  // kernels read InternalRows straight off the physical plan
+  // (`queryExecution.toRdd`: no per-row external conversion, no nested Row
+  // allocation for struct keys) and intern every node key into a dense
+  // Int id ([[KeyIntern]]); the BFS then runs on Int ids, and
+  // lexicographic min-path pruning compares an order-preserving RANK
+  // array (ids sorted once under Spark's ordering for the key type).
 
   /** Growable primitive int buffer (adjacency lists). */
   private[cypher] final class IntVec {
@@ -131,13 +132,12 @@ private[cypher] object LocalBfs {
   }
 
   /** Interns non-null values read straight off InternalRows into dense
-    * Int ids. `key(id)` recovers the EXTERNAL value (what the legacy
-    * kernel saw through `Row.get`) — built lazily, only for ids that
-    * reach the output. `ranks` orders the interned ids exactly like
-    * [[keyComparator]] orders their values (integrals numerically,
-    * strings as unsigned UTF-8 bytes via `UTF8String.compareTo`, structs
-    * field-wise nulls-first) with allocation-free comparisons, so the
-    * BFS min-path prune is a pair of int reads.
+    * Int ids. `key(id)` recovers the EXTERNAL value (what `Row.get`
+    * returns for the key type), built lazily, only for ids that reach the
+    * output. `ranks` orders the interned ids the way Spark orders their
+    * values inside `min(__path)` (integrals numerically, strings as
+    * unsigned UTF-8 bytes via `UTF8String.compareTo`, structs field-wise
+    * nulls-first), so the BFS min-path prune is a pair of int reads.
     */
   private[cypher] sealed trait KeyIntern {
     def intern(r: SpecializedGetters, ordinal: Int): Int
@@ -200,17 +200,18 @@ private[cypher] object LocalBfs {
       s
     }
     def size: Int = raw.length
-    // UTF8String.compareTo IS Spark's binary string order — the same
-    // unsigned byte-wise comparison keyComparator(StringType) replicates
+    // UTF8String.compareTo IS Spark's binary string order (unsigned
+    // UTF-8 bytes, which differs from java.lang.String's UTF-16 order
+    // beyond the BMP)
     def ranks: Array[Int] =
       rankOf(raw.length, (x, y) => raw(x).compareTo(raw(y)))
   }
 
   /** Two-field struct keys — the hetero walks' `(__l, __k)` shape: both
     * field ids (+1, so null packs as 0) packed into one Long and
-    * interned again. External value is a plain external Row, matching
-    * what `Row.get` returned on the legacy path; ordering is field-wise
-    * with nulls first, via the field interners' ranks.
+    * interned again. External value is a plain external Row, as
+    * `Row.get` returns it; ordering is field-wise with nulls first, via
+    * the field interners' ranks.
     */
   private final class Struct2Intern(f0: KeyIntern, f1: KeyIntern)
       extends KeyIntern {
@@ -263,6 +264,39 @@ private[cypher] object LocalBfs {
     }
   }
 
+  /** Every other key type: the Catalyst value itself, copied (it may
+    * view a buffer the scan reuses) and interned in a hash map. A float
+    * or double zero interns as +0.0, because Spark's join and grouping
+    * keys equate -0.0 with 0.0 (boxed `equals` already equates every
+    * NaN, as those keys do). Ranks use Spark's own ordering for `dt`.
+    */
+  private final class AnyIntern(dt: DataType) extends KeyIntern {
+    private val map = new java.util.HashMap[Any, Integer]
+    private val raw = scala.collection.mutable.ArrayBuffer.empty[Any]
+    private lazy val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    def intern(r: SpecializedGetters, ordinal: Int): Int = {
+      val v = InternalRow.copyValue(r.get(ordinal, dt)) match {
+        case d: java.lang.Double if d.doubleValue == 0.0 => 0.0d
+        case f: java.lang.Float if f.floatValue == 0.0f => 0.0f
+        case x => x
+      }
+      val ex = map.get(v)
+      if (ex != null) ex.intValue
+      else {
+        val id = raw.length
+        map.put(v, Integer.valueOf(id))
+        raw += v
+        id
+      }
+    }
+    def key(id: Int): Any = toScala(raw(id))
+    def size: Int = raw.length
+    def ranks: Array[Int] = {
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      rankOf(raw.length, (x, y) => ord.compare(raw(x), raw(y)))
+    }
+  }
+
   private[cypher] def mkIntern(dt: DataType): KeyIntern = dt match {
     case ByteType =>
       new PrimIntern((r, i) => r.getByte(i).toLong,
@@ -276,62 +310,43 @@ private[cypher] object LocalBfs {
     case LongType =>
       new PrimIntern((r, i) => r.getLong(i), java.lang.Long.valueOf)
     case StringType => new StringIntern
-    case st: StructType =>
+    case st: StructType if st.fields.length == 2 =>
       new Struct2Intern(mkIntern(st.fields(0).dataType),
         mkIntern(st.fields(1).dataType))
-    case other =>
-      throw new IllegalStateException(s"no fast intern for $other")
+    case other => new AnyIntern(other)
   }
 
-  /** Key shapes the fast ingest covers; everything else stays on the
-    * legacy generic kernel. Mirrors [[mkIntern]].
+  /** Key types [[localDist]] may serve: exactly the shapes the
+    * shortestPath planner builds whose grouping and ordering the kernel
+    * reproduces bit for bit — integral types, strings, and the
+    * hetero tag struct `(__l: string, __k: integral|string)`. Floating,
+    * date and decimal keys stay on `bfsFrames`: NaN and -0.0 grouping
+    * there is Spark's, and the kernel has not been held to it.
     */
-  private[cypher] def fastKeySupported(dt: DataType): Boolean = {
-    def prim(d: DataType) = d match {
+  private[cypher] def localDistKey(dt: DataType): Boolean = {
+    def scalar(d: DataType) = d match {
       case ByteType | ShortType | IntegerType | LongType | StringType => true
       case _ => false
     }
     dt match {
-      case st: StructType => st.fields.length == 2 &&
-        st.fields.forall(f => prim(f.dataType))
-      case d => prim(d)
+      case StructType(Array(l, k)) => l.dataType == StringType && scalar(k.dataType)
+      case d => scalar(d)
     }
   }
-
-  /** Orders node-key values the way Spark orders them inside `min(__path)`:
-    * integral types numerically, strings as unsigned UTF-8 bytes (Spark
-    * compares `UTF8String` binary, NOT java.lang.String UTF-16 order — they
-    * differ beyond the BMP). Key types without a faithful local ordering
-    * return None and stay on the distributed path.
-    */
-  // Single-task BFS kernels live on the OBJECT (not the Interp traits):
-  // their mapPartitions closures must stay free of any reference to the
-  // non-serializable interpreter instance (an anonymous class nested in a
-  // trait method captures the trait as its outer pointer).
 
   /** Single-task relationship-unique path enumeration — the local
     * strategy behind [[uniqueWalkClosure]]'s adaptive switch, mirroring
     * [[localDist]]: edges and seeds arrive in one task via a tagged
-    * union (never through the driver). Per-path visited-edge sets are
-    * immutable cons lists over edge INDICES — structural sharing makes
-    * the per-path memory one cell, and the linear `contains` scan is
-    * bounded by path length. The budget throw inside the task surfaces
-    * through the caller's unwrap as the standard loud budget error.
-    * `e` columns: (__cs, __cd, __eid); a `None` seed set means
-    * every edge source starts a path (unanchored pattern).
+    * union (never through the driver), and node keys of any type intern
+    * into Int ids (the walk needs no key ordering, only equality). Per-path
+    * visited-edge sets are immutable cons lists over edge INDICES —
+    * structural sharing makes the per-path memory one cell, and the
+    * linear `contains` scan is bounded by path length. The budget throw
+    * inside the task surfaces through the caller's unwrap as the standard
+    * loud budget error. `e` columns: (__cs, __cd, __eid); a `None` seed
+    * set means every edge source starts a path (unanchored pattern).
     */
   def localUniqueWalk(e: DataFrame, seeds: Option[DataFrame],
-      lo: Int, maxPaths: Long): DataFrame =
-    if (fastKeySupported(e.schema("__cs").dataType))
-      localUniqueWalkFast(e, seeds, lo, maxPaths)
-    else localUniqueWalkGeneric(e, seeds, lo, maxPaths)
-
-  /** Fast-ingest variant of [[localUniqueWalkGeneric]] (r19): identical
-    * enumeration over interned Int node ids — the walk needs no key
-    * ordering at all, so only the ingest changes (InternalRow reads +
-    * dense interning instead of external Rows through an Any-keyed map).
-    */
-  private def localUniqueWalkFast(e: DataFrame, seeds: Option[DataFrame],
       lo: Int, maxPaths: Long): DataFrame = {
     val spark = e.sparkSession
     val seedAll = seeds.isEmpty
@@ -428,92 +443,9 @@ private[cypher] object LocalBfs {
       StructType(Seq(e.schema("__cs"), e.schema("__cd"))))
   }
 
-  private[cypher] def localUniqueWalkGeneric(e: DataFrame, seeds: Option[DataFrame],
-      lo: Int, maxPaths: Long): DataFrame = {
-    val spark = e.sparkSession
-    val seedAll = seeds.isEmpty
-    val base = e.select(lit(0).as("__t"), col("__cs"), col("__cd"))
-    val tagged = seeds match {
-      case Some(s) => base.unionByName(
-        s.select(lit(1).as("__t"), col("__seed").as("__cs"), col("__seed").as("__cd")))
-      case None => base
-    }
-    val loV = lo
-    val budget = maxPaths
-    val rows = tagged.coalesce(1).rdd.mapPartitions { it =>
-      import scala.collection.mutable
-      val dsts = mutable.ArrayBuffer.empty[Any]
-      val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Int]]
-      val seedSet = mutable.LinkedHashSet.empty[Any]
-      it.foreach { r =>
-        if (r.getInt(0) == 0) {
-          if (!r.isNullAt(1) && !r.isNullAt(2)) {
-            val i = dsts.length
-            dsts += r.get(2)
-            adj.getOrElseUpdate(r.get(1), mutable.ArrayBuffer.empty) += i
-            if (seedAll) seedSet += r.get(1)
-          }
-        } else if (!r.isNullAt(1)) seedSet += r.get(1)
-      }
-      def overBudget(paths: Long, len: Int): Nothing = throw CypherException(
-        s"open-bound var-length enumerated more than $budget " +
-          s"relationship-unique paths by length $len — bound the " +
-          s"pattern (*1..n) or raise $UniqueWalkMaxPathsKey")
-      val out = mutable.ArrayBuffer.empty[Row]
-      var frontier = mutable.ArrayBuffer.empty[(Any, Any, List[Int])]
-      seedSet.foreach { s =>
-        adj.get(s).foreach(_.foreach(ei => frontier += ((s, dsts(ei), ei :: Nil))))
-      }
-      var paths = frontier.length.toLong
-      var len = 1
-      if (paths > budget) overBudget(paths, len)
-      if (loV <= 1) frontier.foreach { case (s, d, _) => out += Row(s, d) }
-      while (frontier.nonEmpty) {
-        val next = mutable.ArrayBuffer.empty[(Any, Any, List[Int])]
-        frontier.foreach { case (s, cur, seen) =>
-          adj.get(cur).foreach(_.foreach { ei =>
-            if (!seen.contains(ei)) next += ((s, dsts(ei), ei :: seen))
-          })
-        }
-        len += 1
-        paths += next.length
-        if (paths > budget) overBudget(paths, len)
-        if (len >= loV) next.foreach { case (s, d, _) => out += Row(s, d) }
-        frontier = next
-      }
-      out.iterator
-    }
-    spark.createDataFrame(rows,
-      StructType(Seq(e.schema("__cs"), e.schema("__cd"))))
-  }
-
-  /** Single-task multi-source BFS with path tracking — the local strategy
-    * behind [[distDf]]'s adaptive switch. Edges and seeds arrive in one
-    * task via a tagged union (never through the driver); the BFS is
-    * level-synchronous with per-destination lexicographic-min path
-    * pruning, bit-identical to the distributed loop's
-    * `groupBy(min(__path))` + anti-join discipline (string keys compare as
-    * UTF-8 bytes, matching Spark's UTF8String ordering).
-    */
-  def localDist(e0: DataFrame, seeds: DataFrame, hi: Int,
-      kt: DataType, keepAll: Boolean, withPath: Boolean,
-      withRels: Boolean = false): DataFrame =
-    if (fastKeySupported(kt))
-      localDistFast(e0, seeds, hi, kt, keepAll, withPath, withRels)
-    else localDistGeneric(e0, seeds, hi, kt, keepAll, withPath, withRels)
-
-  /** Fast-ingest kernel (r19): same traversal, same pruning discipline
-    * and same output rows as [[localDistGeneric]], with the per-row
-    * external conversion and Row-keyed hashing replaced by InternalRow
-    * reads + dense-Int interning (see the section comment above).
-    * Min-path pruning compares RANKS (ids sorted once by
-    * [[keyComparator]]), which agrees with the legacy comparator on
-    * every pair by construction; LocalBfsFastSpec pins row-set equality
-    * against the generic kernel across all five shape branches.
-    */
   /** Interned single-task image of one edge-union frame: node interner,
     * int adjacency (+ per-edge rel-type ids), and rank memos. Built once
-    * per union by [[localDistFast]] and — in LOCAL mode — cached in
+    * per union by [[localDist]] and — in LOCAL mode — cached in
     * [[CsrCache]] keyed by the canonicalized edge plan: the union frame
     * itself is already a per-JVM cached, IMMUTABLE frame
     * ([[InterpPaths]] edgeUnionCache; store mutation produces NEW frames
@@ -523,7 +455,7 @@ private[cypher] object LocalBfs {
     * at sf0.1 on the q105 union). Seed interning EXTENDS `nodes`, so
     * every use is synchronized on the instance.
     */
-  private[cypher] final class Csr(val nodes: KeyIntern, val hasRels: Boolean) {
+  private[cypher] final class Csr(val nodes: KeyIntern) {
     val adj = scala.collection.mutable.ArrayBuffer.empty[IntVec]
     val adjR = scala.collection.mutable.ArrayBuffer.empty[IntVec]
     val relStrs = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -538,13 +470,15 @@ private[cypher] object LocalBfs {
       rankCache
     }
     private var relRankCache: Array[Int] = null
-    /** rel-type ranks under the same UTF-8 order the legacy prOrd used */
+    /** rel-type ranks under Spark's string order (unsigned UTF-8 bytes),
+      * the order `min(struct(__path, __rels))` compares types in
+      */
     def relRanks: Array[Int] = {
       if (relRankCache == null) {
-        val sc = keyComparator(StringType).get
+        val utf8 = relStrs.map(UTF8String.fromString)
         val order = Array.tabulate[Integer](relStrs.length)(Integer.valueOf)
         java.util.Arrays.sort(order,
-          (x: Integer, y: Integer) => sc(relStrs(x), relStrs(y)))
+          (x: Integer, y: Integer) => utf8(x).compareTo(utf8(y)))
         val rk = new Array[Int](relStrs.length)
         var i = 0
         while (i < relStrs.length) { rk(order(i)) = i; i += 1 }
@@ -559,7 +493,7 @@ private[cypher] object LocalBfs {
     * is impossible; the task side resolves tokens through this
     * JVM-global map (driver == executor JVM under local[*]). On a
     * cluster master the cache is bypassed entirely (token = None) and
-    * the kernel rebuilds per call, exactly as before r19. Bounded at
+    * the kernel rebuilds the CSR per call. Bounded at
     * `MaxEntries` plans, evicting the least recently used.
     */
   private[cypher] object CsrCache {
@@ -601,7 +535,7 @@ private[cypher] object LocalBfs {
     */
   private def buildCsr(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       kt: DataType, withRels: Boolean): Csr = {
-    val csr = new Csr(mkIntern(kt), withRels)
+    val csr = new Csr(mkIntern(kt))
     val relIdx = new java.util.HashMap[UTF8String, Integer]
     def at(b: scala.collection.mutable.ArrayBuffer[IntVec], i: Int): IntVec = {
       while (b.length <= i) b += null
@@ -629,9 +563,17 @@ private[cypher] object LocalBfs {
     csr
   }
 
-  private def localDistFast(e0: DataFrame, seeds: DataFrame, hi: Int,
+  /** Single-task multi-source BFS with path tracking — the local strategy
+    * behind [[InterpPaths]]' local/distributed gate, for the key types
+    * [[localDistKey]] admits. Edges and seeds arrive in one task (never
+    * through the driver); the BFS is level-synchronous with
+    * per-destination lexicographic-min path pruning, row for row the
+    * distributed `bfsFrames` loop's `groupBy(min(__path))` + anti-join
+    * discipline (LocalBfsFastSpec pins it across every shape).
+    */
+  def localDist(e0: DataFrame, seeds: DataFrame, hi: Int,
       kt: DataType, keepAll: Boolean, withPath: Boolean,
-      withRels: Boolean): DataFrame = {
+      withRels: Boolean = false): DataFrame = {
     require(!withRels || withPath, "withRels requires withPath")
     val spark = e0.sparkSession
     val rtCol = if (withRels) col("__rt") else lit(null).cast(StringType).as("__rt")
@@ -669,26 +611,23 @@ private[cypher] object LocalBfs {
     spark.createDataFrame(rows, distSchema(kt, keepAll, withPath, withRels))
   }
 
-  /** Seed interning + level-synchronous BFS over an interned [[Csr]] —
-    * the same traversal, pruning discipline and output rows as
-    * [[localDistGeneric]] (LocalBfsFastSpec pins row-set equality across
-    * all five shape branches). Min-path pruning compares order-preserving
-    * RANKS (ids sorted once by the interner under [[keyComparator]]'s
-    * ordering), which agrees with the legacy comparator on every pair by
-    * construction. Synchronized on the CSR because seed interning can
-    * extend the node id space; the output is materialized inside the
-    * lock (it is the same rows the generic kernel buffers in its reached
-    * maps, so no new memory regime).
+  /** Seed interning + level-synchronous BFS over an interned [[Csr]].
+    * Min-path pruning compares order-preserving RANKS (ids sorted once
+    * under Spark's ordering for the key type). Three shapes: length-only
+    * (no path bookkeeping), one lexicographic-min path per destination,
+    * and every minimum-length path (keepAll). The path shapes carry the
+    * per-hop type sequence beside the node path; without withRels it
+    * stays empty, so it neither prunes nor dedups and the row drops it.
+    * Synchronized on the CSR because seed interning can extend the node
+    * id space; the output is materialized inside the lock.
     */
   private def runDistBfs(csr: Csr,
       sit: Iterator[org.apache.spark.sql.catalyst.InternalRow], hi: Int,
       keepAll: Boolean, withPath: Boolean, withRels: Boolean,
       keepAllBudget: Long): Array[Row] = csr.synchronized {
     import scala.collection.mutable
+    type PathRels = (Vector[Int], Vector[Int])
     val maxLevel = hi.toLong
-    val withRelsL = withRels
-    val keepAllL = keepAll
-    val withPathL = withPath
     var mat = 0L
     def countMat(added: Boolean): Unit = if (added) {
       mat += 1
@@ -709,232 +648,119 @@ private[cypher] object LocalBfs {
       }
     }
     def keyArr(id: Int): Any = nodes.key(id)
-    val rank: Array[Int] = if (withPathL || keepAllL) csr.ranks else null
-    val relRank: Array[Int] = if (withRelsL) csr.relRanks else null
-      val pathOrdI = new Ordering[Vector[Int]] {
-        def compare(a: Vector[Int], b: Vector[Int]): Int = {
-          var i = 0
-          val m = math.min(a.length, b.length)
-          while (i < m) {
-            val c = java.lang.Integer.compare(rank(a(i)), rank(b(i)))
-            if (c != 0) return c
-            i += 1
-          }
-          a.length - b.length
-        }
+    val rank: Array[Int] = if (withPath || keepAll) csr.ranks else null
+    val relRank: Array[Int] = if (withRels) csr.relRanks else null
+    def cmpSeq(a: Vector[Int], b: Vector[Int], rk: Array[Int]): Int = {
+      var i = 0
+      val m = math.min(a.length, b.length)
+      while (i < m) {
+        val c = java.lang.Integer.compare(rk(a(i)), rk(b(i)))
+        if (c != 0) return c
+        i += 1
       }
-      val prOrdI = new Ordering[(Vector[Int], Vector[Int])] {
-        def compare(a: (Vector[Int], Vector[Int]),
-            b: (Vector[Int], Vector[Int])): Int = {
-          val c = pathOrdI.compare(a._1, b._1)
-          if (c != 0) return c
-          var i = 0
-          val m = math.min(a._2.length, b._2.length)
-          while (i < m) {
-            val c2 = java.lang.Integer.compare(relRank(a._2(i)), relRank(b._2(i)))
-            if (c2 != 0) return c2
-            i += 1
+      a.length - b.length
+    }
+    // min(struct(__path, __rels)): node path first, then the type sequence
+    def less(a: PathRels, b: PathRels): Boolean = {
+      val c = cmpSeq(a._1, b._1, rank)
+      if (c != 0) c < 0 else cmpSeq(a._2, b._2, relRank) < 0
+    }
+    def adjAt(i: Int): IntVec = if (i < adj.length) adj(i) else null
+    def relsAt(i: Int): IntVec = if (withRels) adjR(i) else null
+    def hop(pr: PathRels, d: Int, rs: IntVec, i: Int): PathRels =
+      (pr._1 :+ d, if (withRels) pr._2 :+ rs(i) else pr._2)
+    def row(s: Int, d: Int, len: Long, pr: PathRels): Row =
+      if (withRels) Row(keyArr(s), keyArr(d), len, pr._1.map(keyArr(_)),
+        pr._2.map(relStrs(_)))
+      else Row(keyArr(s), keyArr(d), len, pr._1.map(keyArr(_)))
+    def seedIter: Iterator[Int] =
+      (0 until seedOrder.length).iterator.map(seedOrder(_))
+    seedIter.flatMap { s =>
+      val start: PathRels = (Vector(s), Vector.empty)
+      if (keepAll) {
+        // every distinct minimum-length (path, types) pair per destination
+        // (LinkedHashSet dedups duplicate parallel edges); the reached
+        // check still runs per level, so no path revisits a node
+        val reached = mutable.HashMap.empty[Int, (Long, Vector[PathRels])]
+        var frontier = mutable.HashMap.empty[Int, mutable.LinkedHashSet[PathRels]]
+        frontier(s) = mutable.LinkedHashSet(start)
+        var level = 0L
+        while (level < maxLevel && frontier.nonEmpty) {
+          val next = mutable.HashMap.empty[Int, mutable.LinkedHashSet[PathRels]]
+          frontier.foreach { case (d, ps) =>
+            val ds = adjAt(d)
+            if (ds != null) {
+              val rs = relsAt(d)
+              var i = 0
+              while (i < ds.length) {
+                val d2 = ds(i)
+                if (!reached.contains(d2)) ps.foreach { pr =>
+                  countMat(next.getOrElseUpdate(d2, mutable.LinkedHashSet.empty)
+                    .add(hop(pr, d2, rs, i)))
+                }
+                i += 1
+              }
+            }
           }
-          a._2.length - b._2.length
+          level += 1
+          next.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
+          frontier = next
         }
+        reached.iterator.flatMap { case (d, (len, ps)) =>
+          ps.iterator.map(row(s, d, len, _))
+        }
+      } else if (withPath) {
+        // ONE lexicographic-min (path, types) pair per destination
+        val reached = mutable.HashMap.empty[Int, (Long, PathRels)]
+        var frontier = mutable.HashMap(s -> start)
+        var level = 0L
+        while (level < maxLevel && frontier.nonEmpty) {
+          val next = mutable.HashMap.empty[Int, PathRels]
+          frontier.foreach { case (d, pr) =>
+            val ds = adjAt(d)
+            if (ds != null) {
+              val rs = relsAt(d)
+              var i = 0
+              while (i < ds.length) {
+                val d2 = ds(i)
+                if (!reached.contains(d2)) {
+                  val pr2 = hop(pr, d2, rs, i)
+                  if (next.get(d2).forall(less(pr2, _))) next(d2) = pr2
+                }
+                i += 1
+              }
+            }
+          }
+          level += 1
+          next.foreach { case (d, pr) => reached(d) = (level, pr) }
+          frontier = next
+        }
+        reached.iterator.map { case (d, (len, pr)) => row(s, d, len, pr) }
+      } else {
+        // length-only: plain key-set BFS, no path bookkeeping at all
+        val reached = mutable.HashMap.empty[Int, Long]
+        var frontier = mutable.LinkedHashSet(s)
+        var level = 0L
+        while (level < maxLevel && frontier.nonEmpty) {
+          val next = mutable.LinkedHashSet.empty[Int]
+          frontier.foreach { d =>
+            val ds = adjAt(d)
+            if (ds != null) {
+              var i = 0
+              while (i < ds.length) {
+                val d2 = ds(i)
+                if (!reached.contains(d2)) next += d2
+                i += 1
+              }
+            }
+          }
+          level += 1
+          next.foreach(d => reached(d) = level)
+          frontier = next
+        }
+        reached.iterator.map { case (d, len) => Row(keyArr(s), keyArr(d), len) }
       }
-      def adjAt(i: Int): IntVec = if (i < adj.length) adj(i) else null
-      def seedIter: Iterator[Int] =
-        (0 until seedOrder.length).iterator.map(seedOrder(_))
-      seedIter.flatMap { s =>
-        if (withRelsL && keepAllL) {
-          val reached = mutable.HashMap
-            .empty[Int, (Long, Vector[(Vector[Int], Vector[Int])])]
-          var frontier = mutable.HashMap
-            .empty[Int, mutable.LinkedHashSet[(Vector[Int], Vector[Int])]]
-          val ds0 = adjAt(s)
-          if (ds0 != null) {
-            val rs = adjR(s)
-            var i = 0
-            while (i < ds0.length) {
-              countMat(frontier.getOrElseUpdate(ds0(i), mutable.LinkedHashSet.empty)
-                .add((Vector(s, ds0(i)), Vector(rs(i)))))
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap
-              .empty[Int, mutable.LinkedHashSet[(Vector[Int], Vector[Int])]]
-            frontier.foreach { case (d, ps) =>
-              val ds = adjAt(d)
-              if (ds != null) {
-                val rs = adjR(d)
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) ps.foreach { case (p, rl) =>
-                    countMat(next.getOrElseUpdate(d2, mutable.LinkedHashSet.empty)
-                      .add((p :+ d2, rl :+ rs(i))))
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-            frontier = next
-          }
-          reached.iterator.flatMap { case (d, (len, ps)) =>
-            ps.iterator.map { case (p, rl) =>
-              Row(keyArr(s), keyArr(d), len, p.map(keyArr(_)),
-                rl.map(relStrs(_)))
-            }
-          }
-        } else if (withRelsL) {
-          val reached = mutable.HashMap.empty[Int, (Long, Vector[Int], Vector[Int])]
-          var frontier = mutable.HashMap.empty[Int, (Vector[Int], Vector[Int])]
-          val ds0 = adjAt(s)
-          if (ds0 != null) {
-            val rs = adjR(s)
-            var i = 0
-            while (i < ds0.length) {
-              val pr = (Vector(s, ds0(i)), Vector(rs(i)))
-              if (frontier.get(ds0(i)).forall(q => prOrdI.compare(pr, q) < 0))
-                frontier(ds0(i)) = pr
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, (p, rl)) => reached(d) = (level, p, rl) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Int, (Vector[Int], Vector[Int])]
-            frontier.foreach { case (d, (p, rl)) =>
-              val ds = adjAt(d)
-              if (ds != null) {
-                val rs = adjR(d)
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) {
-                    val pr = (p :+ d2, rl :+ rs(i))
-                    if (next.get(d2).forall(q => prOrdI.compare(pr, q) < 0))
-                      next(d2) = pr
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, (p, rl)) => reached(d) = (level, p, rl) }
-            frontier = next
-          }
-          reached.iterator.map { case (d, (len, p, rl)) =>
-            Row(keyArr(s), keyArr(d), len, p.map(keyArr(_)), rl.map(relStrs(_)))
-          }
-        } else if (keepAllL) {
-          val reached = mutable.HashMap.empty[Int, (Long, Vector[Vector[Int]])]
-          var frontier = mutable.HashMap.empty[Int, mutable.LinkedHashSet[Vector[Int]]]
-          val ds0 = adjAt(s)
-          if (ds0 != null) {
-            var i = 0
-            while (i < ds0.length) {
-              countMat(frontier.getOrElseUpdate(ds0(i), mutable.LinkedHashSet.empty)
-                .add(Vector(s, ds0(i))))
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Int, mutable.LinkedHashSet[Vector[Int]]]
-            frontier.foreach { case (d, ps) =>
-              val ds = adjAt(d)
-              if (ds != null) {
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) ps.foreach { p =>
-                    countMat(next.getOrElseUpdate(d2, mutable.LinkedHashSet.empty)
-                      .add(p :+ d2))
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-            frontier = next
-          }
-          reached.iterator.flatMap { case (d, (len, ps)) =>
-            ps.iterator.map(p => Row(keyArr(s), keyArr(d), len, p.map(keyArr(_))))
-          }
-        } else if (withPathL) {
-          val reached = mutable.HashMap.empty[Int, (Long, Vector[Int])]
-          var frontier = mutable.HashMap.empty[Int, Vector[Int]]
-          val ds0 = adjAt(s)
-          if (ds0 != null) {
-            var i = 0
-            while (i < ds0.length) {
-              val d = ds0(i)
-              val p = Vector(s, d)
-              if (frontier.get(d).forall(q => pathOrdI.compare(p, q) < 0))
-                frontier(d) = p
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, p) => reached(d) = (level, p) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Int, Vector[Int]]
-            frontier.foreach { case (d, p) =>
-              val ds = adjAt(d)
-              if (ds != null) {
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) {
-                    val p2 = p :+ d2
-                    if (next.get(d2).forall(q => pathOrdI.compare(p2, q) < 0))
-                      next(d2) = p2
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, p) => reached(d) = (level, p) }
-            frontier = next
-          }
-          reached.iterator.map { case (d, (len, p)) =>
-            Row(keyArr(s), keyArr(d), len, p.map(keyArr(_)))
-          }
-        } else {
-          val reached = mutable.HashMap.empty[Int, Long]
-          var frontier = mutable.LinkedHashSet.empty[Int]
-          val ds0 = adjAt(s)
-          if (ds0 != null) {
-            var i = 0
-            while (i < ds0.length) { frontier += ds0(i); i += 1 }
-          }
-          var level = 1L
-          frontier.foreach(d => reached(d) = level)
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.LinkedHashSet.empty[Int]
-            frontier.foreach { d =>
-              val ds = adjAt(d)
-              if (ds != null) {
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) next += d2
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach(d => reached(d) = level)
-            frontier = next
-          }
-          reached.iterator.map { case (d, len) => Row(keyArr(s), keyArr(d), len) }
-        }
-      }.toArray
+    }.toArray
   }
 
   private def distSchema(kt: DataType, keepAll: Boolean, withPath: Boolean,
@@ -948,301 +774,5 @@ private[cypher] object LocalBfs {
     StructType(
       if (withRels) withP :+ StructField("__rels", ArrayType(StringType))
       else withP)
-  }
-
-  private[cypher] def localDistGeneric(e0: DataFrame, seeds: DataFrame, hi: Int,
-      kt: DataType, keepAll: Boolean, withPath: Boolean,
-      withRels: Boolean = false): DataFrame = {
-    require(!withRels || withPath, "withRels requires withPath")
-    val spark = e0.sparkSession
-    val cmp = keyComparator(kt).get
-    val maxLevel = hi.toLong
-    // under withRels each edge row carries its member type (`__rt`) so the
-    // BFS can accumulate the per-hop type sequence, mirroring
-    // [[InterpPaths]]' distributed loop; seed rows carry a null type
-    val rtCol = if (withRels) col("__rt") else lit(null).cast(StringType).as("__rt")
-    val tagged = e0.select(lit(0).as("__t"), col("__ds"), col("__dd"), rtCol)
-      .unionByName(seeds.select(lit(1).as("__t"),
-        col("__seed").as("__ds"), col("__seed").as("__dd"),
-        lit(null).cast(StringType).as("__rt")))
-    val keepAllBudget = LocalKeepAllRowBudget
-    val rows = tagged.coalesce(1).rdd.mapPartitions { it =>
-      import scala.collection.mutable
-      // keepAll multiplicity budget (ADVICE r15 medium): the edge/work caps
-      // bound the traversal but NOT the number of distinct minimum-length
-      // (path, types) pairs, which can compound per hop under parallel edge
-      // types and all accumulate in this one task's heap. Count every
-      // NEW pair materialized (frontier + promoted alike); over budget,
-      // throw the typed marker the caller converts into a distributed
-      // bfsFrames re-run.
-      var mat = 0L
-      def countMat(added: Boolean): Unit = if (added) {
-        mat += 1
-        if (mat > keepAllBudget) throw new LocalPathsOverBudget(
-          s"single-task allShortestPaths materialized more than " +
-            s"$keepAllBudget (path, rels) rows")
-      }
-      val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-      // parallel per-edge type buffer, populated only under withRels —
-      // adjR(src)(i) is the type of the edge behind adj(src)(i)
-      val adjR = mutable.HashMap.empty[Any, mutable.ArrayBuffer[String]]
-      val seedSet = mutable.LinkedHashSet.empty[Any]
-      it.foreach { r =>
-        if (!r.isNullAt(1) && !r.isNullAt(2)) {
-          if (r.getInt(0) == 0) {
-            adj.getOrElseUpdate(r.get(1), mutable.ArrayBuffer.empty) += r.get(2)
-            if (withRels)
-              adjR.getOrElseUpdate(r.get(1), mutable.ArrayBuffer.empty) += r.getString(3)
-          }
-          else seedSet += r.get(1)
-        }
-      }
-      val pathOrd = new Ordering[Vector[Any]] {
-        def compare(a: Vector[Any], b: Vector[Any]): Int = {
-          var i = 0
-          val n = math.min(a.length, b.length)
-          while (i < n) {
-            val c = cmp(a(i), b(i))
-            if (c != 0) return c
-            i += 1
-          }
-          a.length - b.length
-        }
-      }
-      // (path, type-sequence) ordering for the withRels single-path prune —
-      // identical to the distributed loop's min(struct(__path, __rels)):
-      // path elements first (field order), then the type strings as UTF-8
-      // bytes (Spark's UTF8String ordering)
-      val strCmp = keyComparator(StringType).get
-      val prOrd = new Ordering[(Vector[Any], Vector[String])] {
-        def compare(a: (Vector[Any], Vector[String]),
-            b: (Vector[Any], Vector[String])): Int = {
-          val c = pathOrd.compare(a._1, b._1)
-          if (c != 0) return c
-          var i = 0
-          val n = math.min(a._2.length, b._2.length)
-          while (i < n) {
-            val c2 = strCmp(a._2(i), b._2(i))
-            if (c2 != 0) return c2
-            i += 1
-          }
-          a._2.length - b._2.length
-        }
-      }
-      seedSet.iterator.flatMap { s =>
-        if (withRels && keepAll) {
-          // allShortestPaths with the per-hop type sequence: every distinct
-          // (path, types) pair per destination at its minimum length
-          val reached = mutable.HashMap
-            .empty[Any, (Long, Vector[(Vector[Any], Vector[String])])]
-          var frontier = mutable.HashMap
-            .empty[Any, mutable.LinkedHashSet[(Vector[Any], Vector[String])]]
-          adj.get(s).foreach { ds =>
-            val rs = adjR(s)
-            var i = 0
-            while (i < ds.length) {
-              countMat(frontier.getOrElseUpdate(ds(i), mutable.LinkedHashSet.empty)
-                .add((Vector(s, ds(i)), Vector(rs(i)))))
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap
-              .empty[Any, mutable.LinkedHashSet[(Vector[Any], Vector[String])]]
-            frontier.foreach { case (d, ps) =>
-              adj.get(d).foreach { ds =>
-                val rs = adjR(d)
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) ps.foreach { case (p, rl) =>
-                    countMat(next.getOrElseUpdate(d2, mutable.LinkedHashSet.empty)
-                      .add((p :+ d2, rl :+ rs(i))))
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-            frontier = next
-          }
-          reached.iterator.flatMap { case (d, (len, ps)) =>
-            ps.iterator.map { case (p, rl) => Row(s, d, len, p, rl) }
-          }
-        } else if (withRels) {
-          // shortestPath with relationships(p): ONE lexicographic-min
-          // (path, types) pair per destination
-          val reached = mutable.HashMap.empty[Any, (Long, Vector[Any], Vector[String])]
-          var frontier = mutable.HashMap.empty[Any, (Vector[Any], Vector[String])]
-          adj.get(s).foreach { ds =>
-            val rs = adjR(s)
-            var i = 0
-            while (i < ds.length) {
-              val pr = (Vector(s, ds(i)), Vector(rs(i)))
-              if (frontier.get(ds(i)).forall(q => prOrd.compare(pr, q) < 0))
-                frontier(ds(i)) = pr
-              i += 1
-            }
-          }
-          var level = 1L
-          frontier.foreach { case (d, (p, rl)) => reached(d) = (level, p, rl) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Any, (Vector[Any], Vector[String])]
-            frontier.foreach { case (d, (p, rl)) =>
-              adj.get(d).foreach { ds =>
-                val rs = adjR(d)
-                var i = 0
-                while (i < ds.length) {
-                  val d2 = ds(i)
-                  if (!reached.contains(d2)) {
-                    val pr = (p :+ d2, rl :+ rs(i))
-                    if (next.get(d2).forall(q => prOrd.compare(pr, q) < 0))
-                      next(d2) = pr
-                  }
-                  i += 1
-                }
-              }
-            }
-            level += 1
-            next.foreach { case (d, (p, rl)) => reached(d) = (level, p, rl) }
-            frontier = next
-          }
-          reached.iterator.map { case (d, (len, p, rl)) => Row(s, d, len, p, rl) }
-        } else if (keepAll) {
-          // allShortestPaths: keep EVERY distinct minimum-length path per
-          // destination (LinkedHashSet dedups duplicate parallel edges);
-          // the reached check still runs per level, so no path revisits
-          // a node — mirroring the distributed loop's pair anti join
-          val reached = mutable.HashMap.empty[Any, (Long, Vector[Vector[Any]])]
-          var frontier = mutable.HashMap.empty[Any, mutable.LinkedHashSet[Vector[Any]]]
-          adj.get(s).foreach(_.foreach { d =>
-            countMat(frontier.getOrElseUpdate(d, mutable.LinkedHashSet.empty)
-              .add(Vector(s, d)))
-          })
-          var level = 1L
-          frontier.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Any, mutable.LinkedHashSet[Vector[Any]]]
-            frontier.foreach { case (d, ps) =>
-              adj.get(d).foreach(_.foreach { d2 =>
-                if (!reached.contains(d2)) ps.foreach { p =>
-                  countMat(next.getOrElseUpdate(d2, mutable.LinkedHashSet.empty)
-                    .add(p :+ d2))
-                }
-              })
-            }
-            level += 1
-            next.foreach { case (d, ps) => reached(d) = (level, ps.toVector) }
-            frontier = next
-          }
-          reached.iterator.flatMap { case (d, (len, ps)) =>
-            ps.iterator.map(p => Row(s, d, len, p))
-          }
-        } else if (withPath) {
-          val reached = mutable.HashMap.empty[Any, (Long, Vector[Any])]
-          var frontier = mutable.HashMap.empty[Any, Vector[Any]]
-          adj.get(s).foreach(_.foreach { d =>
-            val p = Vector(s, d)
-            if (frontier.get(d).forall(q => pathOrd.compare(p, q) < 0))
-              frontier(d) = p
-          })
-          var level = 1L
-          frontier.foreach { case (d, p) => reached(d) = (level, p) }
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.HashMap.empty[Any, Vector[Any]]
-            frontier.foreach { case (d, p) =>
-              adj.get(d).foreach(_.foreach { d2 =>
-                if (!reached.contains(d2)) {
-                  val p2 = p :+ d2
-                  if (next.get(d2).forall(q => pathOrd.compare(p2, q) < 0))
-                    next(d2) = p2
-                }
-              })
-            }
-            level += 1
-            next.foreach { case (d, p) => reached(d) = (level, p) }
-            frontier = next
-          }
-          reached.iterator.map { case (d, (len, p)) => Row(s, d, len, p) }
-        } else {
-          // length-only: plain key-set BFS, no path bookkeeping at all
-          val reached = mutable.HashMap.empty[Any, Long]
-          var frontier = mutable.LinkedHashSet.empty[Any]
-          adj.get(s).foreach(_.foreach(frontier += _))
-          var level = 1L
-          frontier.foreach(d => reached(d) = level)
-          while (level < maxLevel && frontier.nonEmpty) {
-            val next = mutable.LinkedHashSet.empty[Any]
-            frontier.foreach { d =>
-              adj.get(d).foreach(_.foreach { d2 =>
-                if (!reached.contains(d2)) next += d2
-              })
-            }
-            level += 1
-            next.foreach(d => reached(d) = level)
-            frontier = next
-          }
-          reached.iterator.map { case (d, len) => Row(s, d, len) }
-        }
-      }
-    }
-    val base = Seq(
-      StructField("__ds", kt), StructField("__dd", kt),
-      StructField("__len", LongType, nullable = false))
-    val withP =
-      if (withPath || keepAll) base :+ StructField("__path", ArrayType(kt))
-      else base
-    val schema =
-      if (withRels) withP :+ StructField("__rels", ArrayType(StringType))
-      else withP
-    spark.createDataFrame(rows, StructType(schema))
-  }
-
-  private[cypher] def keyComparator(dt: DataType): Option[(Any, Any) => Int] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some {
-      (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
-    }
-    case StringType => Some { (a, b) =>
-      val x = a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      var r = 0
-      val n = math.min(x.length, y.length)
-      while (r == 0 && i < n) {
-        r = (x(i) & 0xff) - (y(i) & 0xff)
-        i += 1
-      }
-      if (r != 0) r else x.length - y.length
-    }
-    // label-tagged BFS keys (`(__l, __k)` structs, [[heteroDistDf]]):
-    // field-wise comparison in declaration order, nulls first — lets the
-    // tiny-graph single-task BFS serve heterogeneous walks too (r14,
-    // r13 verdict directive #3)
-    case st: StructType =>
-      val subs = st.fields.map(f => keyComparator(f.dataType))
-      if (subs.exists(_.isEmpty)) None
-      else {
-        val cs = subs.map(_.get)
-        Some { (a, b) =>
-          val ra = a.asInstanceOf[Row]
-          val rb = b.asInstanceOf[Row]
-          var i = 0
-          var r = 0
-          while (r == 0 && i < cs.length) {
-            val (x, y) = (ra.get(i), rb.get(i))
-            r = if (x == null && y == null) 0
-                else if (x == null) -1
-                else if (y == null) 1
-                else cs(i)(x, y)
-            i += 1
-          }
-          r
-        }
-      }
-    case _ => None
   }
 }

@@ -298,16 +298,17 @@ class CypherSpec extends SparkSpec {
   }
 
   test("WHERE n:Label on an OPTIONAL-bound variable drops null-extended rows") {
-    // Neo4j: `o:Order` on a null-extended o evaluates to NULL, so WHERE
-    // filters the row — the compile-time label constant must not fold to
-    // a bare true for nullable bindings
+    // Neo4j: `o:Order` on a null-extended o evaluates to NULL, so a
+    // WHERE over the whole row (`WITH … WHERE`) filters it — the
+    // compile-time label constant must not fold to a bare true for
+    // nullable bindings
     val matched = engine.run(
       """MATCH (c:Customer)<-[:PLACED_BY]-(o:Order)
          RETURN count(*) AS cnt""").collect().head.getLong(0)
     val viaOpt = engine.run(
       """MATCH (c:Customer)
          OPTIONAL MATCH (c)<-[:PLACED_BY]-(o:Order)
-         WHERE o:Order
+         WITH c, o WHERE o:Order
          RETURN count(*) AS cnt""").collect().head.getLong(0)
     assert(viaOpt == matched)
     // an impossible optional pattern null-extends every row; the label
@@ -315,16 +316,57 @@ class CypherSpec extends SparkSpec {
     val zero = engine.run(
       """MATCH (c:Customer)
          OPTIONAL MATCH (c)<-[:PLACED_BY]-(o:Order {o_orderstatus: 'ZZ'})
-         WHERE o:Order
+         WITH c, o WHERE o:Order
          RETURN count(*) AS cnt""").collect().head.getLong(0)
     assert(zero == 0L)
     // NOT (NULL) is NULL too — still filtered (never true)
     val notZero = engine.run(
       """MATCH (c:Customer)
          OPTIONAL MATCH (c)<-[:PLACED_BY]-(o:Order {o_orderstatus: 'ZZ'})
-         WHERE NOT o:Order
+         WITH c, o WHERE NOT o:Order
          RETURN count(*) AS cnt""").collect().head.getLong(0)
     assert(notZero == 0L)
+  }
+
+  test("WHERE after OPTIONAL MATCH filters the optional side, keeping outer rows") {
+    // Cypher: the WHERE is part of the optional pattern, so a nation
+    // whose region fails it keeps its row with r null-extended
+    val expected = store.nodes("Nation").collect()
+      .map(r => (r.getAs[Number]("n_nationkey").longValue,
+        r.getAs[Number]("n_regionkey").longValue))
+      .filter(_._1 < 6).sortBy(_._1)
+      .map { case (k, rk) => (k, if (rk == 1L) Some(1L) else None) }.toSeq
+    assert(expected.size == 6 && expected.exists(_._2.isDefined) &&
+      expected.exists(_._2.isEmpty))
+    def rows(q: String): Seq[(Long, Option[Long])] = engine.run(q).collect().toSeq
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    val viaWhere = rows(
+      """MATCH (n:Nation) WITH n WHERE n.n_nationkey < 6
+         OPTIONAL MATCH (n)-[:IN_REGION]->(r:Region) WHERE r.r_regionkey = 1
+         RETURN toInteger(n.n_nationkey) AS k, toInteger(r.r_regionkey) AS rk
+         ORDER BY k""")
+    assert(viaWhere == expected)
+    val viaInline = rows(
+      """MATCH (n:Nation) WITH n WHERE n.n_nationkey < 6
+         OPTIONAL MATCH (n)-[:IN_REGION]->(r:Region {r_regionkey: 1})
+         RETURN toInteger(n.n_nationkey) AS k, toInteger(r.r_regionkey) AS rk
+         ORDER BY k""")
+    assert(viaInline == expected)
+    // a shared variable is part of the pattern and may be read
+    val viaShared = rows(
+      """MATCH (n:Nation) WITH n WHERE n.n_nationkey < 6
+         OPTIONAL MATCH (n)-[:IN_REGION]->(r:Region)
+         WHERE r.r_regionkey = 1 AND n.n_nationkey >= 0
+         RETURN toInteger(n.n_nationkey) AS k, toInteger(r.r_regionkey) AS rk
+         ORDER BY k""")
+    assert(viaShared == expected)
+    // an enclosing variable outside the optional pattern rejects loudly
+    val ex = intercept[CypherEngine.CypherException](engine.run(
+      """MATCH (n:Nation), (x:Region {r_regionkey: 1})
+         OPTIONAL MATCH (n)-[:IN_REGION]->(r:Region)
+         WHERE r.r_regionkey = x.r_regionkey
+         RETURN n.n_nationkey AS k, r.r_regionkey AS rk"""))
+    assert(ex.getMessage.contains("x") && ex.getMessage.contains("WITH"))
   }
 
   test("OPTIONAL MATCH without a shared variable is rejected") {
@@ -1064,6 +1106,36 @@ class CypherSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(dagDist == dag)
     } finally spark.conf.unset(CypherEngine.LocalPathEdgeCapKey)
+  }
+
+  test("[:R*] walks over double and date keys equal the distributed walk") {
+    // key types without a primitive interner: the single-task walk interns
+    // their Catalyst values; 1→2→3→1 cycle, 3→4, and a parallel 2→3
+    import org.apache.spark.sql.functions.{col, date_add, lit}
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1, 2), (2, 3), (3, 1), (3, 4), (2, 3)).toDF("s", "d")
+    val ids = (1 to 4).toDF("i")
+    val keyed = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      ("double", c => c.cast("double") + lit(0.5)),
+      ("date", c => date_add(lit(java.sql.Date.valueOf("2024-02-27")), c)))
+    keyed.foreach { case (name, key) =>
+      val st = GraphStore(
+        GraphSchema(
+          nodes = Seq(NodeType("K", "id", Seq("i"), Seq("k"))),
+          edges = Seq(EdgeType("R", "K", "K", "src", "dst", Nil, "r"))),
+        nodes = Map("K" -> ids.select(key(col("i")).as("id"), col("i"))),
+        edges = Map("R" -> pairs.select(key(col("s")).as("src"), key(col("d")).as("dst"))))
+      val queries = Seq("*", "*2..", "*1..3").map(b =>
+        s"MATCH (a:K)-[:R$b]->(b:K) RETURN a.i AS a, b.i AS b, a.id AS ak, b.id AS bk")
+      def runAll(): Seq[Seq[String]] = queries.map(q =>
+        CypherEngine(st).run(q).collect().toSeq.map(_.toString).sorted)
+      val local = runAll()
+      assert(local.forall(_.nonEmpty), name)
+      spark.conf.set(CypherEngine.LocalPathEdgeCapKey, "0")
+      try assert(runAll() == local, name)
+      finally spark.conf.unset(CypherEngine.LocalPathEdgeCapKey)
+    }
   }
 
   test("startNode/endNode across binding shapes") {

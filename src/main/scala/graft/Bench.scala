@@ -175,7 +175,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // A/B knob: `SPARK_GRAFT_CONF="k=v;k2=v2"` sets runtime SQL confs the
-    // engine's conf-gated policies read (e.g. the BFS union-cache tiers) —
+    // engine's conf-gated policies read (e.g. the local path edge cap) —
     // graft.* keys can't ride -D like spark.* ones, and measured A/Bs of
     // those gates at scale need a launcher-level switch.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>

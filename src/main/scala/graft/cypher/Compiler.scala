@@ -472,54 +472,28 @@ object CypherEngine {
   // ------------------------------------- shared BFS edge-union cache
 
   /** Per-JVM cache of the doubled/tagged edge-union frames the
-    * shortestPath family derives from the store. q85/q91/q105 each
-    * rebuilt overlapping unions per query (r10 verdict "what's wrong"
-    * #1); one persisted union now serves every BFS over the same member
-    * frames — withRels readers keep the `__rt` column, others drop it (a
-    * projection over the same cached blocks). Keyed by the member edge
-    * FRAMES' identity, so a mutated store's new frames can never hit a
-    * stale entry. Per-query inline property filters bypass the cache
-    * (their edge sets are query-specific).
+    * shortestPath family derives from the store: one persisted union
+    * serves every BFS over the same member frames (withRels readers keep
+    * the `__rt` column, others drop it, a projection over the same cached
+    * blocks). Keyed on the member edge frames' identity
+    * ([[graft.util.FrameKey]]), so a mutated store's new frames can never
+    * hit a stale entry. Per-query inline property filters bypass the cache:
+    * their edge sets are query-specific. At capacity the least recently
+    * used union is unpersisted; the others stay.
     *
-    * 100 TB posture: stores past [[UnionCacheMaxEdgesKey]] (default 50M
-    * edges) don't fit a memory-tier copy; between that and
-    * [[UnionCacheMaxDiskEdgesKey]] (default 500M) the union persists
-    * `DISK_ONLY` (round 12 — spilling the derivation once beats
-    * re-deriving it per query, measured at sf10 in BASELINE.md), and past
-    * the disk cap materializing a doubled copy of the edge store is worse
-    * than the per-level projection scans it saves, so those take the
-    * uncached build — the identical plans as before the cache existed.
+    * Size tiers, by the member types' total edge count: up to
+    * [[UnionCacheMaxEdges]] the union persists `MEMORY_AND_DISK`; up to
+    * [[UnionCacheMaxDiskEdges]] it persists `DISK_ONLY`, since spilling the
+    * derivation once beats re-deriving it per query (measured at sf10 on
+    * the 60M-edge tagged union of q85/q91, BASELINE.md round-12 table) and
+    * serialized disk blocks put no memory pressure on the BFS's own
+    * shuffles; past that a doubled copy of a store-scale edge set has no
+    * business on scratch disk, and the union is built uncached.
     */
-  private[cypher] final class UnionKey(val variant: String, val frames: Seq[AnyRef]) {
-    override val hashCode: Int =
-      variant.hashCode * 31 + frames.map(System.identityHashCode).hashCode
-    override def equals(o: Any): Boolean = o match {
-      case k: UnionKey => k.variant == variant &&
-        k.frames.sizeIs == frames.size &&
-        k.frames.zip(frames).forall { case (a, b) => a eq b }
-      case _ => false
-    }
-  }
   private[cypher] val edgeUnionCache =
-    new java.util.concurrent.ConcurrentHashMap[UnionKey, DataFrame]()
-  val UnionCacheMaxEdgesKey = "graft.cypher.unionCacheMaxEdges"
+    new graft.util.EngineCache[graft.util.FrameKey, DataFrame](64, _.unpersist(false))
   private[cypher] val UnionCacheMaxEdges = 50L * 1000 * 1000
-  /** Second cache tier (round 12, r11 verdict directive #3): unions too
-    * large for executor memory but still cheaper to spill once than to
-    * re-derive per query persist `DISK_ONLY` — serialized blocks on local
-    * disk, no memory pressure on the BFS's own shuffles. Above THIS cap
-    * the union is genuinely store-scale (a doubled copy of a 100 TB edge
-    * set has no business on scratch disk) and stays uncached. Measured at
-    * sf10 (60M-edge tagged union, the q85/q91 cliff): see BASELINE.md
-    * round-12 table.
-    */
-  val UnionCacheMaxDiskEdgesKey = "graft.cypher.unionCacheMaxDiskEdges"
   private[cypher] val UnionCacheMaxDiskEdges = 500L * 1000 * 1000
-  /** Entry bound: a long-lived JVM cycling many stores (write-heavy
-    * sessions derive new frames per mutation) must not pin stale persisted
-    * unions forever — on overflow the whole cache unpersists and resets.
-    */
-  private[cypher] val UnionCacheMaxEntries = 64
 
   // ------------------------------------------------------------ parameters
 
@@ -1736,8 +1710,9 @@ object CypherEngine {
       // a WHERE right after an OPTIONAL MATCH is part of that optional
       // pattern (Cypher): it filters the optional side before the left
       // join, so an outer row whose matches all fail it is null-extended
-      val optWhere =
-        st.reads.lastOption.collect { case MatchClause(_, true) => st.where }.flatten
+      val optWhere = st.reads.lastOption.collect {
+        case MatchClause(_, true) | ShortestPathClause(_, _, _, true) => st.where
+      }.flatten
         // reading clauses apply in written order: MATCH extends the frame
         // by pattern joins, OPTIONAL MATCH left-joins, UNWIND explodes a
         // list into rows (one output row per element; a row-batch param
@@ -1750,10 +1725,11 @@ object CypherEngine {
               throw CypherException("OPTIONAL MATCH cannot start a query"))
             state = Some(attachOptional(df, ctx, paths,
               if (m eq st.reads.last) optWhere else None))
-          case ShortestPathClause(pv, p, all, opt) =>
+          case sp @ ShortestPathClause(pv, p, all, opt) =>
             val (needNodes, needRels) = Elision.pathUsage(q, pv)
             state = Some(shortestPathRead(state, pv, p, all,
-              needNodes = needNodes, needRels = needRels, optional = opt))
+              needNodes = needNodes, needRels = needRels, optional = opt,
+              where = if (sp eq st.reads.last) optWhere else None))
           case UnwindClause(e, alias) =>
             state = Some(rowsParam(e) match {
               case Some(rows) =>

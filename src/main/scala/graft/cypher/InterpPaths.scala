@@ -36,7 +36,8 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
     def shortestPathRead(state: Option[(DataFrame, Ctx)], pv: String,
         path: PathPat, all: Boolean, needNodes: Boolean,
         needRels: Boolean = false,
-        optional: Boolean = false): (DataFrame, Ctx) = {
+        optional: Boolean = false,
+        where: Option[Expr] = None): (DataFrame, Ctx) = {
       if (path.hops.size != 1)
         throw CypherException("shortestPath expects a single relationship pattern")
       // OPTIONAL semantics preserve rows of the ENCLOSING frame, so the
@@ -95,6 +96,45 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       // exclusions from it) but carry the chosen label
       val headDis = path.head.alts.nonEmpty && path.head.label.isEmpty
       val dstDis = dstPat.alts.nonEmpty && dstPat.label.isEmpty
+      if (optional && (headDis || dstDis || where.nonEmpty)) {
+        // Run the pattern NON-optional over the DISTINCT binding of its
+        // pre-bound endpoints, filter that matched side by the OPTIONAL
+        // MATCH's WHERE, and null-extend with ONE left join back onto the
+        // enclosing frame (null-safe on every endpoint column, so the row
+        // identity is exact even when the frame is not key-unique). A
+        // disjunction takes this route too: per-branch left joins would
+        // emit one null row PER BRANCH for a fully-unmatched enclosing row
+        // where Neo4j emits exactly one. Head props filter only the
+        // matched side, never the enclosing rows.
+        val (df0, ctx0) = state.get
+        val bound = Seq(aVar, bVar).distinct.filter(ctx0.labels.contains)
+        val endCols = bound.flatMap(v => df0.columns.filter(_.startsWith(s"${v}__")))
+        val dfA = df0.select(endCols.map(col): _*).distinct()
+        val ctxA = Ctx(labels = ctx0.labels.view.filterKeys(bound.toSet).toMap,
+          rels = Map.empty)
+        val (dfM0, ctxM) = shortestPathRead(Some((dfA, ctxA)), pv, path,
+          all, needNodes, needRels)
+        val dfM = where.fold(dfM0)(optionalWhere(dfM0, ctxM, ctx0, _))
+        val pfx = "__osp_"
+        val renamed = endCols.foldLeft(dfM)((d, c) =>
+          d.withColumnRenamed(c, pfx + c))
+        val cond = endCols.map(c => col(c) <=> col(pfx + c)).reduce(_ && _)
+        val joined = df0.join(renamed, cond, "left_outer")
+          .drop(endCols.map(pfx + _): _*)
+        return (joined, ctx0.copy(
+          labels = ctx0.labels ++ ctxM.labels,
+          rels = ctx0.rels ++ ctxM.rels,
+          plains = ctx0.plains ++ ctxM.plains,
+          paths = ctx0.paths ++ ctxM.paths,
+          strLists = ctx0.strLists ++ ctxM.strLists,
+          pathRels = ctx0.pathRels ++ ctxM.pathRels,
+          pathRelSeqs = ctx0.pathRelSeqs ++ ctxM.pathRelSeqs,
+          multi = ctx0.multi ++ ctxM.multi,
+          multiRels = ctx0.multiRels ++ ctxM.multiRels,
+          multiRelEnds = ctx0.multiRelEnds ++ ctxM.multiRelEnds,
+          nullable = ctx0.nullable ++ (ctxM.labels.keySet -- bound) ++
+            ctxM.multi.keySet))
+      }
       if (headDis || dstDis) {
         // memberships linking the alternatives no longer reject (r13
         // verdict directive #5): each branch's head bind and far-endpoint
@@ -106,45 +146,6 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
             throw CypherException(
               s"shortestPath endpoint $v is already bound — drop the " +
                 "label disjunction (the binding fixed its label)")
-        }
-        if (optional) {
-          // the head is pre-bound under OPTIONAL (enforced above) and a
-          // bound endpoint rejects a disjunction (just above), so only the
-          // DST carries alternatives here. Per-branch left joins would
-          // emit one null row PER BRANCH for a fully-unmatched enclosing
-          // row where Neo4j emits exactly one — instead run the
-          // decomposition NON-optional over the DISTINCT head binding and
-          // null-extend with ONE left join back onto the enclosing frame
-          // (null-safe on EVERY head column, so the row identity is exact
-          // even when the head frame is not key-unique). Head props filter
-          // only the matched side — the branch bind applies them to the
-          // reduced frame, never to the enclosing rows.
-          val (df0, ctx0) = state.get
-          val aLabel0 = ctx0.labels(aVar)
-          val aCols = df0.columns.filter(_.startsWith(s"${aVar}__")).toSeq
-          val dfA = df0.select(aCols.map(col): _*).distinct()
-          val ctxA = Ctx(labels = Map(aVar -> aLabel0), rels = Map.empty)
-          val (dfM, ctxM) = shortestPathRead(Some((dfA, ctxA)), pv, path,
-            all, needNodes, needRels, optional = false)
-          val pfx = "__osp_"
-          val renamed = aCols.foldLeft(dfM)((d, c) =>
-            d.withColumnRenamed(c, pfx + c))
-          val cond = aCols.map(c => col(c) <=> col(pfx + c)).reduce(_ && _)
-          val joined = df0.join(renamed, cond, "left_outer")
-            .drop(aCols.map(pfx + _): _*)
-          return (joined, ctx0.copy(
-            labels = ctx0.labels ++ (ctxM.labels - aVar),
-            rels = ctx0.rels ++ ctxM.rels,
-            plains = ctx0.plains ++ ctxM.plains,
-            paths = ctx0.paths ++ ctxM.paths,
-            strLists = ctx0.strLists ++ ctxM.strLists,
-            pathRels = ctx0.pathRels ++ ctxM.pathRels,
-            pathRelSeqs = ctx0.pathRelSeqs ++ ctxM.pathRelSeqs,
-            multi = ctx0.multi ++ ctxM.multi,
-            multiRels = ctx0.multiRels ++ ctxM.multiRels,
-            multiRelEnds = ctx0.multiRelEnds ++ ctxM.multiRelEnds,
-            nullable = ctx0.nullable ++ (ctxM.labels.keySet - aVar) ++
-              ctxM.multi.keySet))
         }
         // Branch exclusions reason over the VIABLE alternatives (r14, same
         // rule as [[assemble]]'s survivors): an alternative no edge type
@@ -169,7 +170,7 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
           r <- try Some(shortestPathRead(state, pv,
                  PathPat(path.head.copy(label = hl, alts = headAlts),
                    Seq((rel, dstPat.copy(label = dl, alts = dstAlts)))),
-                 all, needNodes, needRels, optional))
+                 all, needNodes, needRels))
                catch {
                  case e: CypherException
                      if e.getMessage.startsWith("no relationship fits") =>
@@ -415,11 +416,9 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       // union) are absorbed by the BFS itself — the seed-restricted first
       // frontier is distinct'd cheaply and every later level goes through
       // oneHop's groupBy(min(__path)).
-      // Cached per JVM under the size cap (r11, [[edgeUnionCache]]):
-      // overlapping BFS queries share one persisted union instead of
-      // re-deriving it per query; inline props bypass (query-specific
-      // edge sets), and oversized stores take the uncached build — the
-      // r7 "don't persist per-query derivations" rule still governs those.
+      // cached per JVM by [[cachedUnion]]: overlapping BFS queries share
+      // one persisted union; inline props bypass it (query-specific edge
+      // sets), and store-scale unions take the uncached build
       bfsMemoized(("scalar", System.identityHashCode(store),
         ets.map(_.label), lo, hi, undirected, reversed, keepAll, withPath,
         withRels, props, seeds0.queryExecution.analyzed.canonicalized)) {
@@ -499,56 +498,29 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
     }
 
     /** Route an edge-union build through the per-JVM [[edgeUnionCache]]
-      * when the member stores fit the cap; otherwise build uncached (the
-      * 100 TB path — see the cache's doc). `build` must produce the
-      * WIDEST variant (with `__rt`) so every reader shares one entry.
+      * in the storage tier the member stores' size picks, or build it
+      * uncached past the disk tier (see the cache's doc). `build` must
+      * produce the widest variant (with `__rt`) so every reader shares one
+      * entry. A new entry is materialized with one `count()` at insert:
+      * the first reader is often the single-task local kernel
+      * (`coalesce(1)`), which would otherwise compute and cache the whole
+      * union inside one task (measured at sf0.1: q105's first run 5.9 s vs
+      * 2.1 s warm). The count builds the blocks with full scan parallelism,
+      * and concurrent readers of the same union wait for it.
       */
     def cachedUnion(variant: String, ets: Seq[EdgeType])(
         build: => DataFrame): DataFrame = {
-      val sess = store.edges(ets.head.label).sparkSession
-      val cap = sess.conf.getOption(UnionCacheMaxEdgesKey)
-        .map(_.toLong).getOrElse(UnionCacheMaxEdges)
-      val diskCap = sess.conf.getOption(UnionCacheMaxDiskEdgesKey)
-        .map(_.toLong).getOrElse(UnionCacheMaxDiskEdges)
       val total = ets.map(et => store.edgeCount(et.label)).sum
-      if (total > math.max(cap, diskCap)) return build
+      if (total > UnionCacheMaxDiskEdges) return build
       val level =
-        if (total > cap) StorageLevel.DISK_ONLY
+        if (total > UnionCacheMaxEdges) StorageLevel.DISK_ONLY
         else StorageLevel.MEMORY_AND_DISK
-      val key = new UnionKey(s"$variant|${ets.map(_.label).mkString("|")}",
+      val key = new graft.util.FrameKey(s"$variant|${ets.map(_.label).mkString("|")}",
         ets.map(et => store.edges(et.label)))
-      if (edgeUnionCache.size >= UnionCacheMaxEntries) {
-        import scala.jdk.CollectionConverters._
-        edgeUnionCache.values.asScala.foreach(_.unpersist(false))
-        edgeUnionCache.clear()
-      }
-      // build + materialize OUTSIDE any map lock (ADVICE r18: the
-      // computeIfAbsent form ran persist + count() — a full Spark job —
-      // inside the CHM mapping function, holding the bin lock for the
-      // whole materialization; CHM's contract wants short mapping
-      // functions, and a concurrent query hashing to the same bin would
-      // block for seconds). get / putIfAbsent instead: on a lost race the
-      // loser unpersists its frame and adopts the winner's.
-      val hit = edgeUnionCache.get(key)
-      if (hit != null) hit
-      else {
+      edgeUnionCache.getOrBuild(key) {
         val f = build.persist(level)
-        val prior = edgeUnionCache.putIfAbsent(key, f)
-        if (prior != null) { f.unpersist(false); prior }
-        else {
-          // materialize the cache entry IN PARALLEL at insert (r18
-          // optimization round): the first reader is often the single-task
-          // local BFS kernel (coalesce(1)), which would otherwise compute
-          // AND cache the whole doubled union inside one task — measured at
-          // sf0.1: q105's first run 5.9 s vs 2.1 s warm, ~3.8 s of it this
-          // single-threaded materialization. One count() here builds the
-          // blocks with full scan parallelism; every reader (local kernel
-          // included) then streams cached blocks. The distributed path paid
-          // an equivalent first-touch materialization inside its level-1
-          // action anyway, so this moves no extra work onto it.
-          f.count()
-          f
-        }
+        try { f.count(); f }
+        catch { case t: Throwable => f.unpersist(false); throw t }
       }
     }
 
@@ -602,11 +574,8 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       }.reduce(_.unionByName(_))
       // not distinct'd — see distDf: label tags make fwd/bwd disjoint, the
       // store is pair-deduped, and the BFS dedups its own frontiers.
-      // Cached per JVM under the size cap (r11, [[edgeUnionCache]]): the
-      // q85/q91/q105 family re-derived overlapping tagged unions per
-      // query; one persisted union (always carrying __rt — a drop is a
-      // projection over the same cached blocks) now serves them all.
-      // Oversized stores keep the r7 uncached per-level-scan shape.
+      // cached per JVM by [[cachedUnion]], as in distDf: one persisted
+      // tagged union (always carrying __rt) serves the q85/q91/q105 family
       bfsMemoized(("hetero", System.identityHashCode(store),
         ets.map(_.label), lo, hi, seedLabel, keepAll, withPath, withRels,
         props, seeds0.queryExecution.analyzed.canonicalized)) {
@@ -861,16 +830,7 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       if (shared.isEmpty)
         throw CypherException("OPTIONAL MATCH must share at least one variable with the preceding MATCH")
       val (sub0, subCtx) = assemble(paths, ctx.labels.view.filterKeys(shared).toMap)
-      def bound(c: Ctx): Set[String] = c.labels.keySet ++ c.rels.keySet ++
-        c.plains ++ c.paths ++ c.multi.keySet ++ c.multiRels
-      val sub = where.fold(sub0) { w =>
-        (Elision.exprVars(w) & (bound(ctx) -- bound(subCtx))).headOption
-          .foreach(v => throw CypherException(
-            s"the WHERE of an OPTIONAL MATCH reads $v, which its pattern " +
-              s"does not bind — filter the whole row with `WITH * WHERE …` " +
-              "after the OPTIONAL MATCH instead"))
-        applyWhere(sub0, subCtx, w)
-      }
+      val sub = where.fold(sub0)(optionalWhere(sub0, subCtx, ctx, _))
       def keyColOf(v: String, c: Ctx): String = s"${v}__${store.schema.node(c.labels(v)).key}"
       val sfx = "__opt"
       val subR = sub.columns.foldLeft(sub)((d, c) => d.withColumnRenamed(c, c + sfx))
@@ -891,4 +851,20 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
         nullable = ctx.nullable ++ newVars))
     }
 
+    /** Filter an OPTIONAL MATCH's matched side `sub` by the WHERE written
+      * after it, before the left join onto the enclosing frame (`outer`), so
+      * an enclosing row whose matches all fail `w` is null-extended rather
+      * than dropped. `w` may read only what the optional pattern binds: an
+      * enclosing variable outside it has no value on the matched side.
+      */
+    def optionalWhere(sub: DataFrame, subCtx: Ctx, outer: Ctx, w: Expr): DataFrame = {
+      def bound(c: Ctx): Set[String] = c.labels.keySet ++ c.rels.keySet ++
+        c.plains ++ c.paths ++ c.multi.keySet ++ c.multiRels
+      (Elision.exprVars(w) & (bound(outer) -- bound(subCtx))).headOption
+        .foreach(v => throw CypherException(
+          s"the WHERE of an OPTIONAL MATCH reads $v, which its pattern " +
+            s"does not bind — filter the whole row with `WITH * WHERE …` " +
+            "after the OPTIONAL MATCH instead"))
+      applyWhere(sub, subCtx, w)
+    }
 }

@@ -445,15 +445,15 @@ private[cypher] object LocalBfs {
 
   /** Interned single-task image of one edge-union frame: node interner,
     * int adjacency (+ per-edge rel-type ids), and rank memos. Built once
-    * per union by [[localDist]] and — in LOCAL mode — cached in
+    * per union by [[localDist]] and, in local mode, cached in
     * [[CsrCache]] keyed by the canonicalized edge plan: the union frame
-    * itself is already a per-JVM cached, IMMUTABLE frame
-    * ([[InterpPaths]] edgeUnionCache; store mutation produces NEW frames
-    * and therefore new plans), so its interned image is equally
-    * immutable, and every later BFS-family query over the same union
-    * skips the serial scan + intern entirely (measured ~1.1 s per call
-    * at sf0.1 on the q105 union). Seed interning EXTENDS `nodes`, so
-    * every use is synchronized on the instance.
+    * itself is a per-JVM cached, immutable frame (`edgeUnionCache` in
+    * [[CypherEngine]]; store mutation produces new frames and therefore
+    * new plans), so its interned image is equally immutable, and every
+    * later BFS-family query over the same union skips the serial scan and
+    * intern (measured ~1.1 s per call at sf0.1 on the q105 union). Seed
+    * interning extends `nodes`, so every use is synchronized on the
+    * instance.
     */
   private[cypher] final class Csr(val nodes: KeyIntern) {
     val adj = scala.collection.mutable.ArrayBuffer.empty[IntVec]
@@ -488,46 +488,31 @@ private[cypher] object LocalBfs {
     }
   }
 
-  /** LOCAL-mode CSR cache. Tokens are ASSIGNED (never hashed) on the
-    * driver under full canonicalized-plan equality, so a token collision
-    * is impossible; the task side resolves tokens through this
-    * JVM-global map (driver == executor JVM under local[*]). On a
-    * cluster master the cache is bypassed entirely (token = None) and
-    * the kernel rebuilds the CSR per call. Bounded at
-    * `MaxEntries` plans, evicting the least recently used.
+  /** Local-mode CSR cache. The driver assigns each canonicalized edge plan
+    * a token (assigned, never hashed, so tokens cannot collide), and the
+    * task resolves its token through the JVM-global [[csrs]] map: under
+    * local[*] the driver is the executor JVM, while the task closure is
+    * serialized, so a token is what crosses. On a cluster master the cache
+    * is bypassed (token = None) and the kernel rebuilds the CSR per call.
+    *
+    * The plan-token map is an [[graft.util.EngineCache]] of [[MaxEntries]]
+    * plans whose release drops the token's CSR. Recency is query traffic
+    * ([[tokenFor]] runs once per kernel call), so the one-shot tokens of
+    * per-query property-filtered unions age out first, and the big shared
+    * unions' CSRs survive them.
     */
   private[cypher] object CsrCache {
     private val MaxEntries = 16
     private val csrs =
       new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Csr]
-    // access-ordered LRU: per-query prop-filtered unions churn one-shot
-    // tokens, and a full clear here would force a rebuild of the big
-    // shared-union CSRs on the family's next query — evict ONLY the
-    // least-recently-queried plan (tokenFor runs per kernel call, so
-    // recency tracks query traffic)
+    private val nextToken = new java.util.concurrent.atomic.AtomicLong
     private val planTokens =
-      new java.util.LinkedHashMap[Any, java.lang.Long](32, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Any, java.lang.Long]): Boolean =
-          if (size > MaxEntries) { csrs.remove(e.getValue); true } else false
-      }
-    private var nextToken = 0L
-    def tokenFor(df: DataFrame): java.lang.Long = planTokens.synchronized {
-      val key = df.queryExecution.analyzed.canonicalized
-      var t = planTokens.get(key)
-      if (t == null) {
-        nextToken += 1
-        t = java.lang.Long.valueOf(nextToken)
-        planTokens.put(key, t)
-      }
-      t
-    }
+      new graft.util.EngineCache[Any, java.lang.Long](MaxEntries, csrs.remove(_))
+    def tokenFor(df: DataFrame): java.lang.Long =
+      planTokens.getOrBuild(df.queryExecution.analyzed.canonicalized)(
+        java.lang.Long.valueOf(nextToken.incrementAndGet()))
     def get(t: java.lang.Long): Option[Csr] = Option(csrs.get(t))
     def put(t: java.lang.Long, c: Csr): Unit = csrs.put(t, c)
-    def clear(): Unit = planTokens.synchronized {
-      planTokens.clear()
-      csrs.clear()
-    }
   }
 
   /** Ingest one edge-union partition (columns __ds, __dd, __rt) into a

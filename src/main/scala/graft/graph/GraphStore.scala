@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.util.{EngineCache, FrameKey}
+
 /** Per-label node stores + per-type edge stores — our analogue of the
   * reference's Neo4j database, laid out as Parquet datasets
   * (`graph/nodes/<Label>/`, `graph/edges/<LABEL>/`; SURVEY.md §1.3).
@@ -158,17 +160,12 @@ final case class GraphStore(
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Key-column statistics of node store `label`: row count, plus min/max
-    * as longs when the key type is integral. ONE aggregate job, memoized
-    * JVM-WIDE on the node FRAME's identity (not the store instance —
-    * write ops copy the store but share unchanged frames, so a chained
-    * mutation session reuses the stats its predecessors paid for).
-    * Consumed by [[collisionPossible]] (r15 verdict #5).
+    * as longs when the key type is integral. One aggregate job, memoized
+    * JVM-wide on the node frame's identity rather than this store
+    * instance ([[GraphStore.keyStatsOf]]). Consumed by [[collisionPossible]].
     */
-  def keyStats(label: String): GraphStore.KeyStats = {
-    val key = schema.node(label).key
-    val df = nodes(label)
-    GraphStore.keyStatsOf(df, key)
-  }
+  def keyStats(label: String): GraphStore.KeyStats =
+    GraphStore.keyStatsOf(nodes(label), schema.node(label).key)
 
   /** Cheap necessary-condition probe for [[membershipCollisionFrame]]:
     * `false` PROVES no collision can exist for pair `(t, s)` — the
@@ -332,7 +329,7 @@ object GraphStore {
     * a NEW GraphStore over new frames, never mutating the cached one.
     */
   def cached(key: String)(build: => GraphStore): GraphStore =
-    storeCache.computeIfAbsent(key, _ => build.persisted)
+    storeCache.getOrBuild(key)(build.persisted)
 
   /** Memoize WITHOUT block-manager persistence — for stores whose frames
     * are already materialized files (a [[GraphStore.load]]ed store):
@@ -342,17 +339,18 @@ object GraphStore {
     * ([[graft.graph.GraphBuilder.savedStoreRoot]] doc).
     */
   def cachedAsIs(key: String)(build: => GraphStore): GraphStore =
-    storeCache.computeIfAbsent(key, _ => build)
+    storeCache.getOrBuild(key)(build)
 
-  /** Drop one cached store (releasing its blocks), or all with no key. */
-  def evict(key: String = null): Unit =
-    if (key == null) {
-      storeCache.values.forEach(_.unpersistAll())
-      storeCache.clear()
-    } else Option(storeCache.remove(key)).foreach(_.unpersistAll())
+  /** Drop one cached store, releasing its blocks. */
+  def evict(key: String): Unit = storeCache.remove(key)
 
+  /** Bounded above the ~10 stores one data directory's query suite keys
+    * (the base store plus its derived fixtures), so a Bench or Verify run
+    * never evicts. Eviction unpersists the least recently used store.
+    */
+  private val StoreCacheEntries = 64
   private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, GraphStore]()
+    new EngineCache[String, GraphStore](StoreCacheEntries, _.unpersistAll())
 
   /** (row count, integral-key min/max) of one node frame's key column —
     * see [[GraphStore.keyStats]].
@@ -373,37 +371,25 @@ object GraphStore {
       case _ => 0
     }
 
-  /** Frame-identity key for [[keyStatsCache]] (same pattern as the BFS
-    * edge-union cache): reference equality on the DataFrame, so a mutated
-    * store's NEW frame can never hit a stale entry.
+  /** Keyed on the node frame's identity ([[graft.util.FrameKey]]): write
+    * ops copy the store but share unchanged frames, so a chained mutation
+    * session reuses the stats its predecessors paid for, and a mutated
+    * label's new frame never hits a stale entry. An entry holds its frame,
+    * so the LRU bound also bounds how many dead stores' frames it pins.
     */
-  private final class FrameKey(val df: AnyRef, val key: String) {
-    override val hashCode: Int = System.identityHashCode(df) * 31 + key.hashCode
-    override def equals(o: Any): Boolean = o match {
-      case k: FrameKey => (k.df eq df) && k.key == key
-      case _ => false
-    }
-  }
-  private val keyStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[FrameKey, KeyStats]()
-  /** Entry bound: stats are one cheap job to recompute — on overflow the
-    * cache resets rather than pinning frames of long-dead stores from GC.
-    */
-  private val KeyStatsMaxEntries = 256
+  private val keyStatsCache = new EngineCache[FrameKey, KeyStats](256)
 
-  private[graph] def keyStatsOf(df: org.apache.spark.sql.DataFrame,
-      key: String): KeyStats = {
-    if (keyStatsCache.size > KeyStatsMaxEntries) keyStatsCache.clear()
-    keyStatsCache.computeIfAbsent(new FrameKey(df, key), _ => {
-      import org.apache.spark.sql.functions.{count, lit, min, max, col}
+  /** One aggregate job per node frame and key column, memoized in
+    * [[keyStatsCache]]; see [[GraphStore.keyStats]].
+    */
+  private[graph] def keyStatsOf(df: DataFrame, key: String): KeyStats =
+    keyStatsCache.getOrBuild(new FrameKey(key, Seq(df))) {
       if (integralWidth(df.schema(key).dataType) > 0) {
-        val r = df.agg(count(lit(1)),
-          min(col(key).cast(org.apache.spark.sql.types.LongType)),
-          max(col(key).cast(org.apache.spark.sql.types.LongType))).head()
+        val r = df.agg(count(lit(1)), min(col(key).cast(LongType)),
+          max(col(key).cast(LongType))).head()
         KeyStats(r.getLong(0),
           if (r.isNullAt(1) || r.isNullAt(2)) None
           else Some((r.getLong(1), r.getLong(2))))
       } else KeyStats(df.agg(count(lit(1))).head().getLong(0), None)
-    })
-  }
+    }
 }

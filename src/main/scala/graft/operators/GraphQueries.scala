@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.{GraphAnalytics, GraphBuilder, GraphSchema, GraphStore}
+import graft.graph.{GraphAnalytics, GraphSchema}
 import graft.sources.Tables
+import graft.util.EngineCache
 
 /** Graph operator surface (SURVEY.md §2.8): construction stats, degree
   * analytics, k-hop traversals, connected components, BFS. Q33/Q34 run
@@ -25,63 +26,44 @@ object GraphQueries {
     */
   private val PartOffset = 1000000000L
 
-  /** Bipartite customer–part edges via lineitem⨝orders (the derived graph of
-    * SURVEY.md §2.12 Q33/Q34), deduplicated. `sampleMod` keeps the Q33
-    * component-closure oracle tractable (recursive CTE) — None = full graph.
-    */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Option[Int]), DataFrame]()
-
   /** ~512k (src,dst) Long pairs ≈ 8 MB per partition — the unit used to size
     * the coalesce below so iterative GraphX jobs get a task count that
     * matches the data, not the shuffle.partitions the dedup ran with.
     */
   private val EdgeRowsPerPartition = 512L * 1000
 
+  /** Persisted bipartite graphs per (directory, sample): the sampled one
+    * serves q33/q56/q57 and the unsampled one q34, so four entries hold two
+    * directories' worth. Eviction unpersists the least recently used.
+    */
+  private val edgeCache = new EngineCache[(String, Option[Int]), DataFrame](4,
+    _.unpersist(false))
+
+  /** Bipartite customer–part edges via lineitem⨝orders (the derived graph of
+    * SURVEY.md §2.12 Q33/Q34), deduplicated. `sampleMod` keeps the Q33
+    * component-closure oracle tractable (recursive CTE) — None = full graph.
+    *
+    * Memoized and persisted per JVM in [[edgeCache]]: four analytics queries
+    * walk the same derived graph, and the dedup join is the shared ingest
+    * step, not part of any one algorithm's cost (the store cache's
+    * rationale). The persisted plan pins the dedup's shuffle partitioning
+    * (cached plans bypass AQE coalescing), so [[buildBipartite]] coalesces
+    * to ceil(rows / 512k) partitions before persisting: a tiny graph would
+    * otherwise schedule dozens of near-empty tasks per distributed
+    * iteration downstream (measured 15.7x slower on q33).
+    */
   private def bipartiteEdges(s: SparkSession, dir: String, sampleMod: Option[Int]): DataFrame =
-    // memoized + persisted per JVM: four analytics queries walk the same
-    // derived graph; the dedup join is the shared ingest step, not part of
-    // any one algorithm's cost (same rationale as the Cypher store cache).
-    // The persisted plan pins the dedup's 32-way shuffle partitioning (cached
-    // plans bypass AQE coalescing), so every distributed iteration downstream
-    // would otherwise schedule dozens of near-empty tasks over a tiny graph
-    // — a measured 15.7x regression on q33 in round 2. Materialize once,
-    // then hand out a view coalesced to ceil(rows / 512k), so the task count
-    // tracks actual edge volume at any scale (sf0.001 → 1 partition; 100 TB
-    // derived graphs → hundreds, capped only by the data).
-    edgeCache.computeIfAbsent((dir, sampleMod),
-      _ => buildBipartite(s, dir, sampleMod).persist(StorageLevel.MEMORY_AND_DISK))
+    edgeCache.getOrBuild((dir, sampleMod))(
+      buildBipartite(s, dir, sampleMod).persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Drop one memoized edge frame and release its storage (r18, verdict
-    * #5): q34 is the SOLE consumer of the UNSAMPLED bipartite graph —
-    * q33/q56/q57 share the mod-97 sample — and its BFS is
-    * level-synchronous-eager (every level is localCheckpointed before
-    * [[GraphAnalytics.bfs]] returns), so by the time q34's result frame
-    * exists the 600M-pair cache (sf100) is dead weight: left pinned it
-    * evicted q47's working set for the rest of the suite (measured 97 s
-    * in-suite vs 66 s isolated at sf100). A later call re-warms it
-    * through [[bipartiteEdges]] — the q34 phase probes do exactly that,
-    * with the re-warm timed as its OWN phase so the bfs phase stays
-    * warm-labeled.
-    */
-  private def releaseEdges(dir: String, sampleMod: Option[Int]): Unit = {
-    val f = edgeCache.remove((dir, sampleMod))
-    if (f != null) f.unpersist(false)
-  }
-
-  /** The uncached bipartite ingest plan — also the `ingest` phase probe of
-    * q34's phase split (r17, verdict #5: the sf100 q34 headline is
-    * dominated by this one-time 600M-row join + distinct, not the BFS
-    * levels; probes must recompute from scratch, so they can't go through
-    * [[edgeCache]]).
-    */
-  /** `probeShape = true` (the ingest phase probe only) injects a no-op
-    * filter BETWEEN the join and the distinct, so no subtree of the
-    * probe's plan is `sameResult` to the [[edgeCache]]d frame — Spark's
-    * CacheManager otherwise substitutes the cached InMemoryRelation into
-    * ANY matching subplan and the "from scratch" probe silently reads
-    * cache blocks (measured: 0.78 s for a 600M-row ingest at sf100).
-    * The filter drops nothing: keys are non-negative.
+  /** The uncached bipartite ingest plan, also q34's `ingest` phase probe,
+    * which must recompute from scratch. `probeShape = true` injects a no-op
+    * filter between the join and the distinct, so no subtree of the probe's
+    * plan is `sameResult` to the [[edgeCache]]d frame: Spark's CacheManager
+    * otherwise substitutes the cached relation into any matching subplan
+    * and the probe silently reads cache blocks (measured 0.78 s for a
+    * 600M-row ingest at sf100). The filter drops nothing: keys are
+    * non-negative.
     */
   private def buildBipartite(s: SparkSession, dir: String,
       sampleMod: Option[Int], probeShape: Boolean = false): DataFrame = {
@@ -131,17 +113,11 @@ object GraphQueries {
     * (final/inject_relationship.py:1017-1031).
     */
   private def q31b(s: SparkSession, dir: String): DataFrame =
-    // audits the same cached store the Cypher query family reads (keyed
-    // identically in CypherQueries.store) — the reference's count audits
-    // run against the injected database, not a rebuilt one
-    // (final/inject_relationship.py:1017-1031), and a fresh uncached
-    // build here re-paid every node/edge construction per call (~5 s of
-    // q31b's sf1 wall was the rebuild, not the counts)
-    (GraphBuilder.savedStoreRoot(dir) match {
-      case Some(root) => GraphStore.cachedAsIs(dir)(
-        GraphStore.load(s, root, graft.graph.GraphSchema.testdata))
-      case None => GraphStore.cached(dir)(GraphBuilder.buildAll(s, dir))
-    }).describe(s)
+    // audits the cached store the Cypher query family reads: the
+    // reference's count audits run against the injected database, not a
+    // rebuilt one (final/inject_relationship.py:1017-1031), and an uncached
+    // build re-paid every node/edge construction per call (~5 s at sf1)
+    CypherQueries.store(s, dir).describe(s)
 
   private val q31bSql: String = {
     val g = GraphSchema.testdata
@@ -270,16 +246,16 @@ object GraphQueries {
     // The source vertex is part of the result even if isolated (GraphX only
     // materializes vertices that appear in some edge).
     val seed = Seq((1L, 0)).toDF("node", "dist")
-    // bfs is eager on BOTH strategies (each distributed level is
-    // localCheckpointed; the local kernel's result is checkpointed at the
-    // strategy gate — r18: it used to return a lazy plan over the edge
-    // frame, so this release made the final aggregation re-pay the whole
-    // ingest uncached), so its result no longer references the edge frame
-    // — release the unsampled cache here, not at suite end, so q47+ don't
-    // compete with 600M dead pairs (verdict r17 #5)
+    // q34 is the only reader of the unsampled graph, and bfs is eager on
+    // both strategies (each distributed level is localCheckpointed; the
+    // local kernel's result is checkpointed at the strategy gate), so its
+    // result no longer references the edge frame: release the cached graph
+    // now rather than at suite end, so later queries don't compete with
+    // 600M dead pairs at sf100 (in-suite q47 measured 97 s vs 66 s alone).
+    // A later call re-warms it through [[bipartiteEdges]].
     val levels = GraphAnalytics.bfs(s, bipartiteEdges(s, dir, None),
       source = 1L, maxDepth = 4)
-    releaseEdges(dir, None)
+    edgeCache.remove((dir, None))
     levels
       .unionByName(seed)
       .groupBy("node").agg(min(col("dist")).cast(IntegerType).as("dist"))
@@ -372,20 +348,15 @@ object GraphQueries {
     "q57_triangles" -> q57 _
   )
 
-  /** q34's ingest-vs-BFS phase split (r17, verdict #5) — same contract as
-    * [[PipelineQueries.phaseProbes]]: timed by Bench OUTSIDE the headline
-    * numbers, recorded under `"phases"`. `ingest` rebuilds the bipartite
-    * dedup join from scratch (bypassing [[edgeCache]] — probes share no
-    * state with the timed run); `bfs` runs the 4-level BFS over the
-    * CACHED edges, so the phases decompose the headline: at sf100 the
-    * one-time 600M-row join + distinct dominates q34's ~250 s wall while
-    * the BFS levels are seconds — the accounting blur this split removes
-    * (the r15 phase split did the same for the tolerance family). Since
-    * r18 q34 RELEASES the unsampled cache when it finishes (verdict r17
-    * #5), so the probe sequence re-warms it explicitly: `warm`
-    * re-materializes the cache as its own timed phase (probes run in Seq
-    * order), and `bfs` then measures the levels over genuinely warm
-    * edges — no phase silently reads state another phase paid for.
+  /** q34's ingest-vs-BFS phase split, same contract as
+    * [[PipelineQueries.phaseProbes]]: timed by Bench outside the headline
+    * numbers, recorded under `"phases"`. At sf100 the one-time 600M-row
+    * join + distinct dominates q34's ~250 s wall while the BFS levels take
+    * seconds. `ingest` rebuilds the dedup join from scratch, bypassing
+    * [[edgeCache]]; q34 releases its cached graph when it finishes, so
+    * `warm` re-materializes it as its own phase (probes run in Seq order)
+    * and `bfs` then measures the levels over warm edges. No phase reads
+    * state another phase paid for.
     */
   val phaseProbes: Map[String, Seq[(String, Q)]] = Map(
     "q34_bfs_distance" -> Seq(

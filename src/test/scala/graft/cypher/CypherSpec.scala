@@ -369,6 +369,39 @@ class CypherSpec extends SparkSpec {
     assert(ex.getMessage.contains("x") && ex.getMessage.contains("WITH"))
   }
 
+  test("WHERE after OPTIONAL MATCH shortestPath filters the optional side") {
+    val expected = store.nodes("Nation").collect()
+      .map(r => (r.getAs[Number]("n_nationkey").longValue,
+        r.getAs[Number]("n_regionkey").longValue))
+      .filter(_._1 < 6).sortBy(_._1)
+      .map { case (k, rk) => (k, if (rk == 1L) Some(1L) else None) }.toSeq
+    assert(expected.size == 6 && expected.exists(_._2.isDefined) &&
+      expected.exists(_._2.isEmpty))
+    def rows(q: String): Seq[(Long, Option[Long])] = engine.run(q).collect().toSeq
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    val viaWhere = rows(
+      """MATCH (n:Nation) WITH n WHERE n.n_nationkey < 6
+         OPTIONAL MATCH p = shortestPath((n)-[:IN_REGION]->(r:Region))
+         WHERE r.r_regionkey = 1
+         RETURN toInteger(n.n_nationkey) AS k, toInteger(r.r_regionkey) AS rk
+         ORDER BY k""")
+    assert(viaWhere == expected)
+    // the path variable and the start endpoint belong to the pattern too
+    val viaShared = rows(
+      """MATCH (n:Nation) WITH n WHERE n.n_nationkey < 6
+         OPTIONAL MATCH p = shortestPath((n)-[:IN_REGION]->(r:Region))
+         WHERE r.r_regionkey = 1 AND length(p) = 1 AND n.n_nationkey >= 0
+         RETURN toInteger(n.n_nationkey) AS k, toInteger(r.r_regionkey) AS rk
+         ORDER BY k""")
+    assert(viaShared == expected)
+    val ex = intercept[CypherEngine.CypherException](engine.run(
+      """MATCH (n:Nation), (x:Region {r_regionkey: 1})
+         OPTIONAL MATCH p = shortestPath((n)-[:IN_REGION]->(r:Region))
+         WHERE r.r_regionkey = x.r_regionkey
+         RETURN n.n_nationkey AS k, r.r_regionkey AS rk"""))
+    assert(ex.getMessage.contains("x") && ex.getMessage.contains("WITH"))
+  }
+
   test("OPTIONAL MATCH without a shared variable is rejected") {
     assertThrows[CypherEngine.CypherException](
       engine.run(
@@ -1375,13 +1408,20 @@ class CypherSpec extends SparkSpec {
       """MATCH (a:OP {sid: 4}), (b:OP {sid: 1})
          MATCH p = shortestPath((a)-[:STEP*1..5]->(b))
          RETURN length(p) AS len""").collect().isEmpty)
-    // `p IS NOT NULL` filters the unmatched rows (and stays length-only)
-    val matched = e.run(
+    // a WITH after the OPTIONAL MATCH filters the unmatched rows; a WHERE
+    // written right after it is part of the optional pattern, true on
+    // every matched row, so every source keeps its row
+    def srcs(q: String): Seq[Long] = e.run(q).collect().map(_.getLong(0)).toSeq
+    assert(srcs(
+      """MATCH (a:OP)
+         OPTIONAL MATCH p = shortestPath((a)-[:STEP*1..5]->(b:OP {sid: 4}))
+         WITH a, length(p) AS len WHERE len IS NOT NULL
+         RETURN a.sid AS src ORDER BY src""") == Seq(1L, 2L, 3L))
+    assert(srcs(
       """MATCH (a:OP)
          OPTIONAL MATCH p = shortestPath((a)-[:STEP*1..5]->(b:OP {sid: 4}))
          WHERE p IS NOT NULL
-         RETURN a.sid AS src ORDER BY src""").collect().map(_.getLong(0)).toSeq
-    assert(matched == Seq(1L, 2L, 3L))
+         RETURN a.sid AS src ORDER BY src""") == Seq(1L, 2L, 3L, 4L))
     // OPTIONAL composes with allShortestPaths: matched sources keep ALL
     // their min-length paths, unmatched ones keep exactly one null row
     val optAll = e.run(

@@ -387,19 +387,6 @@ object CypherEngine {
   private[cypher] def hasWrites(q: Query): Boolean =
     q.stages.exists(_.writes.nonEmpty) || q.union.exists { case (_, next) => hasWrites(next) }
 
-  // ------------------------------------- unused-endpoint join elision
-
-  /** Spark-conf kill switch for the endpoint-join elision (default on);
-    * CypherSpec's A/B test sets it false to pin the elided plan (fewer
-    * joins) against the joined plan (identical rows).
-    */
-  val ElideUnusedEndpointsKey = "graft.cypher.elideUnusedEndpoints"
-
-
-  // elisionSafeVars / pathUsesNodes / pathUsage live in [[Elision]]
-  // (split r18 — the 2,000-line file rule); the conf key above stays
-  // here as the public gate the specs toggle.
-
   // ------------------------------------------- shortestPath local strategy
 
   /** Edge-row cap for the single-task shortestPath BFS (64k (key, key)
@@ -445,23 +432,6 @@ object CypherEngine {
   private[cypher] def bfsEdgeCap(spark: org.apache.spark.sql.SparkSession): Long =
     if (spark.conf.getOption(LocalPathEdgeCapKey).exists(_.toLong == 0L)) 0L
     else LocalBfsEdgeCap
-
-  /** Frontier/reached-set frames at or under this many rows get an
-    * EXPLICIT `broadcast()` hint in the distributed BFS's per-level
-    * joins (r18). Catalyst cannot infer it: a checkpointed frontier's
-    * LogicalRDD carries the PRE-cut plan's size estimate — derived from
-    * the full edge scan it was cut from — so auto-broadcast never fires
-    * and every level sort-merge-joins the WHOLE edge frame (measured at
-    * sf100: ~35 GB of sort spill PER LEVEL on the 1.4B-row undirected
-    * union, the disk-exhaustion boundary; with the hint a level is one
-    * scan of the edge frame, zero exchanges of it). The row counts are
-    * free — the loop already runs a per-level action on the checkpointed
-    * frontier. 1M rows ≈ tens of MB of (src,dst) pairs, well under any
-    * broadcast limit even with path arrays attached; a closure-dense
-    * frontier above the gate keeps the shuffle path, which is then the
-    * right plan.
-    */
-  private[cypher] val BfsBroadcastFrontierRows = 1000000L
 
   /** Spark-conf key for the loud (never silent) budget on open-bound
     * relationship-unique path enumeration (`[:R*]` outside shortestPath).
@@ -778,8 +748,8 @@ object CypherEngine {
         .map(_.sparkSession).getOrElse(SparkSession.active)
 
     /** Query-wide elision-safe variable set, computed once per execution in
-      * [[top]]. None = elision off (conf kill switch, or a star projection
-      * forces every variable's columns into scope).
+      * [[top]]. None = elision off (a star projection forces every
+      * variable's columns into scope).
       */
     var elidable: Option[Set[String]] = None
 
@@ -963,8 +933,7 @@ object CypherEngine {
       * applies to the whole union and must reference output columns.
       */
     def top(q: Query): DataFrame = {
-      val enabled = spark.conf.getOption(ElideUnusedEndpointsKey).forall(_.toBoolean)
-      elidable = if (enabled) Elision.elisionSafeVars(q) else None
+      elidable = Elision.elisionSafeVars(q)
       topQuery(q)
     }
 

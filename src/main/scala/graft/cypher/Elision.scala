@@ -2,12 +2,12 @@ package graft.cypher
 
 import Ast._
 
-/** Unused-endpoint join elision analysis (split from Compiler.scala,
-  * r18 — the 2,000-line file rule): which pattern variables' endpoint
-  * node-store joins are SEMANTICALLY removable, and which path
+/** Unused-endpoint join elision analysis: which pattern variables'
+  * endpoint node-store joins are SEMANTICALLY removable, and which path
   * variables' node/relationship sequences a query actually reads. The
-  * runtime gate (`CypherEngine.ElideUnusedEndpointsKey`) and the bind
-  * site live with the compiler; this object is the pure AST analysis.
+  * bind site (`InterpPatterns`, which also checks that the traversed
+  * edge types are endpoint-validated) lives with the compiler; this
+  * object is the pure AST analysis.
   */
 private[cypher] object Elision {
   /** Variables whose endpoint node-store join is semantically removable:

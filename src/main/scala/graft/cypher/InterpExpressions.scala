@@ -971,13 +971,15 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
       */
     def project(df: DataFrame, stage0: Projection, ctx: Ctx): (DataFrame, Ctx) = {
       // `WITH * [, items]` desugars to explicit items for every bound node
-      // variable and plain column (sorted for a deterministic column order)
+      // variable, path variable and plain column (sorted for a
+      // deterministic column order)
       val stage =
         if (!stage0.star) stage0
         else {
           val explicit = stage0.items.collect { case Item(Var(v), None) => v }.toSet
           val starItems =
-            ((ctx.labels.keys ++ ctx.multi.keys).toSeq.sorted ++ ctx.plains.toSeq.sorted)
+            ((ctx.labels.keys ++ ctx.multi.keys).toSeq.sorted ++ ctx.paths.toSeq.sorted ++
+              ctx.plains.toSeq.sorted)
               .filterNot(explicit)
               // lifted membership booleans are filter plumbing, never user
               // bindings — star projection must not surface them (they
@@ -986,11 +988,13 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
               .map(v => Item(Var(v), None))
           stage0.copy(items = starItems ++ stage0.items)
         }
-      val carried = stage.items.collect {
-        case Item(Var(v), None) if ctx.labels.contains(v) || ctx.multi.contains(v) => v
-      }
+      // node and path variables carry their column sets under their own
+      // name; everything else is a plain expression column
+      def structural(v: String): Boolean =
+        ctx.labels.contains(v) || ctx.multi.contains(v) || ctx.paths.contains(v)
+      val carried = stage.items.collect { case Item(Var(v), None) if structural(v) => v }
       val plain = stage.items.filterNot {
-        case Item(Var(v), None) => ctx.labels.contains(v) || ctx.multi.contains(v)
+        case Item(Var(v), None) => structural(v)
         case _ => false
       }
       val hasAgg = plain.exists(i => containsAgg(i.expr))
@@ -999,6 +1003,11 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
       val carriedCols: Seq[Column] = carried.flatMap { v =>
         if (ctx.labels.contains(v))
           store.nodes(ctx.labels(v)).columns.map(c => col(s"${v}__$c"))
+        else if (ctx.paths.contains(v))
+          // a path's length, plus the node and per-hop type sequences
+          // when the query reads them (Elision.pathUsage)
+          Seq("len", "nodes", "rels").map(f => s"${v}__$f")
+            .filter(df.columns.contains).map(col)
         else
           // multi-label: carry the superset of the labels' columns plus the
           // per-row label tag (identity under aggregation = label + key)
@@ -1022,8 +1031,10 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
         ctx.labels.filter { case (v, _) => carried.contains(v) },
         Map.empty,
         plain.map(outName).toSet,
-        Set.empty,
+        ctx.paths.filter(carried.contains),
         plain.filter(i => elemIsString(i.expr, ctx, Set.empty)).map(outName).toSet,
+        pathRels = ctx.pathRels.filter { case (v, _) => carried.contains(v) },
+        pathRelSeqs = ctx.pathRelSeqs.filter(carried.contains),
         multi = ctx.multi.filter { case (v, _) => carried.contains(v) },
         strs = plain.filter(i => isStringTyped(i.expr, ctx)).map(outName).toSet,
         times = plain.filter(i => isTimeTyped(i.expr, ctx)).map(outName).toSet,

@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.{EdgeType, GraphStore, GraphWriter, NodeType}
+import graft.graph.{EdgeType, GraphAnalytics, GraphStore, GraphWriter, NodeType}
 import Ast._
 import CypherEngine._
 import LocalBfs._
 
 /** shortestPath / allShortestPaths half of the [[CypherEngine]]
-  * interpreter (split from Compiler.scala in r14 — no behavior change):
-  * endpoint-disjunction decomposition, the seeded multi-source BFS
-  * (distributed and single-task variants), and OPTIONAL attachment.
+  * interpreter: endpoint-disjunction decomposition, the seeded
+  * multi-source BFS (the single-task kernel or the distributed
+  * [[GraphAnalytics.bfsFrames]] loop), and OPTIONAL attachment.
   */
 private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
 
@@ -23,15 +23,15 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       * between each endpoint pair, as a multi-source BFS over the edge set:
       * level n's frontier is level n-1's frontier joined one hop forward,
       * anti-joined against everything already reached (so each pair is
-      * found at its minimum distance and never re-expanded — the same
-      * frontier discipline as [[graft.graph.GraphAnalytics]]'s Pregel BFS,
-      * expressed as DataFrame joins because the source set here is every
-      * bound `a`, not one root). Each frontier is eagerly checkpointed:
-      * level n is read twice (expansion + anti join) and the plan would
-      * otherwise double per level; the final distance set is checkpointed
-      * too so the scratch edge cache and frontier blocks are released per
-      * query instead of accumulating across a JVM's lifetime. Bounds are
-      * capped like var-length patterns, so depth is explicit in the plan.
+      * found at its minimum distance and never re-expanded — the loop
+      * [[GraphAnalytics.bfsFrames]], which [[GraphAnalytics.bfs]] runs
+      * from one root and this runs from every bound `a`). Each frontier
+      * is eagerly checkpointed: level n is read twice (expansion + anti
+      * join) and the plan would otherwise double per level; the final
+      * distance set is checkpointed too so the scratch edge cache and
+      * frontier blocks are released per query instead of accumulating
+      * across a JVM's lifetime. Bounds are capped like var-length
+      * patterns, so depth is explicit in the plan.
       */
     def shortestPathRead(state: Option[(DataFrame, Ctx)], pv: String,
         path: PathPat, all: Boolean, needNodes: Boolean,
@@ -436,13 +436,14 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
 
     /** The one local/distributed switch of the shortestPath family, shared
       * by [[distDf]] and [[heteroDistDf]]. Same philosophy as
-      * [[graft.graph.GraphAnalytics.LocalEdgeThreshold]]: the distributed
-      * BFS pays ~2 Spark jobs per level (eager checkpoint + emptiness
-      * probe), so a dimension-sized graph spends its whole wall-time on job
-      * scheduling, not compute. Under the edge cap AND the seed×edge work
-      * budget, and for the key types [[localDistKey]] admits, the whole BFS
-      * runs inside ONE task (the sizing counts are two tiny jobs; a 100 TB
-      * edge store fails the edge cap and takes the distributed path).
+      * [[GraphAnalytics.LocalEdgeThreshold]]: the distributed BFS
+      * ([[GraphAnalytics.bfsFrames]]) pays ~2 Spark jobs per level (eager
+      * checkpoint + emptiness probe), so a dimension-sized graph spends
+      * its whole wall-time on job scheduling, not compute. Under the edge
+      * cap AND the seed×edge work budget, and for the key types
+      * [[localDistKey]] admits, the whole BFS runs inside ONE task (the
+      * sizing counts are two tiny jobs; a 100 TB edge store fails the edge
+      * cap and takes the distributed path).
       * `edgeMult` scales the member types' stored edge counts to the rows
       * of `e0` (2 under an undirected union), so the store's memoized
       * per-type counts replace an O(edges) sizing scan per query.
@@ -468,8 +469,8 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
           try localDist(e0, seeds, hi, keyType, keepAll, withPath, withRels)
             .localCheckpoint(true)
           catch { case t: Throwable if isLocalPathsOverBudget(t) =>
-            bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels) }
-        else bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels)
+            GraphAnalytics.bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels) }
+        else GraphAnalytics.bfsFrames(e0, seeds, lo, hi, keepAll, withPath, withRels)
       seeds.unpersist(false)
       out
     }
@@ -592,222 +593,21 @@ private[cypher] trait InterpPaths { self: CypherEngine.Interp =>
       }
     }
 
-    /** Per-compilation BFS memo (r14; closes the r13 verdict's directive
-      * #3): the per-label branches of an endpoint disjunction run the
-      * SAME seeded BFS and differ only in the far-endpoint label filter
-      * applied AFTER it, so the (eagerly checkpointed) distance frame is
-      * shared instead of recomputed per branch — q128's two branches, and
-      * q131/q132's, now pay for one BFS. Keyed on every BFS parameter
-      * plus the seed plan's structural identity (the decomposition
-      * rebuilds the head frame from the same enclosing state, so the
-      * canonicalized plans are equal) and the store's object identity (a
-      * mid-statement write builds a new store, invalidating naturally).
-      * Values are checkpointed frames — reuse is a block read, not a
-      * recompute.
+    /** Per-compilation BFS memo: the per-label branches of an endpoint
+      * disjunction run the SAME seeded BFS and differ only in the
+      * far-endpoint label filter applied AFTER it, so the (eagerly
+      * checkpointed) distance frame is shared instead of recomputed per
+      * branch — q128's two branches, and q131/q132's, pay for one BFS.
+      * Keyed on every BFS parameter plus the seed plan's structural
+      * identity (the decomposition rebuilds the head frame from the same
+      * enclosing state, so the canonicalized plans are equal) and the
+      * store's object identity (a mid-statement write builds a new store,
+      * invalidating naturally). Values are checkpointed frames — reuse is
+      * a block read, not a recompute.
       */
     val bfsMemo = scala.collection.mutable.Map[Any, DataFrame]()
     def bfsMemoized(key: Any)(build: => DataFrame): DataFrame =
       bfsMemo.getOrElseUpdate(key, build)
-
-    /** The distributed BFS shared by [[distDf]] and [[heteroDistDf]]:
-      * multi-source, frontier-disciplined, path-carrying. `e0` is a
-      * `(__ds, __dd)` edge frame — duplicate edge rows are tolerated (the
-      * first frontier is distinct'd after the seed semi-join, every later
-      * level through oneHop's groupBy) — and `seeds` a `__seed` frame of
-      * the same key type (scalar or tagged struct — both join/group/min
-      * identically). Returns an eagerly checkpointed `(__ds, __dd, __len,
-      * __path)` frame, so callers may unpersist the inputs immediately.
-      */
-    def bfsFrames(e0: DataFrame, seeds: DataFrame,
-        lo: Int, hi: Int, keepAll: Boolean, withPath: Boolean,
-        withRels: Boolean = false): DataFrame = {
-      // the per-hop type sequence only exists alongside the node path
-      // (relationships(p) reads both); callers guarantee the pairing
-      require(!withRels || withPath, "withRels requires withPath")
-      // per-level lineage cuts ride the shared policy: localCheckpoint by
-      // default, every k-th cut reliable when graft.checkpoint.dir is set
-      // (fault tolerance on preemptible clusters — see GraphAnalytics)
-      val ck = new graft.graph.GraphAnalytics.IterCheckpointer(e0.sparkSession)
-      // one hop forward. Frontier discipline per mode:
-      //  - shortestPath + path read: keep ONE (lexicographically minimal)
-      //    path per (src, dst) — frontier bounded by the pair closure;
-      //  - shortestPath, length-only: no __path at all — the frontier rows
-      //    are (src, dst) pairs, the narrowest possible shuffle;
-      //  - allShortestPaths: keep EVERY distinct path per pair (the rows
-      //    ARE the result multiplicity). Fan-out is the shortest-path
-      //    count, still pruned by the reached-pair anti join — a level
-      //    never extends into already-reached pairs, so no path revisits a
-      //    node (its prefix would have reached it earlier).
-      def oneHop(from: DataFrame,
-          reached: Option[DataFrame] = None): DataFrame = {
-        val stepped = from.join(
-          e0.withColumnRenamed("__ds", "__m").withColumnRenamed("__dd", "__dd2"),
-          col("__dd") === col("__m"))
-        // When the reached-pair set is supplied, anti-join it BEFORE the
-        // per-pair dedup/agg (r12): in an undirected graph most stepped
-        // rows walk straight back into already-reached pairs (every
-        // level-2 row can revisit its seed), and filtering them first
-        // keeps their wide path/rels structs out of the min-struct
-        // aggregation. Both operations key on (__ds, __dd), so a
-        // shuffle-based anti's exchange is reused by the groupBy — same
-        // shuffle count, strictly less aggregated data — and a
-        // broadcast anti filters map-side before the only shuffle.
-        // Pair-equivalent to anti-joining after the agg: the agg never
-        // creates pairs, only collapses rows within one, so the removed
-        // rows all belong to removed pairs (q105 −13% / q85 −10% warm at
-        // sf0.1 against the post-agg position — BASELINE.md r12 A/B).
-        val anti: DataFrame => DataFrame = reached match {
-          case Some(r) => df => df.join(r, Seq("__ds", "__dd"), "left_anti")
-          case None => identity
-        }
-        if (!withPath)
-          anti(stepped.select(col("__ds"), col("__dd2").as("__dd"))).distinct()
-        else if (withRels) {
-          // append the hop's edge type alongside the node; the single-path
-          // prune picks the lexicographic-min (path, type-seq) pair —
-          // deterministic even when parallel edges of different types
-          // connect the same node pair
-          val ext = anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
-            concat(col("__path"), array(col("__dd2"))).as("__path"),
-            concat(col("__rels"), array(col("__rt"))).as("__rels")))
-          if (keepAll) ext.distinct()
-          else ext.groupBy("__ds", "__dd")
-            .agg(min(struct(col("__path"), col("__rels"))).as("__m"))
-            .select(col("__ds"), col("__dd"),
-              col("__m.__path").as("__path"), col("__m.__rels").as("__rels"))
-        }
-        else if (keepAll)
-          anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
-            concat(col("__path"), array(col("__dd2"))).as("__path"))).distinct()
-        else
-          anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
-            concat(col("__path"), array(col("__dd2"))).as("__path")))
-            .groupBy("__ds", "__dd").agg(min(col("__path")).as("__path"))
-      }
-      // first-hop frontier restricted to the bound sources, distinct'd
-      // HERE — on the seed-bounded frontier, not the full edge frame
-      // (intermediate hops still traverse every edge)
-      val e0s = e0.join(seeds, col("__ds") === col("__seed"), "left_semi")
-        .distinct()
-      // eagerly checkpointed: the first frontier is read several times
-      // (level-2 expansion, the reached-set anti join, the result union)
-      // and its un-checkpointed plan still carries the full edge scan —
-      // Catalyst can't see the seed restriction made it small, so level 2
-      // would sort-merge join, shuffling the WHOLE edge frame, instead of
-      // broadcasting the frontier (measured at sf1: q85 13.5 -> ~6 s warm)
-      val e0p = {
-        // fold the edge-type column into the level-1 type sequence; without
-        // the reduce a pair connected by TWO member types would enter the
-        // single-path mode twice (distinct saw distinct __rt values)
-        val w = if (!withRels) e0s
-          else e0s.withColumn("__rels", array(col("__rt"))).drop("__rt")
-        val p0 = if (withPath)
-          w.withColumn("__path", array(col("__ds"), col("__dd"))) else w
-        val p1 = if (withRels && !keepAll)
-          p0.groupBy("__ds", "__dd")
-            .agg(min(struct(col("__path"), col("__rels"))).as("__m"))
-            .select(col("__ds"), col("__dd"),
-              col("__m.__path").as("__path"), col("__m.__rels").as("__rels"))
-        else p0
-        ck.cut(p1)
-      }
-      // size-gated broadcast (r18): the checkpointed frontier's LogicalRDD
-      // keeps the PRE-cut plan's size estimate, so Catalyst never
-      // auto-broadcasts it and each level would sort-merge-shuffle the
-      // whole edge frame — see [[CypherEngine.BfsBroadcastFrontierRows]]
-      def gated(df: DataFrame, rows: Long): DataFrame =
-        if (rows <= BfsBroadcastFrontierRows) broadcast(df) else df
-      if (lo == 1) {
-        var dist = e0p.withColumn("__len", lit(1L))
-        var distRows = e0p.count()
-        var frontier = e0p
-        var frontierRows = distRows
-        var n = 2
-        var exhausted = frontierRows == 0
-        // an open upper bound ([[Parser.Unbounded]]) runs until the
-        // frontier exhausts — guaranteed finite because every level must
-        // reach at least one new (src, dst) pair of the finite closure
-        while (n <= hi && !exhausted) {
-          // localCheckpoint (eager) truncates lineage: each level's anti
-          // join references the whole reached-set union, so without the cut
-          // the logical plan doubles per level and planning itself OOMs
-          // long before the data does. The checkpoint also lets the loop
-          // stop as soon as a frontier comes back empty.
-          val from = gated(frontier, frontierRows)
-          val reached = gated(dist.select("__ds", "__dd"), distRows)
-          val fresh = ck.cut(oneHop(from, Some(reached)))
-          val freshRows = fresh.count()
-          if (freshRows == 0) exhausted = true
-          else {
-            dist = dist.unionByName(fresh.withColumn("__len", lit(n.toLong)))
-            distRows += freshRows
-            frontier = fresh
-            frontierRows = freshRows
-          }
-          n += 1
-        }
-        // Cut the result loose from the scratch state: checkpointing `dist`
-        // truncates its lineage, so the caller can unpersist e0 (repeated
-        // shortestPath queries in one JVM would otherwise each pin an edge
-        // copy forever) and the per-level frontier checkpoint blocks lose
-        // their last reference, letting the ContextCleaner reclaim them.
-        dist.localCheckpoint(true)
-      } else {
-        // a lower bound > 1 asks for the shortest path NO SHORTER than lo —
-        // pairs whose true distance is below lo must still surface at their
-        // shortest admissible length, so BFS's reached-set pruning doesn't
-        // apply; enumerate each admissible length instead (walk semantics,
-        // per-level distinct keeps growth bounded by the closure size).
-        // Walk enumeration needs the path even in length-only mode when
-        // keepAll (multiplicity); plain length-only still enumerates pairs.
-        // per-level checkpoint + empty-frontier early exit: levels would
-        // otherwise chain join/groupBy stages into one compounding plan,
-        // and a frontier that dies (DAG exhausted) would still run the
-        // remaining levels as empty jobs
-        var cur = e0p
-        var curRows = cur.count()
-        var exhausted = curRows == 0
-        for (_ <- 2 to lo if !exhausted) {
-          cur = ck.cut(oneHop(gated(cur, curRows)))
-          curRows = cur.count()
-          exhausted = curRows == 0
-        }
-        var dist = cur.withColumn("__len", lit(lo.toLong))
-        for (n <- lo + 1 to hi if !exhausted) {
-          cur = ck.cut(oneHop(gated(cur, curRows)))
-          curRows = cur.count()
-          if (curRows == 0) exhausted = true
-          else dist = dist.unionByName(cur.withColumn("__len", lit(n.toLong)))
-        }
-        if (keepAll) {
-          // all rows at each pair's minimum admissible length
-          val mins = dist.groupBy("__ds", "__dd").agg(min(col("__len")).as("__minl"))
-          dist.join(mins, Seq("__ds", "__dd"))
-            .filter(col("__len") === col("__minl"))
-            .drop("__minl")
-            .localCheckpoint(true)
-        } else if (!withPath) {
-          dist.groupBy("__ds", "__dd").agg(min(col("__len")).as("__len"))
-            .localCheckpoint(true)
-        } else if (withRels) {
-          dist.groupBy("__ds", "__dd")
-            .agg(min(struct(col("__len"), col("__path"), col("__rels"))).as("__m"))
-            .select(col("__ds"), col("__dd"),
-              col("__m.__len").as("__len"), col("__m.__path").as("__path"),
-              col("__m.__rels").as("__rels"))
-            .localCheckpoint(true)
-        } else {
-          // min(struct) picks the shortest admissible length and its
-          // lexicographic-min path in one orderable aggregate
-          dist.groupBy("__ds", "__dd")
-            .agg(min(struct(col("__len"), col("__path"))).as("__m"))
-            .select(col("__ds"), col("__dd"),
-              col("__m.__len").as("__len"), col("__m.__path").as("__path"))
-            .localCheckpoint(true)
-        }
-      }
-    }
-
 
     /** Attach one OPTIONAL MATCH clause: assemble its paths independently
       * (seeded with the enclosing labels), filter them by the clause's

@@ -819,15 +819,15 @@ private[cypher] trait InterpPatterns { self: CypherEngine.Interp =>
           (hop, node, nodeVar)
         }
 
-        // ---- endpoint-join elision (gated on ElideUnusedEndpointsKey):
-        // an endpoint the query never reads (elision-safe or anonymous, no
-        // inline props) whose traversed edge types are ALL endpoint-
-        // validated needs no node-store join — the edge key column IS the
-        // binding (validation guarantees the join would match exactly once
-        // per row: every key resolves, node stores are key-unique by
-        // builder/writer construction). At scale that join is a shuffle of
-        // the edge store against a node store, spent validating what the
-        // [[GraphStore.validatedEdges]] flag already guarantees.
+        // ---- endpoint-join elision: an endpoint the query never reads
+        // (elision-safe or anonymous, no inline props) whose traversed edge
+        // types are ALL endpoint-validated needs no node-store join — the
+        // edge key column IS the binding (validation guarantees the join
+        // would match exactly once per row: every key resolves, node stores
+        // are key-unique by builder/writer construction). At scale that
+        // join is a shuffle of the edge store against a node store, spent
+        // validating what the [[GraphStore.validatedEdges]] flag already
+        // guarantees.
         def elidableNode(pat: NodePat, v: String): Boolean =
           pat.props.isEmpty && elidable.exists(s => pat.variable.isEmpty || s(v))
         def hopValidated(h: ResolvedHop): Boolean =

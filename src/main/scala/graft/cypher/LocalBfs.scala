@@ -13,8 +13,8 @@ import CypherEngine.{CypherException, UniqueWalkMaxPathsKey}
 /** Single-task local BFS / walk-enumeration kernels: the small-graph
   * regime of the shortestPath family and of open-bound var-length walks.
   * Each question has two regimes, chosen from the measured edge count:
-  * one kernel here, run inside ONE task, and one distributed loop on the
-  * interpreter ([[InterpPaths]] `bfsFrames`, and the per-level loop of
+  * one kernel here, run inside ONE task, and one distributed loop
+  * ([[graft.graph.GraphAnalytics.bfsFrames]], and the per-level loop of
   * [[InterpPatterns]] `uniqueWalkClosure`). The distributed loops are the
   * reference the kernels must match row for row (LocalBfsFastSpec). The
   * kernels live on this OBJECT, not the Interp traits: their
@@ -26,15 +26,15 @@ import CypherEngine.{CypherException, UniqueWalkMaxPathsKey}
   */
 private[cypher] object LocalBfs {
 
-  /** Materialized-row budget inside [[localDist]]'s keepAll branch
-    * (ADVICE r15 medium): the edge cap and the seeds×edges work
-    * budget bound the TRAVERSAL, but allShortestPaths multiplicity — the
-    * number of distinct minimum-length (path, type-sequence) pairs — is
-    * unbounded by either (parallel edge types compound per hop), and those
-    * rows accumulate in ONE task's heap. Over budget the kernel throws
+  /** Materialized-row budget inside [[localDist]]'s keepAll branch: the
+    * edge cap and the seeds×edges work budget bound the TRAVERSAL, but
+    * allShortestPaths multiplicity — the number of distinct
+    * minimum-length (path, type-sequence) pairs — is unbounded by either
+    * (parallel edge types compound per hop), and those rows accumulate
+    * in ONE task's heap. Over budget the kernel throws
     * [[LocalPathsOverBudget]]; the caller catches it (cause-chain scan —
     * Spark wraps task failures) and re-runs the SAME BFS on the
-    * distributed, spillable [[graft.cypher]] bfsFrames shape.
+    * distributed, spillable [[graft.graph.GraphAnalytics.bfsFrames]] loop.
     */
   private[cypher] val LocalKeepAllRowBudget: Long = 2L * 1000 * 1000
   final class LocalPathsOverBudget(msg: String) extends RuntimeException(msg)
@@ -320,7 +320,7 @@ private[cypher] object LocalBfs {
     * shortestPath planner builds whose grouping and ordering the kernel
     * reproduces bit for bit — integral types, strings, and the
     * hetero tag struct `(__l: string, __k: integral|string)`. Floating,
-    * date and decimal keys stay on `bfsFrames`: NaN and -0.0 grouping
+    * date and decimal keys stay on `GraphAnalytics.bfsFrames`: NaN and -0.0 grouping
     * there is Spark's, and the kernel has not been held to it.
     */
   private[cypher] def localDistKey(dt: DataType): Boolean = {
@@ -553,7 +553,7 @@ private[cypher] object LocalBfs {
     * [[localDistKey]] admits. Edges and seeds arrive in one task (never
     * through the driver); the BFS is level-synchronous with
     * per-destination lexicographic-min path pruning, row for row the
-    * distributed `bfsFrames` loop's `groupBy(min(__path))` + anti-join
+    * distributed `GraphAnalytics.bfsFrames` loop's `groupBy(min(__path))` + anti-join
     * discipline (LocalBfsFastSpec pins it across every shape).
     */
   def localDist(e0: DataFrame, seeds: DataFrame, hi: Int,

@@ -41,9 +41,9 @@ object GraphAnalytics {
 
   /** Conf key: when set to a (fault-tolerant, e.g. HDFS) directory, every
     * [[CheckpointIntervalKey]]-th lineage cut in an iterative loop
-    * (dfBfs / contractComponents / dfComponents here, bfsFrames in the
-    * Cypher compiler) uses a RELIABLE `checkpoint()` into it instead of
-    * `localCheckpoint`. Local checkpoints live in executor block storage:
+    * ([[bfsFrames]], [[contractComponents]], [[jumpComponents]], and the
+    * Cypher var-length walk) uses a RELIABLE `checkpoint()` into it
+    * instead of `localCheckpoint`. Local checkpoints live in executor block storage:
     * losing ONE executor kills the whole iterative job, and the pinned
     * blocks block dynamic allocation — on a preemptible 100 TB cluster
     * the reliable cut bounds recovery to the interval. Unset (the
@@ -68,6 +68,8 @@ object GraphAnalytics {
       spark.conf.getOption(CheckpointIntervalKey).map(_.toInt).getOrElse(5))
     private var n = 0
     dir.foreach(spark.sparkContext.setCheckpointDir)
+    /** Lineage cuts taken so far (a loop's round count, for its specs). */
+    private[graft] def cuts: Int = n
     /** Cut lineage and firewall the preserved statistics (see
       * [[org.apache.spark.sql.graft.StatsFirewall]]): checkpoints inherit
       * the origin plan's size estimate, and inside a loop those estimates
@@ -90,9 +92,8 @@ object GraphAnalytics {
       * read the frame again: a localCheckpoint's blocks ARE its data (the
       * lineage is truncated), so a released frame throws on any later
       * access. The cacheManager never registered these blocks
-      * (`unpersist()` on the Dataset is a no-op — the r15 ADVICE finding
-      * on membership frames), so we drop them via the underlying RDD of
-      * the cut's LogicalRDD plan. Without this, a long iterative job
+      * (`unpersist()` on the Dataset is a no-op), so we drop them via the
+      * underlying RDD of the cut's LogicalRDD plan. Without this, a long iterative job
       * accumulates one full label-frame per cut and the per-round cost
       * drifts upward with block-manager pressure — measured on the sf100
       * q33 profile: prop 2 s → 19 s and jump 0.8 s → 18.7 s by round 18.
@@ -108,23 +109,6 @@ object GraphAnalytics {
       case _ => ()
     }
   }
-
-  /** Delta-iteration rounds [[dfComponents]] runs before escalating to
-    * pointer-doubling ([[jumpComponents]]). The delta iteration is
-    * O(component diameter) rounds with a SHRINKING frontier — cheapest on
-    * the bounded-diameter graphs FK schemas produce (3-5 rounds). A
-    * chain-shaped graph (event sequences, linked logs) would run
-    * thousands of rounds; once the round count passes this bound the
-    * structure is provably deep, and pointer-doubling finishes in
-    * O(log n) further rounds regardless of diameter.
-    */
-  val CcEscalateRoundsDefault = 10
-
-  /** Observability for tests: (delta rounds, pointer-doubling
-    * rounds) of the last [[dfComponents]] invocation in this JVM.
-    */
-  private[graft] val LastCcRounds =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 
   /** Bytes-per-row bound used by the plan-stats prescreen in
     * [[underThreshold]]: an edge row is two Longs (~16 B data, ~48 B with
@@ -177,16 +161,16 @@ object GraphAnalytics {
   }
 
   /** Contraction cap before handing the (already much smaller) graph to
-    * [[dfComponents]]: hook+shortcut at least halves a path per level and
+    * [[jumpComponents]]: hook+shortcut at least halves a path per level and
     * collapses stars outright, so 40 levels covers any 2^40-node chain;
     * real FK-derived graphs measure 1-3 levels. A belt-and-braces bound,
     * not a tuning knob.
     */
   private val MaxContractionLevels = 40
 
-  /** Contraction connected components — the distributed default since
-    * r16. The r15-era label propagation kept the FULL label and edge
-    * frames in play every round: the sf100 probe measured q33's sampled
+  /** Contraction connected components, the distributed strategy. Label
+    * propagation keeps the FULL label and edge frames in play every round
+    * for O(diameter) rounds: the sf100 probe measured q33's sampled
     * bipartite graph (6.2M edges, first time over [[LocalEdgeThreshold]])
     * at 1153 s — ~50+ rounds of full-size joins whose per-round cost also
     * drifted 2 s → 19 s on accumulated checkpoint blocks. Contraction
@@ -205,14 +189,14 @@ object GraphAnalytics {
     * customer-customer graph under the local threshold — one distributed
     * level, then single-task union-find. Generally: a path halves per
     * level, a star collapses in ≤2, so levels = O(log n) with each level
-    * cheaper than the last — vs O(diameter · full-size) for propagation.
+    * cheaper than the last.
     *
     * Labels compose back down the levels: component(absorbed) =
     * component(root it hooked to), one join per level (plus (root, root)
     * rows for components that contracted away entirely). Superseded
     * frames are released as soon as the next cut materializes, so block
     * storage stays O(current graph + maps), not O(rounds). Output
-    * matches [[localComponents]] / [[dfComponents]] / GraphX exactly:
+    * matches [[localComponents]] / [[jumpComponents]] / GraphX exactly:
     * (node, component = min id in the component) for every node with at
     * least one edge, self-loop-only nodes included.
     */
@@ -268,16 +252,11 @@ object GraphAnalytics {
     }
     // finish: union-find in one task under the threshold; if contraction
     // ever stalls against MaxContractionLevels the graph is still far
-    // smaller than the input — hand it to the propagation path
+    // smaller than the input — pointer-doubling finishes it on any diameter
     var comp =
       if (gEdges == 0) Seq.empty[(Long, Long)].toDF("node", "component")
-      else if (gEdges > floor) dfComponents(spark, g)
+      else if (gEdges > floor) jumpComponents(g, ck)
       else localComponents(spark, g)
-    // an escalated finish ran dfComponents, whose (delta, jump) counts
-    // just landed in LastCcRounds — fold them into this run's report
-    // instead of clobbering them with zeros
-    val (finishDelta, finishJump) =
-      if (gEdges > floor) LastCcRounds.get() else (0, 0)
     // compose labels back down: deepest level first, so every parent is
     // either already labeled or the (fully contracted away) root itself
     maps.foreach { m =>
@@ -292,95 +271,38 @@ object GraphAnalytics {
       comp = ck.cut(comp.unionByName(resolved).unionByName(roots))
       ck.release(prev)
     }
-    // nodes whose only edges were self-loops exist in the propagation and
-    // local strategies' output (labeled by themselves) — match them
+    // nodes whose only edges were self-loops exist in the local strategy's
+    // output (labeled by themselves) — match them
     val selfOnly = edges.filter(col("src") === col("dst"))
       .select(col("src").as("node")).distinct()
       .join(comp, Seq("node"), "left_anti")
       .select(col("node"), col("node").as("component"))
-    val out = comp.unionByName(selfOnly)
-    LastCcRounds.set((level + finishDelta, finishJump))
-    out
+    comp.unionByName(selfOnly)
   }
 
-  /** Min-label propagation CC as DataFrame joins — the same algorithm
-    * GraphX's `connectedComponents()` runs (so identical round counts:
-    * O(component diameter)), with the per-round frontier discipline of
-    * [[dfBfs]]: labels are localCheckpointed each round so round n+1's
-    * plan starts from materialized labels, and execution stays in
-    * Tungsten memory (no VertexPartition caching / RDD GC churn — the
-    * same stability argument that made the DataFrame BFS the distributed
-    * default; Pregel measured a 6-10x first-run spread in a loaded
-    * JVM). Labels converge to the min vertex id per component, matching
-    * [[localComponents]] and GraphX exactly. `escalateAfter` = 0 runs
-    * pointer-doubling from round 1 (the specs' lever).
+  /** Pointer-doubling (label-shortcutting) connected components over an
+    * `(src, dst)` edge frame: each round runs one neighbor-min
+    * propagation and one pointer JUMP (`l ← l(l)`, a self-join of the
+    * label frame on the label column). The jump halves label-chain
+    * depth, so convergence is O(log n) rounds on ANY diameter — the
+    * Shiloach-Vishkin discipline, vs min-label propagation's
+    * O(diameter). Each round joins the FULL label set twice, which is why
+    * this only finishes a contraction that stalled at
+    * [[MaxContractionLevels]] (chain-shaped data) rather than running
+    * first. Invariant: every label is a node id inside its own component
+    * and only decreases, so the fixpoint (labels constant across every
+    * edge and stable under the jump) is the component-min id — identical
+    * output to contraction, union-find, and GraphX. `ck` is the caller's
+    * loop checkpointer; this releases only the label frames it cut.
     */
-  private[graph] def dfComponents(spark: SparkSession, edges: DataFrame,
-      escalateAfter: Int = CcEscalateRoundsDefault): DataFrame = {
-    val ck = new IterCheckpointer(spark)
+  private[graph] def jumpComponents(edges: DataFrame, ck: IterCheckpointer): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val adj = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     var labels = ck.cut(adj.select(col("src").as("node")).distinct()
       .withColumn("component", col("node")))
-    // Delta iteration: a node's label can only drop via a neighbor whose
-    // label dropped last round, so only CHANGED labels re-propagate.
-    // Every value a node ever holds is broadcast to its neighbors the
-    // round after it is adopted (all nodes are active in round 1), so the
-    // fixpoint equals full re-propagation — but late rounds join a
-    // shrinking frontier against the edge frame instead of every label
-    // (the same frontier economics as [[dfBfs]]; GraphX's Pregel skips
-    // non-messaged vertices the same way). The round count is O(component
-    // diameter); past `escalateAfter` rounds the structure is provably
-    // deep and the loop hands its labels to [[jumpComponents]], which
-    // finishes in O(log n) rounds on any diameter.
     var prevCut = labels
-    var active = labels
-    var rounds = 0
-    while (!active.isEmpty) {
-      if (rounds >= escalateAfter) {
-        LastCcRounds.set((rounds, 0))
-        return jumpComponents(adj, labels, ck)
-      }
-      rounds += 1
-      val cand = adj.join(active, col("src") === col("node"))
-        .groupBy(col("dst").as("__n")).agg(min(col("component")).as("__cand"))
-      val next = ck.cut(labels.join(cand, col("node") === col("__n"), "left")
-        .select(col("node"), col("component").as("__old"),
-          least(col("component"), coalesce(col("__cand"), col("component")))
-            .as("component")))
-      active = next.filter(col("component") < col("__old")).drop("__old")
-      labels = next.drop("__old")
-      // `next` is materialized; nothing references the previous round's
-      // cut any more — drop its blocks so round cost stays flat
-      ck.release(prevCut); prevCut = next
-    }
-    LastCcRounds.set((rounds, 0))
-    labels
-  }
-
-  /** Pointer-doubling (label-shortcutting) connected components: each
-    * round runs one neighbor-min propagation and one pointer JUMP
-    * (`l ← l(l)`, a self-join of the label frame on the label column).
-    * The jump halves label-chain depth, so convergence is O(log n) rounds
-    * on ANY diameter — the Shiloach-Vishkin discipline, vs min-label
-    * propagation's O(diameter). Each round joins the FULL label set twice
-    * (no shrinking frontier), which is why this is the escalation path
-    * rather than the default: FK-derived graphs converge in 3-5 delta
-    * rounds, and only chain-shaped data (event sequences, linked logs)
-    * ever reaches it. Invariant: every label is a node id inside its own
-    * component and only decreases, so the fixpoint (labels constant
-    * across every edge and stable under the jump) is the component-min
-    * id — identical output to the delta iteration, union-find, and
-    * GraphX.
-    */
-  private[graph] def jumpComponents(adj: DataFrame, labels0: DataFrame,
-      ck: IterCheckpointer): DataFrame = {
-    var labels = labels0
-    var prevCut = labels0
-    var rounds = 0
     var changed = 1L
     while (changed > 0) {
-      rounds += 1
       val nbr = adj.join(labels, col("src") === col("node"))
         .groupBy(col("dst").as("__n")).agg(min(col("component")).as("__c"))
       val l1 = ck.cut(labels.join(nbr, col("node") === col("__n"), "left")
@@ -398,7 +320,6 @@ object GraphAnalytics {
       changed = l2.filter(col("component") < col("__old")).count()
       labels = l2.drop("__old")
     }
-    LastCcRounds.set((LastCcRounds.get()._1, rounds))
     labels
   }
 
@@ -432,81 +353,260 @@ object GraphAnalytics {
       .toDF("node", "component")
   }
 
-  /** BFS hop distance from `source`, bounded at `maxDepth` hops. Output:
-    * (node: Long, dist: Int) for reached nodes only. Adaptive like
-    * [[connectedComponents]]: single-task adjacency BFS under the local
-    * threshold, level-synchronous DataFrame BFS ([[dfBfs]]) above it.
-    * The DataFrame path replaced GraphX Pregel as the distributed
-    * strategy: it stays in Tungsten memory end-to-end (no VertexPartition
-    * caching, no RDD GC churn — the source of Pregel's 10-75 s q34
-    * first-run spread at sf1), and per-level scans of the pruned edge
-    * frame are the normal distributed BFS shape at cluster scale.
+  /** BFS hop distance from `source`, bounded at `maxDepth` hops, over the
+    * undirected graph. Output: (node: Long, dist: Int) for reached nodes
+    * only; the source is emitted at dist 0 iff it appears in some edge
+    * (GraphX likewise only materializes vertices present in the edge
+    * set). Adaptive like [[connectedComponents]]: single-task adjacency
+    * BFS under the local threshold, the frontier loop [[bfsFrames]]
+    * above it — the loop that also serves Cypher's shortestPath, seeded
+    * with the one source over the doubled edge frame in its length-only
+    * mode. Both strategies return an eagerly materialized frame, so a
+    * caller may release its edge cache as soon as this returns (q34 does).
     */
   def bfs(spark: SparkSession, edges: DataFrame, source: Long, maxDepth: Int,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
+    import spark.implicits._
     if (underThreshold(edges, localThreshold))
-      // eager, like every dfBfs level: the local kernel's plan references
-      // the INPUT edge frame (a lazy mapPartitions), so a caller that
-      // releases its edge cache after bfs() returns — q34 does, r18
-      // verdict #5 — would silently re-pay the whole ingest on the first
-      // result action (measured at sf0.1: q34 headline 3.13 s vs its
-      // ingest+bfs phases 1.67 s; the gap was this uncached re-derive).
-      // Bounded: the local path only admits <= localThreshold edge rows,
-      // so the checkpointed result is at most ~2x that many (node, dist)
-      // pairs — tens of MB.
+      // the local kernel's plan references the INPUT edge frame (a lazy
+      // mapPartitions): without the cut, a caller that released its edge
+      // cache would silently re-pay the whole ingest on the first result
+      // action (measured at sf0.1: q34 3.13 s vs 1.67 s for its ingest+bfs
+      // phases). Bounded: at most ~2x localThreshold (node, dist) pairs.
       return localBfs(spark, edges, source, maxDepth).localCheckpoint(true)
-    dfBfs(spark, edges, source, maxDepth)
+    val e = edges.select(col("src").as("__ds"), col("dst").as("__dd"))
+    val dist = bfsFrames(
+      e.unionByName(e.select(col("__dd").as("__ds"), col("__ds").as("__dd"))),
+      Seq(source).toDF("__seed"), lo = 1, hi = math.max(maxDepth, 1),
+      keepAll = false, withPath = false)
+    // the source has an edge iff level 1 is non-empty; pairs that walk
+    // back to it (a self-loop at level 1, any cycle later) are no distance
+    val present = dist.limit(1).select(lit(source).as("node"), lit(0).as("dist"))
+    if (maxDepth < 1) present
+    else dist.filter(col("__dd") =!= source)
+      .select(col("__dd").as("node"), col("__len").cast("int").as("dist"))
+      .unionByName(present)
   }
 
-  /** Level-synchronous single-source BFS as DataFrame joins: per level,
-    * join the frontier into the (undirected) edge frame, anti-join the
-    * already-reached set, checkpoint the new frontier. The same frontier
-    * discipline as the Cypher compiler's bfsFrames (Compiler.scala) —
-    * each frontier is localCheckpointed so level n+1's plan starts from
-    * the materialized frontier instead of re-deriving the whole lineage
-    * (Catalyst cannot see how small a frontier is; an unchecked plan
-    * sort-merge-joins the full edge frame per level).
+  /** Frontier/reached-set frames at or under this many rows get an
+    * EXPLICIT `broadcast()` hint in [[bfsFrames]]' per-level joins.
+    * Catalyst cannot infer it: a checkpointed frontier's LogicalRDD
+    * carries the PRE-cut plan's size estimate — derived from the full
+    * edge scan it was cut from — so auto-broadcast never fires and every
+    * level sort-merge-joins the WHOLE edge frame (measured at sf100:
+    * ~35 GB of sort spill PER LEVEL on the 1.4B-row undirected union, the
+    * disk-exhaustion boundary; with the hint a level is one scan of the
+    * edge frame, zero exchanges of it). The row counts are free — the
+    * loop already runs a per-level action on the checkpointed frontier.
+    * 1M rows ≈ tens of MB of (src,dst) pairs, well under any broadcast
+    * limit even with path arrays attached; a closure-dense frontier above
+    * the gate keeps the shuffle path, which is then the right plan.
     */
-  private[graph] def dfBfs(spark: SparkSession, edges: DataFrame, source: Long,
-      maxDepth: Int): DataFrame = {
-    import spark.implicits._
-    val ck = new IterCheckpointer(spark)
-    val adj = {
-      val e = edges.select(col("src"), col("dst"))
-      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+  private[graft] val BfsBroadcastFrontierRows = 1000000L
+
+  /** The distributed BFS loop: multi-source, level-synchronous,
+    * frontier-disciplined, optionally path-carrying. It serves [[bfs]]
+    * above the local threshold and every shortestPath of the Cypher
+    * engine above its single-task gate. `e0` is a directed `(__ds, __dd)`
+    * edge frame (undirected callers double it), plus `__rt` (the hop's
+    * relationship type) under `withRels` — duplicate edge rows are
+    * tolerated (the first frontier is distinct'd after the seed
+    * semi-join, every later level through oneHop's groupBy). `seeds` is
+    * a `__seed` frame of the same key type (scalar or tagged struct —
+    * both join/group/min identically). Returns the minimum-hop
+    * `(__ds, __dd, __len[, __path[, __rels]])` rows for `lo..hi` hops
+    * (`hi` = Int.MaxValue runs to frontier exhaustion when `lo` is 1),
+    * eagerly checkpointed, so callers may unpersist the inputs
+    * immediately. A pair (s, s) appears when a walk returns to its seed.
+    */
+  private[graft] def bfsFrames(e0: DataFrame, seeds: DataFrame,
+      lo: Int, hi: Int, keepAll: Boolean, withPath: Boolean,
+      withRels: Boolean = false): DataFrame = {
+    // the per-hop type sequence only exists alongside the node path
+    // (relationships(p) reads both); callers guarantee the pairing
+    require(!withRels || withPath, "withRels requires withPath")
+    // per-level lineage cuts ride the shared policy: localCheckpoint by
+    // default, every k-th cut reliable when graft.checkpoint.dir is set
+    // (fault tolerance on preemptible clusters — see [[CheckpointDirKey]])
+    val ck = new IterCheckpointer(e0.sparkSession)
+    // one hop forward. Frontier discipline per mode:
+    //  - shortestPath + path read: keep ONE (lexicographically minimal)
+    //    path per (src, dst) — frontier bounded by the pair closure;
+    //  - shortestPath, length-only: no __path at all — the frontier rows
+    //    are (src, dst) pairs, the narrowest possible shuffle;
+    //  - allShortestPaths: keep EVERY distinct path per pair (the rows
+    //    ARE the result multiplicity). Fan-out is the shortest-path
+    //    count, still pruned by the reached-pair anti join — a level
+    //    never extends into already-reached pairs, so no path revisits a
+    //    node (its prefix would have reached it earlier).
+    def oneHop(from: DataFrame,
+        reached: Option[DataFrame] = None): DataFrame = {
+      val stepped = from.join(
+        e0.withColumnRenamed("__ds", "__m").withColumnRenamed("__dd", "__dd2"),
+        col("__dd") === col("__m"))
+      // When the reached-pair set is supplied, anti-join it BEFORE the
+      // per-pair dedup/agg: in an undirected graph most stepped
+      // rows walk straight back into already-reached pairs (every
+      // level-2 row can revisit its seed), and filtering them first
+      // keeps their wide path/rels structs out of the min-struct
+      // aggregation. Both operations key on (__ds, __dd), so a
+      // shuffle-based anti's exchange is reused by the groupBy — same
+      // shuffle count, strictly less aggregated data — and a
+      // broadcast anti filters map-side before the only shuffle.
+      // Pair-equivalent to anti-joining after the agg: the agg never
+      // creates pairs, only collapses rows within one, so the removed
+      // rows all belong to removed pairs (q105 −13% / q85 −10% warm at
+      // sf0.1 against the post-agg position).
+      val anti: DataFrame => DataFrame = reached match {
+        case Some(r) => df => df.join(r, Seq("__ds", "__dd"), "left_anti")
+        case None => identity
+      }
+      if (!withPath)
+        anti(stepped.select(col("__ds"), col("__dd2").as("__dd"))).distinct()
+      else if (withRels) {
+        // append the hop's edge type alongside the node; the single-path
+        // prune picks the lexicographic-min (path, type-seq) pair —
+        // deterministic even when parallel edges of different types
+        // connect the same node pair
+        val ext = anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
+          concat(col("__path"), array(col("__dd2"))).as("__path"),
+          concat(col("__rels"), array(col("__rt"))).as("__rels")))
+        if (keepAll) ext.distinct()
+        else ext.groupBy("__ds", "__dd")
+          .agg(min(struct(col("__path"), col("__rels"))).as("__m"))
+          .select(col("__ds"), col("__dd"),
+            col("__m.__path").as("__path"), col("__m.__rels").as("__rels"))
+      }
+      else if (keepAll)
+        anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
+          concat(col("__path"), array(col("__dd2"))).as("__path"))).distinct()
+      else
+        anti(stepped.select(col("__ds"), col("__dd2").as("__dd"),
+          concat(col("__path"), array(col("__dd2"))).as("__path")))
+          .groupBy("__ds", "__dd").agg(min(col("__path")).as("__path"))
     }
-    val seed = Seq(source).toDF("node")
-    if (maxDepth < 1) // degenerate bound: source at dist 0 iff it has an edge
-      return seed.join(adj, col("node") === col("src"), "left_semi")
-        .withColumn("dist", lit(0))
-    // level 1 straight off the edge frame; source emitted at dist 0 iff it
-    // appears in some edge (matching GraphX/localBfs, which only
-    // materialize vertices present in the edge set)
-    var frontier = ck.cut(adj.filter(col("src") === source)
-      .select(col("dst").as("node")).distinct())
-    val levels = collection.mutable.ArrayBuffer[DataFrame]()
-    if (frontier.isEmpty) return spark.emptyDataset[(Long, Int)].toDF("node", "dist")
-    levels += seed.withColumn("dist", lit(0))
-    levels += frontier.withColumn("dist", lit(1))
-    var reached = ck.cut(frontier.unionByName(seed))
-    var depth = 1
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      frontier = ck.cut(frontier
-        .join(adj, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti"))
-      if (!frontier.isEmpty) {
-        levels += frontier.withColumn("dist", lit(depth))
-        val prev = reached
-        reached = ck.cut(reached.unionByName(frontier))
-        // frontier cuts stay alive (every level frame is unioned into the
-        // result); only the superseded reached-set accumulator is dead
-        ck.release(prev)
+    // first-hop frontier restricted to the bound sources, distinct'd
+    // HERE — on the seed-bounded frontier, not the full edge frame
+    // (intermediate hops still traverse every edge)
+    val e0s = e0.join(seeds, col("__ds") === col("__seed"), "left_semi")
+      .distinct()
+    // eagerly checkpointed: the first frontier is read several times
+    // (level-2 expansion, the reached-set anti join, the result union)
+    // and its un-checkpointed plan still carries the full edge scan —
+    // Catalyst can't see the seed restriction made it small, so level 2
+    // would sort-merge join, shuffling the WHOLE edge frame, instead of
+    // broadcasting the frontier (measured at sf1: q85 13.5 -> ~6 s warm)
+    val e0p = {
+      // fold the edge-type column into the level-1 type sequence; without
+      // the reduce a pair connected by TWO member types would enter the
+      // single-path mode twice (distinct saw distinct __rt values)
+      val w = if (!withRels) e0s
+        else e0s.withColumn("__rels", array(col("__rt"))).drop("__rt")
+      val p0 = if (withPath)
+        w.withColumn("__path", array(col("__ds"), col("__dd"))) else w
+      val p1 = if (withRels && !keepAll)
+        p0.groupBy("__ds", "__dd")
+          .agg(min(struct(col("__path"), col("__rels"))).as("__m"))
+          .select(col("__ds"), col("__dd"),
+            col("__m.__path").as("__path"), col("__m.__rels").as("__rels"))
+      else p0
+      ck.cut(p1)
+    }
+    // size-gated broadcast: the checkpointed frontier's LogicalRDD keeps
+    // the PRE-cut plan's size estimate, so Catalyst never auto-broadcasts
+    // it and each level would sort-merge-shuffle the whole edge frame —
+    // see [[BfsBroadcastFrontierRows]]
+    def gated(df: DataFrame, rows: Long): DataFrame =
+      if (rows <= BfsBroadcastFrontierRows) broadcast(df) else df
+    if (lo == 1) {
+      var dist = e0p.withColumn("__len", lit(1L))
+      var distRows = e0p.count()
+      var frontier = e0p
+      var frontierRows = distRows
+      var n = 2
+      var exhausted = frontierRows == 0
+      // an open upper bound (Int.MaxValue) runs until the frontier
+      // exhausts — guaranteed finite because every level must
+      // reach at least one new (src, dst) pair of the finite closure
+      while (n <= hi && !exhausted) {
+        // localCheckpoint (eager) truncates lineage: each level's anti
+        // join references the whole reached-set union, so without the cut
+        // the logical plan doubles per level and planning itself OOMs
+        // long before the data does. The checkpoint also lets the loop
+        // stop as soon as a frontier comes back empty.
+        val from = gated(frontier, frontierRows)
+        val reached = gated(dist.select("__ds", "__dd"), distRows)
+        val fresh = ck.cut(oneHop(from, Some(reached)))
+        val freshRows = fresh.count()
+        if (freshRows == 0) exhausted = true
+        else {
+          dist = dist.unionByName(fresh.withColumn("__len", lit(n.toLong)))
+          distRows += freshRows
+          frontier = fresh
+          frontierRows = freshRows
+        }
+        n += 1
+      }
+      // Cut the result loose from the scratch state: checkpointing `dist`
+      // truncates its lineage, so the caller can unpersist e0 (repeated
+      // shortestPath queries in one JVM would otherwise each pin an edge
+      // copy forever) and the per-level frontier checkpoint blocks lose
+      // their last reference, letting the ContextCleaner reclaim them.
+      dist.localCheckpoint(true)
+    } else {
+      // a lower bound > 1 asks for the shortest path NO SHORTER than lo —
+      // pairs whose true distance is below lo must still surface at their
+      // shortest admissible length, so BFS's reached-set pruning doesn't
+      // apply; enumerate each admissible length instead (walk semantics,
+      // per-level distinct keeps growth bounded by the closure size).
+      // Walk enumeration needs the path even in length-only mode when
+      // keepAll (multiplicity); plain length-only still enumerates pairs.
+      // per-level checkpoint + empty-frontier early exit: levels would
+      // otherwise chain join/groupBy stages into one compounding plan,
+      // and a frontier that dies (DAG exhausted) would still run the
+      // remaining levels as empty jobs
+      var cur = e0p
+      var curRows = cur.count()
+      var exhausted = curRows == 0
+      for (_ <- 2 to lo if !exhausted) {
+        cur = ck.cut(oneHop(gated(cur, curRows)))
+        curRows = cur.count()
+        exhausted = curRows == 0
+      }
+      var dist = cur.withColumn("__len", lit(lo.toLong))
+      for (n <- lo + 1 to hi if !exhausted) {
+        cur = ck.cut(oneHop(gated(cur, curRows)))
+        curRows = cur.count()
+        if (curRows == 0) exhausted = true
+        else dist = dist.unionByName(cur.withColumn("__len", lit(n.toLong)))
+      }
+      if (keepAll) {
+        // all rows at each pair's minimum admissible length
+        val mins = dist.groupBy("__ds", "__dd").agg(min(col("__len")).as("__minl"))
+        dist.join(mins, Seq("__ds", "__dd"))
+          .filter(col("__len") === col("__minl"))
+          .drop("__minl")
+          .localCheckpoint(true)
+      } else if (!withPath) {
+        dist.groupBy("__ds", "__dd").agg(min(col("__len")).as("__len"))
+          .localCheckpoint(true)
+      } else if (withRels) {
+        dist.groupBy("__ds", "__dd")
+          .agg(min(struct(col("__len"), col("__path"), col("__rels"))).as("__m"))
+          .select(col("__ds"), col("__dd"),
+            col("__m.__len").as("__len"), col("__m.__path").as("__path"),
+            col("__m.__rels").as("__rels"))
+          .localCheckpoint(true)
+      } else {
+        // min(struct) picks the shortest admissible length and its
+        // lexicographic-min path in one orderable aggregate
+        dist.groupBy("__ds", "__dd")
+          .agg(min(struct(col("__len"), col("__path"))).as("__m"))
+          .select(col("__ds"), col("__dd"),
+            col("__m.__len").as("__len"), col("__m.__path").as("__path"))
+          .localCheckpoint(true)
       }
     }
-    levels.reduce(_.unionByName(_))
-      .select(col("node"), col("dist").cast(org.apache.spark.sql.types.IntegerType))
   }
 
   /** Single-task level-synchronous BFS over an in-memory adjacency map.
@@ -557,15 +657,14 @@ object GraphAnalytics {
     import spark.implicits._
     if (underThreshold(edges, localThreshold))
       return localPageRank(spark, edges, iters)
-    // PageRank deliberately STAYS on GraphX where BFS/CC moved to
-    // DataFrame iterations (round 8): it is a dense every-vertex-every-
-    // round algorithm run for a fixed 10+ iterations, so GraphX's
-    // one-time partitioned graph build amortizes and its per-round cost
-    // beats a per-round DataFrame join — measured 2x at sf1 (DataFrame
-    // power iteration 15.8-17.8 s vs GraphX 6.9-8.8 s for 10 iterations
-    // on the 6M-edge graph). The frontier algorithms moved because their
-    // per-round work SHRINKS (sparse frontiers, delta iteration);
-    // PageRank's never does.
+    // PageRank deliberately STAYS on GraphX where BFS/CC run as DataFrame
+    // iterations: it is a dense every-vertex-every-round algorithm run
+    // for a fixed 10+ iterations, so GraphX's one-time partitioned graph
+    // build amortizes and its per-round cost beats a per-round DataFrame
+    // join — measured 2x at sf1 (DataFrame power iteration 15.8-17.8 s vs
+    // GraphX 6.9-8.8 s for 10 iterations on the 6M-edge graph). BFS and
+    // CC are DataFrame loops because their per-round work SHRINKS (sparse
+    // frontiers, contracting graphs); PageRank's never does.
     toGraph(edges, undirected = false)
       .staticPageRank(iters)
       .vertices

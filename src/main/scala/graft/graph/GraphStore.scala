@@ -24,8 +24,8 @@ final case class GraphStore(
       * per mutation (plain `DELETE` of nodes clears incident labels —
       * dangling edges become possible). The Cypher compiler's MATCH bind
       * site reads it to elide the endpoint node-store join for pattern
-      * endpoints the query never references (gated on
-      * `graft.cypher.elideUnusedEndpoints`, A/B-pinned by CypherSpec) — at
+      * endpoints the query never references (pinned by CypherSpec against
+      * an unvalidated store, which keeps the join) — at
       * 100 TB that join is a full shuffle of the edge store against a node
       * store, spent validating what the flag already guarantees.
       * Conservative default: stores assembled outside the builder/writer

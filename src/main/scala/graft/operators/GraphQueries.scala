@@ -247,7 +247,7 @@ object GraphQueries {
     // materializes vertices that appear in some edge).
     val seed = Seq((1L, 0)).toDF("node", "dist")
     // q34 is the only reader of the unsampled graph, and bfs is eager on
-    // both strategies (each distributed level is localCheckpointed; the
+    // both strategies (the distributed loop checkpoints its result; the
     // local kernel's result is checkpointed at the strategy gate), so its
     // result no longer references the edge frame: release the cached graph
     // now rather than at suite end, so later queries don't compete with

@@ -1374,13 +1374,13 @@ class CypherSpec extends SparkSpec {
       Seq((2L, 3L, "FWD"), (3L, 4L, "FWD"), (4L, 1L, "BACK")))
   }
 
-  test("OPTIONAL MATCH shortestPath keeps rows with no path as nulls") {
+  /** OP chain with a shortcut: 1→2→3→4, 1→4; node 4 has no outgoing edges. */
+  private lazy val opChain: GraphStore = {
     spark
-    // chain with a shortcut: 1→2→3→4, 1→4; node 4 has no outgoing edges
     val st0 = CypherEngine(GraphStore.empty).execute(
       "UNWIND $rows AS row MERGE (n:OP {sid: row.sid}) SET n += {sid: row.sid}",
       Map("rows" -> Seq(1L, 2L, 3L, 4L).map(i => Map[String, Any]("sid" -> i)))).store
-    val st = CypherEngine(st0).execute(
+    CypherEngine(st0).execute(
       """UNWIND $rows AS row
          MATCH (s:OP) WHERE s.sid = row.a
          WITH s, row
@@ -1388,7 +1388,10 @@ class CypherSpec extends SparkSpec {
          MERGE (s)-[r:STEP]->(t)""",
       Map("rows" -> Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L))
         .map { case (a, b) => Map[String, Any]("a" -> a, "b" -> b) })).store
-    val e = CypherEngine(st)
+  }
+
+  test("OPTIONAL MATCH shortestPath keeps rows with no path as nulls") {
+    val e = CypherEngine(opChain)
     // unbound far endpoint with a prop filter: every source keeps its row;
     // node 4 (no outgoing edges) gets a null length
     val rows = e.run(
@@ -1454,6 +1457,28 @@ class CypherSpec extends SparkSpec {
     assert(headInner == Seq((1L, 1L)))
   }
 
+
+  test("WITH * and WITH p carry a path variable into the next stage") {
+    val e = CypherEngine(opChain)
+    def rows(q: String): Seq[String] = e.run(q).collect().map(_.toString).toSeq
+    val opt = """MATCH (a:OP)
+         OPTIONAL MATCH p = shortestPath((a)-[:STEP*1..5]->(b:OP {sid: 4}))"""
+    val out = "RETURN a.sid AS src, length(p) AS len, nodes(p) AS ns, " +
+      "relationships(p) AS rs ORDER BY src"
+    // the single-stage forms are the reference: matched rows only, and
+    // every source with a null path where none exists
+    val matched = rows(
+      s"MATCH (a:OP) MATCH p = shortestPath((a)-[:STEP*1..5]->(b:OP {sid: 4})) $out")
+    assert(matched.size == 3)
+    assert(rows(s"$opt WITH * WHERE p IS NOT NULL $out") == matched)
+    assert(rows(s"$opt WITH a, p WHERE p IS NOT NULL $out") == matched)
+    assert(rows(s"$opt WITH * WHERE p IS NOT NULL RETURN a.sid AS src ORDER BY src") ==
+      Seq("[1]", "[2]", "[3]"))
+    val all = rows(s"$opt $out")
+    assert(all.size == 4)
+    assert(rows(s"$opt WITH * $out") == all)
+    assert(rows(s"$opt WITH p, a $out") == all)
+  }
   test("length-only shortestPath drops the path array from the plan") {
     spark
     val st0 = CypherEngine(GraphStore.empty).execute(
@@ -1780,14 +1805,8 @@ class CypherSpec extends SparkSpec {
       assert(joins(elided) == 0)
       val elidedRows = elided.collect().toSeq
       assert(elidedRows.head.getLong(0) == pstore.edges("CONTAINS").count())
-      // kill switch off: both endpoint joins come back, rows identical
-      spark.conf.set(CypherEngine.ElideUnusedEndpointsKey, "false")
-      try {
-        val joined = eng.run(q)
-        assert(joins(joined) == 2)
-        assert(joined.collect().toSeq == elidedRows)
-      } finally spark.conf.unset(CypherEngine.ElideUnusedEndpointsKey)
-      // an unvalidated store keeps the joins even with elision enabled
+      // the joined reference: an unvalidated store keeps both endpoint
+      // joins, and the rows are identical
       val kept = CypherEngine(pstore.copy(validatedEdges = Set.empty)).run(q)
       assert(joins(kept) == 2)
       assert(kept.collect().toSeq == elidedRows)

@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.graph.{EdgeType, GraphSchema, GraphStore, NodeType}
+import graft.graph.{EdgeType, GraphAnalytics, GraphSchema, GraphStore, NodeType}
 
 /** Pins the single-task kernels ([[LocalBfs.localDist]] /
   * [[LocalBfs.localUniqueWalk]]) row-set identical to the distributed
-  * loops that serve the same questions above the edge cap — `bfsFrames`
-  * for shortestPath, the per-level walk under `LocalPathEdgeCapKey=0` —
-  * across every shape (lenonly, withPath, keepAll, withRels,
-  * withRels+keepAll), key type (long, non-ASCII string, (label, key)
-  * struct incl. null fields) and seed arrangement. The local regime must
-  * be a pure strategy choice, never a semantics change. In the test
-  * names, "fast" is the single-task kernel and "generic" the distributed
-  * loop, which serves every key type and graph size.
+  * loops that serve the same questions above the edge cap —
+  * [[GraphAnalytics.bfsFrames]] for shortestPath, the per-level walk
+  * under `LocalPathEdgeCapKey=0` — across every shape (lenonly,
+  * withPath, keepAll, withRels, withRels+keepAll), key type (long,
+  * non-ASCII string, (label, key) struct incl. null fields) and seed
+  * arrangement. The local regime must be a pure strategy choice, never
+  * a semantics change. In the test names, "fast" is the single-task
+  * kernel and "generic" the distributed loop, which serves every key
+  * type and graph size.
   */
 class LocalBfsFastSpec extends SparkSpec {
 
@@ -75,13 +76,12 @@ class LocalBfsFastSpec extends SparkSpec {
   private def checkDist(name: String, e: DataFrame, seeds: DataFrame): Unit = {
     val kt = e.schema("__ds").dataType
     assert(LocalBfs.localDistKey(kt), s"$name key type must pass the local gate")
-    val interp = new CypherEngine.Interp(GraphStore.empty, Map.empty)
     for ((shape, keepAll, withPath, withRels) <- shapes; hi <- Seq(1, 3, 10)) {
       // the distributed loop reads __rt only under withRels, as distDf
       // hands it the union
       val e0 = if (withRels) e else e.drop("__rt")
       val local = LocalBfs.localDist(e0, seeds, hi, kt, keepAll, withPath, withRels)
-      val dist = interp.bfsFrames(e0, seeds, 1, hi, keepAll, withPath, withRels)
+      val dist = GraphAnalytics.bfsFrames(e0, seeds, 1, hi, keepAll, withPath, withRels)
         .select(local.columns.map(col): _*)
       val (l, d) = (rowSet(local), rowSet(dist))
       assert(l.nonEmpty, s"$name/$shape/hi=$hi: no rows")

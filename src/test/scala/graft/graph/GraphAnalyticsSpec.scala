@@ -59,21 +59,24 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("the three BFS strategies agree on random graphs") {
-    val rnd = new scala.util.Random(7)
-    (1 to 3).foreach { _ =>
-      val n = 30
-      val es = Seq.fill(120)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
+    // self-loops included: a loop at the source is no distance-1 row
+    def check(es: Seq[(Long, Long)], src: Long, depth: Int): Map[Long, Int] = {
       val df = es.toDF("src", "dst")
-      val depth = 1 + rnd.nextInt(4)
-      val src = es.head._1
       val local = GraphAnalytics.bfs(spark, df, src, depth)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val dist = GraphAnalytics.bfs(spark, df, src, depth, localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val pregel = pregelBfs(df, src, depth)
-      assert(local == dist)
-      assert(local == pregel)
+      assert(local == dist, s"source $src over $es")
+      assert(local == pregelBfs(df, src, depth), s"source $src over $es")
+      local
+    }
+    assert(check(Seq((1L, 1L), (1L, 2L), (2L, 3L)), 1L, 3) ==
+      Map(1L -> 0, 2L -> 1, 3L -> 2))
+    val rnd = new scala.util.Random(7)
+    (1 to 3).foreach { _ =>
+      val n = 30
+      val es = Seq.fill(120)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      check(es, es.head._1, 1 + rnd.nextInt(4))
     }
   }
 
@@ -81,25 +84,24 @@ class GraphAnalyticsSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     (1 to 3).foreach { _ =>
       // sparse (n edges over 2n vertices) so components include chains —
-      // multi-round label propagation, not one-hop stars
+      // multi-level contraction and multi-round pointer-doubling, not
+      // one-hop stars
       val n = 40
-      val es = Seq.fill(n)((rnd.nextInt(2 * n).toLong, rnd.nextInt(2 * n).toLong))
-        .filter { case (a, b) => a != b }
+      // self-loops included (a loop-only node is its own component)
+      val es = Seq.fill(n)((rnd.nextInt(2 * n).toLong, rnd.nextInt(2 * n).toLong)) :+
+        ((3 * n).toLong, (3 * n).toLong)
       val df = es.toDF("src", "dst")
       val local = GraphAnalytics.connectedComponents(spark, df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // contraction
       val dist = GraphAnalytics.connectedComponents(spark, df, localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val delta = GraphAnalytics.dfComponents(spark, df)
+      // pointer-doubling, contraction's finish on a stalled graph
+      val jump = GraphAnalytics.jumpComponents(df, new GraphAnalytics.IterCheckpointer(spark))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // pointer-doubling (the escalation path) from round 1
-      val jump = GraphAnalytics.dfComponents(spark, df, escalateAfter = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(GraphAnalytics.LastCcRounds.get()._2 > 0)
       val graphx = graphxComponents(df)
       assert(local == graphx)
       assert(dist == graphx)
-      assert(delta == graphx)
       assert(jump == graphx)
     }
   }
@@ -112,15 +114,21 @@ class GraphAnalyticsSpec extends SparkSpec {
     val chain = (1L until 25L).map(i => (i, i + 1)).toDF("src", "dst")
     val bfsBefore = GraphAnalytics.bfs(spark, chain, 1L, 30, localThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val ccBefore = GraphAnalytics.dfComponents(spark, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def cc(): Map[Long, Long] = {
+      val contract = GraphAnalytics.connectedComponents(spark, chain, localThreshold = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val jump = GraphAnalytics.jumpComponents(chain, new GraphAnalytics.IterCheckpointer(spark))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(jump == contract)
+      contract
+    }
+    val ccBefore = cc()
     spark.conf.set(GraphAnalytics.CheckpointDirKey, dir)
     spark.conf.set(GraphAnalytics.CheckpointIntervalKey, "2")
     try {
       val bfsAfter = GraphAnalytics.bfs(spark, chain, 1L, 30, localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val ccAfter = GraphAnalytics.dfComponents(spark, chain)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val ccAfter = cc()
       assert(bfsAfter == bfsBefore)
       assert(ccAfter == ccBefore)
       // the reliable cut actually wrote into the directory
@@ -135,19 +143,17 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("DataFrame CC converges on a worst-case-diameter path graph") {
     // a 60-node path: min-label propagation would need ~n rounds to flood
-    // the min id end-to-end — past the escalation bound the delta
-    // iteration hands off to pointer-doubling, which finishes in O(log n)
-    // rounds; the result is still the component-min label for every node
+    // the min id end-to-end; pointer-doubling (contraction's finish when
+    // it stalls) needs O(log n), and still labels every node with the
+    // component min
     val chain = (1L until 60L).map(i => (i, i + 1)).toDF("src", "dst")
-    val cc = GraphAnalytics.dfComponents(spark, chain)
+    val ck = new GraphAnalytics.IterCheckpointer(spark)
+    val cc = GraphAnalytics.jumpComponents(chain, ck)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc.size == 60 && cc.values.forall(_ == 1L))
-    // the round accounting proves the escalation fired and the doubling
-    // loop beat O(diameter): ~59 propagation rounds collapse into the
-    // 10-round delta budget plus O(log 60) jump rounds
-    val (delta, jump) = GraphAnalytics.LastCcRounds.get()
-    assert(delta == GraphAnalytics.CcEscalateRoundsDefault, s"delta=$delta")
-    assert(jump > 0 && jump <= 12, s"jump=$jump")
+    // one initial cut plus two per round: the loop beat O(diameter)
+    val rounds = (ck.cuts - 1) / 2
+    assert(rounds > 0 && rounds <= 12, s"rounds=$rounds")
   }
 
   test("contraction CC matches union-find on adversarial shapes") {
@@ -254,7 +260,23 @@ class GraphAnalyticsSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(GraphAnalytics.pageRank(spark, empty, iters = 3).count() == 0)
     assert(GraphAnalytics.pageRank(spark, empty, iters = 3, localThreshold = 0).count() == 0)
-    assert(GraphAnalytics.dfComponents(spark, empty).count() == 0)
+    assert(GraphAnalytics.contractComponents(spark, empty, localThreshold = 0).count() == 0)
+    assert(GraphAnalytics.jumpComponents(empty,
+      new GraphAnalytics.IterCheckpointer(spark)).count() == 0)
+  }
+
+  test("degrees count both endpoints of every edge, a self-loop twice") {
+    import org.apache.spark.sql.functions.col
+    // a parallel pair, a self-loop and a separate component
+    val es = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (10L, 11L)).toDF("src", "dst")
+    val got = GraphAnalytics.degrees(spark, es)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val want = es.select(col("src").as("node"))
+      .unionAll(es.select(col("dst").as("node")))
+      .groupBy("node").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+    assert(got == want)
+    assert(got == Map(1L -> 2, 2L -> 3, 3L -> 3, 10L -> 1, 11L -> 1))
   }
 
   test("local pagerank/triangles agree with GraphX") {

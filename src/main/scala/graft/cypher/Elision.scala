@@ -143,20 +143,24 @@ private[cypher] object Elision {
     var used = false
     var usedRels = false
     var star = false
+    // pv and every name a projection re-binds it to (`WITH p AS q`): the
+    // aliased path carries pv's columns, so reads of q are reads of pv
+    var names = Set(pv)
+    def isPv(v: String): Boolean = names(v)
     def expr(e: Expr): Unit = e match {
       // count(DISTINCT p) hashes the path identity — it needs the node
       // sequence (and, over a type disjunction, the per-hop type array:
       // two distinct paths can share a node sequence)
-      case Fn("count", Seq(Var(v)), true) if v == pv =>
+      case Fn("count", Seq(Var(v)), true) if isPv(v) =>
         used = true; usedRels = true
-      case Fn("length" | "size" | "count", Seq(Var(v)), _) if v == pv => ()
-      case IsNull(Var(v), _) if v == pv => () // matched-test needs only __len
-      case Fn("relationships", Seq(Var(v)), _) if v == pv =>
+      case Fn("length" | "size" | "count", Seq(Var(v)), _) if isPv(v) => ()
+      case IsNull(Var(v), _) if isPv(v) => () // matched-test needs only __len
+      case Fn("relationships", Seq(Var(v)), _) if isPv(v) =>
         used = true; usedRels = true
-      case Var(v) => if (v == pv) used = true
-      case Prop(v, _) => if (v == pv) used = true
+      case Var(v) => if (isPv(v)) used = true
+      case Prop(v, _) => if (isPv(v)) used = true
       case MapProj(v, _, _, ex) =>
-        if (v == pv) used = true
+        if (isPv(v)) used = true
         ex.foreach { case (_, x) => expr(x) }
       case Fn(_, args, _) => args.foreach(expr)
       case Bin(_, l, r) => expr(l); expr(r)
@@ -216,14 +220,15 @@ private[cypher] object Elision {
     def proj(p: Projection): Unit = {
       if (p.star) star = true
       p.items.foreach(i => expr(i.expr))
+      names ++= p.items.collect { case Item(Var(v), Some(a)) if isPv(v) => a }
       p.where.foreach(expr)
       p.orderBy.foreach(s => expr(s.expr))
     }
     def setItem(s: SetItem): Unit = s match {
-      case SetPlus(v, m) => if (v == pv) used = true; m.foreach { case (_, e) => expr(e) }
-      case SetProp(v, _, e) => if (v == pv) used = true; expr(e)
-      case SetAll(v, m) => if (v == pv) used = true; m.foreach { case (_, e) => expr(e) }
-      case SetLabel(v, _, _) => if (v == pv) used = true
+      case SetPlus(v, m) => if (isPv(v)) used = true; m.foreach { case (_, e) => expr(e) }
+      case SetProp(v, _, e) => if (isPv(v)) used = true; expr(e)
+      case SetAll(v, m) => if (isPv(v)) used = true; m.foreach { case (_, e) => expr(e) }
+      case SetLabel(v, _, _) => if (isPv(v)) used = true
     }
     def patProps(p: PathPat): Unit = {
       p.head.props.foreach { case (_, e) => expr(e) }
@@ -250,7 +255,7 @@ private[cypher] object Elision {
           case MergeClause(p0, oc, om) =>
             patProps(p0); oc.foreach(setItem); om.foreach(setItem)
           case SetClause(items) => items.foreach(setItem)
-          case DeleteClause(vars, _) => if (vars.contains(pv)) used = true
+          case DeleteClause(vars, _) => if (vars.exists(isPv)) used = true
           case ForeachClause(_, coll, body) => expr(coll); body.foreach(wr)
         }
         st.writes.foreach(wr)

@@ -989,25 +989,30 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
           stage0.copy(items = starItems ++ stage0.items)
         }
       // node and path variables carry their column sets under their own
-      // name; everything else is a plain expression column
+      // name, a path also under an alias (`WITH p AS q`); everything else
+      // is a plain expression column
       def structural(v: String): Boolean =
         ctx.labels.contains(v) || ctx.multi.contains(v) || ctx.paths.contains(v)
-      val carried = stage.items.collect { case Item(Var(v), None) if structural(v) => v }
-      val plain = stage.items.filterNot {
-        case Item(Var(v), None) => structural(v)
-        case _ => false
+      def carry(i: Item): Option[(String, String)] = i match {
+        case Item(Var(v), None) if structural(v) => Some(v -> v)
+        case Item(Var(v), Some(a)) if ctx.paths.contains(v) => Some(v -> a)
+        case _ => None
       }
+      // (bound name, name after the stage)
+      val carriedAs = stage.items.flatMap(carry)
+      val carried = carriedAs.map(_._2)
+      val plain = stage.items.filter(carry(_).isEmpty)
       val hasAgg = plain.exists(i => containsAgg(i.expr))
 
       def outName(i: Item): String = i.alias.getOrElse(genName(i.expr))
-      val carriedCols: Seq[Column] = carried.flatMap { v =>
+      val carriedCols: Seq[Column] = carriedAs.flatMap { case (v, a) =>
         if (ctx.labels.contains(v))
           store.nodes(ctx.labels(v)).columns.map(c => col(s"${v}__$c"))
         else if (ctx.paths.contains(v))
           // a path's length, plus the node and per-hop type sequences
           // when the query reads them (Elision.pathUsage)
-          Seq("len", "nodes", "rels").map(f => s"${v}__$f")
-            .filter(df.columns.contains).map(col)
+          Seq("len", "nodes", "rels").filter(f => df.columns.contains(s"${v}__$f"))
+            .map(f => col(s"${v}__$f").as(s"${a}__$f"))
         else
           // multi-label: carry the superset of the labels' columns plus the
           // per-row label tag (identity under aggregation = label + key)
@@ -1031,10 +1036,10 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
         ctx.labels.filter { case (v, _) => carried.contains(v) },
         Map.empty,
         plain.map(outName).toSet,
-        ctx.paths.filter(carried.contains),
+        carriedAs.collect { case (v, a) if ctx.paths.contains(v) => a }.toSet,
         plain.filter(i => elemIsString(i.expr, ctx, Set.empty)).map(outName).toSet,
-        pathRels = ctx.pathRels.filter { case (v, _) => carried.contains(v) },
-        pathRelSeqs = ctx.pathRelSeqs.filter(carried.contains),
+        pathRels = carriedAs.flatMap { case (v, a) => ctx.pathRels.get(v).map(a -> _) }.toMap,
+        pathRelSeqs = carriedAs.collect { case (v, a) if ctx.pathRelSeqs(v) => a }.toSet,
         multi = ctx.multi.filter { case (v, _) => carried.contains(v) },
         strs = plain.filter(i => isStringTyped(i.expr, ctx)).map(outName).toSet,
         times = plain.filter(i => isTimeTyped(i.expr, ctx)).map(outName).toSet,
@@ -1044,7 +1049,7 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
           case i @ Item(Var(v), _) if ctx.relLists.contains(v) => outName(i)
           case i @ Item(Fn("relationships", _, _), _) => outName(i)
         }.toSet,
-        nullable = ctx.nullable.filter(carried.contains))
+        nullable = carriedAs.collect { case (v, a) if ctx.nullable(v) => a }.toSet)
       // `WITH … WHERE` runs against the PROJECTED bindings, so block lifts
       // (COUNT {} / COLLECT {} / pattern comprehensions / EXISTS {}) join
       // onto the post-projection frame, correlated on the carried node

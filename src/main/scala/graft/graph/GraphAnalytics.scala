@@ -429,6 +429,10 @@ object GraphAnalytics {
     // default, every k-th cut reliable when graft.checkpoint.dir is set
     // (fault tolerance on preemptible clusters — see [[CheckpointDirKey]])
     val ck = new IterCheckpointer(e0.sparkSession)
+    // every level cut, released once the result's own checkpoint holds the
+    // rows: until then `dist`'s unions read them
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cut(df: DataFrame): DataFrame = { val c = ck.cut(df); cuts += c; c }
     // one hop forward. Frontier discipline per mode:
     //  - shortestPath + path read: keep ONE (lexicographically minimal)
     //    path per (src, dst) — frontier bounded by the pair closure;
@@ -510,7 +514,7 @@ object GraphAnalytics {
           .select(col("__ds"), col("__dd"),
             col("__m.__path").as("__path"), col("__m.__rels").as("__rels"))
       else p0
-      ck.cut(p1)
+      cut(p1)
     }
     // size-gated broadcast: the checkpointed frontier's LogicalRDD keeps
     // the PRE-cut plan's size estimate, so Catalyst never auto-broadcasts
@@ -518,7 +522,7 @@ object GraphAnalytics {
     // see [[BfsBroadcastFrontierRows]]
     def gated(df: DataFrame, rows: Long): DataFrame =
       if (rows <= BfsBroadcastFrontierRows) broadcast(df) else df
-    if (lo == 1) {
+    val result = if (lo == 1) {
       var dist = e0p.withColumn("__len", lit(1L))
       var distRows = e0p.count()
       var frontier = e0p
@@ -536,7 +540,7 @@ object GraphAnalytics {
         // stop as soon as a frontier comes back empty.
         val from = gated(frontier, frontierRows)
         val reached = gated(dist.select("__ds", "__dd"), distRows)
-        val fresh = ck.cut(oneHop(from, Some(reached)))
+        val fresh = cut(oneHop(from, Some(reached)))
         val freshRows = fresh.count()
         if (freshRows == 0) exhausted = true
         else {
@@ -550,8 +554,7 @@ object GraphAnalytics {
       // Cut the result loose from the scratch state: checkpointing `dist`
       // truncates its lineage, so the caller can unpersist e0 (repeated
       // shortestPath queries in one JVM would otherwise each pin an edge
-      // copy forever) and the per-level frontier checkpoint blocks lose
-      // their last reference, letting the ContextCleaner reclaim them.
+      // copy forever) and the level cuts are released below.
       dist.localCheckpoint(true)
     } else {
       // a lower bound > 1 asks for the shortest path NO SHORTER than lo —
@@ -569,13 +572,13 @@ object GraphAnalytics {
       var curRows = cur.count()
       var exhausted = curRows == 0
       for (_ <- 2 to lo if !exhausted) {
-        cur = ck.cut(oneHop(gated(cur, curRows)))
+        cur = cut(oneHop(gated(cur, curRows)))
         curRows = cur.count()
         exhausted = curRows == 0
       }
       var dist = cur.withColumn("__len", lit(lo.toLong))
       for (n <- lo + 1 to hi if !exhausted) {
-        cur = ck.cut(oneHop(gated(cur, curRows)))
+        cur = cut(oneHop(gated(cur, curRows)))
         curRows = cur.count()
         if (curRows == 0) exhausted = true
         else dist = dist.unionByName(cur.withColumn("__len", lit(n.toLong)))
@@ -607,6 +610,11 @@ object GraphAnalytics {
           .localCheckpoint(true)
       }
     }
+    // the eager checkpoint above holds the result's rows, so no cut is
+    // read again; without the release every level's blocks stay in storage
+    // until the ContextCleaner happens to collect the frames
+    cuts.foreach(ck.release)
+    result
   }
 
   /** Single-task level-synchronous BFS over an in-memory adjacency map.
@@ -767,12 +775,13 @@ object GraphAnalytics {
       .toDF("node", "triangles")
   }
 
-  /** In/out/total degrees (G4). */
-  def degrees(spark: SparkSession, edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    toGraph(edges, undirected = false)
-      .degrees
-      .map { case (id, d) => (id, d) }
-      .toDF("node", "degree")
-  }
+  /** Total degree (G4): `(node, degree)` for every node on some edge, both
+    * endpoints counted, so a self-loop counts twice (GraphX's
+    * `Graph.degrees`). One aggregate over the edge frame; nothing is
+    * cached.
+    */
+  def degrees(spark: SparkSession, edges: DataFrame): DataFrame =
+    edges.select(explode(array(col("src"), col("dst"))).as("node"))
+      .groupBy("node")
+      .agg(count(lit(1)).cast("int").as("degree"))
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,7 +45,7 @@ object Csv {
 
   final case class Normalized(df: DataFrame, replacements: Map[String, Seq[String]])
 
-  private val tsParts: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)] =
+  private val tsParts: Seq[(String, Column => Column)] =
     Seq(
       "year" -> (c => year(c)),
       "month" -> (c => month(c)),
@@ -57,36 +57,53 @@ object Csv {
   /** Normalize one table's columns per its declared SQL types. Returns the
     * normalized frame plus the timestamp-expansion record
     * `original column → six expanded columns`.
+    *
+    * The per-column rules read as a fold of `withColumn`/`drop` over the
+    * declared columns; the fold is replayed here on a list of (name,
+    * expression) pairs and applied as ONE `select`, because every
+    * `withColumn` call re-analyzes the whole plan (one per column, seven per
+    * timestamp column). Replaying keeps the fold's outcome exactly: a
+    * rewrite replaces in place every column its name resolves to (under
+    * the session's case sensitivity) or appends, and a later rule
+    * reads the rewritten expression — so a declared `created_at_year` next
+    * to a `created_at` timestamp ends as the expansion, where the fold put
+    * it.
     */
   def normalize(df: DataFrame, table: TableDef): Normalized = {
-    var out = df
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def quoted(n: String) = col(s"`${n.replace("`", "``")}`")
+    var cols: Vector[(String, Column)] = df.columns.toVector.map(n => n -> quoted(n))
+    def current(n: String): Column = cols.find(_._1 == n).get._2
+    def put(n: String, e: Column): Unit =
+      if (cols.exists(c => resolver(c._1, n)))
+        cols = cols.map(c => if (resolver(c._1, n)) n -> e else c)
+      else cols :+= (n -> e)
     var repl = Map.empty[String, Seq[String]]
     table.columns.foreach { cd =>
-      if (out.columns.contains(cd.name)) {
+      if (cols.exists(_._1 == cd.name)) {
         val t = cd.sqlType.toUpperCase
-        val c = col(cd.name)
+        val c = current(cd.name)
         if (t.contains("DATE") || t.contains("TIME")) {
           val ts = to_timestamp(c)
-          val expanded = tsParts.map { case (suffix, f) => s"${cd.name}_$suffix" }
-          out = tsParts.foldLeft(out) { case (d, (suffix, f)) =>
-            d.withColumn(s"${cd.name}_$suffix", f(ts).cast(LongType))
-          }.drop(cd.name)
+          val expanded = tsParts.map { case (suffix, _) => s"${cd.name}_$suffix" }
+          tsParts.foreach { case (suffix, f) => put(s"${cd.name}_$suffix", f(ts).cast(LongType)) }
+          cols = cols.filterNot(x => resolver(x._1, cd.name))
           repl += (cd.name -> expanded)
         } else if (t.contains("CHAR") || t.contains("CLOB") || t.contains("TEXT")) {
-          out = out.withColumn(cd.name, c.cast(StringType))
+          put(cd.name, c.cast(StringType))
         } else if (t.contains("INT") || t.contains("NUMERIC")) {
-          out = out.withColumn(cd.name, c.cast(LongType))
+          put(cd.name, c.cast(LongType))
         } else if (t.contains("DEC") || t.contains("REAL") ||
             t.contains("FLOA") || t.contains("DOUB")) {
-          out = out.withColumn(cd.name, c.cast(DoubleType))
+          put(cd.name, c.cast(DoubleType))
         } else if (t.contains("BLOB")) {
-          out = out.withColumn(cd.name, c.cast(BinaryType))
+          put(cd.name, c.cast(BinaryType))
         }
         // unknown/empty declared type: passthrough (reference keeps object
         // dtype, final/sqlite_to_csv.py:58-59)
       }
     }
-    Normalized(out, repl)
+    Normalized(df.select(cols.map { case (n, e) => e.as(n) }: _*), repl)
   }
 
   /** Derive a catalog from CSV headers: every column TEXT-typed unless

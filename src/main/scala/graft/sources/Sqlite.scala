@@ -4,8 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.graft.StatsFirewall
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{ColumnDef, ForeignKey, RelationalCatalog, TableDef}
 
@@ -23,8 +27,23 @@ import graft.model.{ColumnDef, ForeignKey, RelationalCatalog, TableDef}
   *
   * Scale posture: SQLite files are single-writer, megabyte-to-gigabyte
   * artifacts; parsing happens driver-side (as the reference's pandas read
-  * does) and rows are then parallelized into a DataFrame. For many
-  * uploaded databases, parallelize across FILES, not within one.
+  * does). For many uploaded databases, parallelize across FILES, not
+  * within one.
+  *
+  * Hand-off to Catalyst: each record is coerced straight to Catalyst
+  * values and written as a copied `UnsafeRow`, so a scan task ships and
+  * reads row bytes rather than Java-serialized `Row` objects and no
+  * encoder runs. The reader counts every row and byte as it decodes
+  * them, and hands the table over as a `LogicalRDD` that declares them
+  * (`Statistics(sizeInBytes = Σ row bytes, rowCount = rows)`, through
+  * [[org.apache.spark.sql.graft.StatsFirewall.scan]]) plus
+  * `SinglePartition` when the table is one slice (50k rows per slice,
+  * so every table under 100k rows). A bare RDD of rows would report
+  * `defaultSizeInBytes` and unknown partitioning: every FK semi-join of
+  * the graph build then plans as a sort-merge join that adaptive
+  * execution turns into a broadcast only after a shuffle stage, and
+  * every dedup and audit aggregate shuffles. With the true facts they
+  * plan as broadcast joins and exchange-free aggregates.
   *
   * Unsupported (rejected with clear errors): WITHOUT ROWID tables,
   * non-UTF-8 text encodings.
@@ -33,7 +52,7 @@ object Sqlite {
 
   // ------------------------------------------------------------ file level
 
-  private final class Db(bytes: Array[Byte]) {
+  private[sources] final class Db(bytes: Array[Byte]) {
     require(bytes.length >= 100 &&
       new String(bytes, 0, 16, "ISO-8859-1").startsWith("SQLite format 3"),
       "not a SQLite 3 database file")
@@ -298,6 +317,8 @@ object Sqlite {
         else StringType
       }
       val schema = StructType(td.columns.map(c => StructField(c.name, affinity(c.sqlType))))
+      // record value → Catalyst value of the column's type (UTF8String for
+      // strings), null when it does not convert
       def coerce(v: Any, dt: DataType): Any = (v, dt) match {
         case (null, _) => null
         case (l: Long, LongType) => l
@@ -307,26 +328,39 @@ object Sqlite {
         case (d: Double, DoubleType) => d
         case (s: String, DoubleType) => s.trim.toDoubleOption.orNull
         case (b: Array[Byte], BinaryType) => b
-        case (s: String, StringType) => s
-        case (l: Long, StringType) => l.toString
-        case (d: Double, StringType) => d.toString
-        case (b: Array[Byte], StringType) => new String(b, "UTF-8")
+        case (s: String, StringType) => UTF8String.fromString(s)
+        case (l: Long, StringType) => UTF8String.fromString(l.toString)
+        case (d: Double, StringType) => UTF8String.fromString(d.toString)
+        case (b: Array[Byte], StringType) => UTF8String.fromString(new String(b, "UTF-8"))
         case _ => null
       }
+      val types = schema.map(_.dataType).toArray
+      val writer = new UnsafeRowWriter(types.length)
       try {
         val rows = db.walk(rootpage).map { case (rowid, rec) =>
           val vals = db.record(rec)
-          val padded = td.columns.indices.map { i =>
+          writer.reset()
+          writer.zeroOutNullBytes()
+          var i = 0
+          while (i < types.length) {
             val raw =
               if (rowidAlias.contains(i)) rowid
               else if (i < vals.length) vals(i)
               else null
-            coerce(raw, schema(i).dataType)
+            coerce(raw, types(i)) match {
+              case null => writer.setNullAt(i)
+              case l: Long => writer.write(i, l)
+              case d: Double => writer.write(i, d)
+              case u: UTF8String => writer.write(i, u)
+              case b: Array[Byte] => writer.write(i, b)
+            }
+            i += 1
           }
-          Row.fromSeq(padded)
-        }.toSeq
-        Right(name -> spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, rows.size / 50000)), schema))
+          writer.getRow.copy()
+        }.toVector
+        val rdd = spark.sparkContext.parallelize[InternalRow](rows, math.max(1, rows.size / 50000))
+        Right(name -> StatsFirewall.scan(spark, schema, rdd,
+          rows.size, rows.iterator.map(_.getSizeInBytes.toLong).sum))
       } catch {
         // NonFatal, not just IllegalArgumentException: corrupt pages can
         // surface as ArrayIndexOutOfBounds etc. — degrade to a skipped

@@ -1,11 +1,21 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
-/** Statistics firewall for checkpointed loop frames.
+/** Explicit statistics for the `LogicalRDD`s the engine builds itself.
+  * Two uses: the firewall for checkpointed loop frames ([[rebound]]), and
+  * the scan of rows a source decoded driver-side ([[scan]], the SQLite
+  * reader's tables).
+  *
+  * Statistics firewall for checkpointed loop frames.
   *
   * `Dataset.localCheckpoint`/`checkpoint` preserve the ORIGIN plan's
   * statistics into the resulting `LogicalRDD` (`originStats`) — the right
@@ -29,6 +39,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * estimates after a few rounds were astronomically large, so both before
   * and after the firewall a loop frame never looks broadcastable unless
   * the caller supplies real row counts.
+  *
+  * The source scan ([[scan]]) is the opposite case: a `LogicalRDD` made
+  * from an RDD of rows has no origin plan, so it reports
+  * `defaultSizeInBytes` (never broadcastable) and unknown partitioning
+  * (every aggregate and join shuffles), though the source counted every
+  * row and byte while decoding them. Declaring those counts, and
+  * `SinglePartition` for a one-slice RDD, lets Catalyst broadcast the
+  * table and aggregate it without an exchange.
   *
   * This file lives under `org.apache.spark.sql` for `private[sql]` access
   * to `Dataset.ofRows` and the `LogicalRDD` constructor — the same bridge
@@ -55,4 +73,21 @@ object StatsFirewall {
         Dataset.ofRows(spark, l.copy()(spark, Some(stats), None))
       case _ => df
     }
+
+  /** A frame over rows already in Catalyst's format, with the exact row
+    * count and byte size the caller measured. A one-partition RDD
+    * declares `SinglePartition`, so an aggregate or a join over it needs
+    * no exchange; the stats let Catalyst broadcast it when it is small.
+    * The RDD's rows must match `schema` (unsafe rows, one field per
+    * column).
+    */
+  def scan(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      rows: RDD[InternalRow], rowCount: Long, sizeInBytes: Long): DataFrame = {
+    val session = spark.asInstanceOf[SparkSession]
+    val parts = rows.getNumPartitions
+    val partitioning = if (parts == 1) SinglePartition else UnknownPartitioning(parts)
+    val stats = Statistics(sizeInBytes = BigInt(sizeInBytes), rowCount = Some(BigInt(rowCount)))
+    Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(schema), rows, partitioning)(
+      session, Some(stats), None))
+  }
 }

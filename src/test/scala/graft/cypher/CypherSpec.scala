@@ -1390,6 +1390,43 @@ class CypherSpec extends SparkSpec {
         .map { case (a, b) => Map[String, Any]("a" -> a, "b" -> b) })).store
   }
 
+  test("WITH p AS q carries a shortestPath under its new name") {
+    val e = CypherEngine(opChain)
+    def rows(q: String): Seq[Seq[Any]] =
+      e.run(q).collect().map(_.toSeq.map {
+        case s: scala.collection.Seq[_] => s.toList
+        case v => v
+      }).toSeq
+    val sp = "MATCH p = shortestPath((a:OP {sid: 1})-[:STEP*1..5]->(b:OP {sid: 3}))"
+    val plain = rows(s"$sp WITH p RETURN length(p) AS l, nodes(p) AS ns, relationships(p) AS rs")
+    assert(plain.nonEmpty)
+    assert(rows(s"$sp WITH p AS q RETURN length(q) AS l, nodes(q) AS ns, relationships(q) AS rs") ==
+      plain)
+    // aliased again, aggregated over, and tested for null like the bound name
+    assert(rows(s"$sp WITH p AS q WITH q AS r RETURN length(r) AS l, nodes(r) AS ns, " +
+      "relationships(r) AS rs") == plain)
+    assert(rows(s"$sp WITH p AS q, count(*) AS c RETURN length(q) AS l, c") ==
+      Seq(Seq(2L, 1L)))
+    assert(rows(
+      """MATCH (a:OP)
+         OPTIONAL MATCH p = shortestPath((a)-[:STEP*1..5]->(b:OP {sid: 4}))
+         WITH a, p AS q WHERE q IS NULL
+         RETURN a.sid AS src""") == Seq(Seq(4L)))
+    // over a type disjunction relationships(q) reads the per-hop type
+    // array, which the BFS carries only when the alias is followed
+    val st0 = CypherEngine(GraphStore.empty).execute(
+      "UNWIND $rows AS row MERGE (n:TQ {sid: row.sid}) SET n += {sid: row.sid}",
+      Map("rows" -> (1L to 3L).map(i => Map[String, Any]("sid" -> i)))).store
+    def addEdge(st: GraphStore, t: String, a: Long, b: Long) = CypherEngine(st).execute(
+      s"MATCH (s:TQ {sid: $a}), (t:TQ {sid: $b}) MERGE (s)-[r:$t]->(t)").store
+    val td = CypherEngine(addEdge(addEdge(st0, "FWD", 1L, 2L), "BACK", 2L, 3L))
+    val hops = td.run(
+      """MATCH p = shortestPath((a:TQ {sid: 1})-[:FWD|BACK*]->(b:TQ {sid: 3}))
+         WITH p AS q RETURN relationships(q) AS rs""").collect().head
+      .getSeq[org.apache.spark.sql.Row](0).map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    assert(hops == Seq((1L, 2L, "FWD"), (2L, 3L, "BACK")))
+  }
+
   test("OPTIONAL MATCH shortestPath keeps rows with no path as nulls") {
     val e = CypherEngine(opChain)
     // unbound far endpoint with a prop filter: every source keeps its row;

@@ -269,14 +269,45 @@ class GraphAnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // a parallel pair, a self-loop and a separate component
     val es = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (10L, 11L)).toDF("src", "dst")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val got = GraphAnalytics.degrees(spark, es)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // nothing is left cached behind the answer
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
     val want = es.select(col("src").as("node"))
       .unionAll(es.select(col("dst").as("node")))
       .groupBy("node").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
     assert(got == want)
     assert(got == Map(1L -> 2, 2L -> 3, 3L -> 3, 10L -> 1, 11L -> 1))
+  }
+
+  test("bfsFrames releases its level cuts: storage keeps only the result's blocks") {
+    import org.apache.spark.sql.functions.col
+    // directed chain 1→2→3→4→5→6 with a branch 2→9→10: several levels
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (2L, 9L), (9L, 10L))
+      .toDF("src", "dst")
+    val sc = spark.sparkContext
+    def held[T](f: => T): (T, Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = f
+      (out, (sc.getPersistentRDDs.keySet -- before).size)
+    }
+    // the distributed loop (lo = 1): one checkpoint of the result remains
+    val (dist, n1) = held(GraphAnalytics.bfs(spark, es, 1L, 4, localThreshold = 0))
+    assert(n1 == 1)
+    val rows = dist.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(rows == Map(1L -> 0, 2L -> 1, 3L -> 2, 9L -> 2, 4L -> 3, 10L -> 3, 5L -> 4))
+    // a lo > 1 walk (no reached-set pruning; per-length cuts)
+    val e0 = es.select(col("src").as("__ds"), col("dst").as("__dd"))
+    val (walk, n2) = held(GraphAnalytics.bfsFrames(e0, Seq(1L).toDF("__seed"),
+      lo = 2, hi = 4, keepAll = false, withPath = true))
+    assert(n2 == 1)
+    val paths = walk.collect()
+      .map(r => (r.getLong(1), r.getLong(2), r.getSeq[Long](3))).sortBy(_._1).toSeq
+    assert(paths == Seq((3L, 2L, Seq(1L, 2L, 3L)), (4L, 3L, Seq(1L, 2L, 3L, 4L)),
+      (5L, 4L, Seq(1L, 2L, 3L, 4L, 5L)), (9L, 2L, Seq(1L, 2L, 9L)),
+      (10L, 3L, Seq(1L, 2L, 9L, 10L))))
   }
 
   test("local pagerank/triangles agree with GraphX") {

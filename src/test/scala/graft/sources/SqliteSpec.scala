@@ -1,5 +1,13 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
 import graft.cypher.CypherEngine
 import graft.graph.GraphBuilder
@@ -108,4 +116,112 @@ class SqliteSpec extends SparkSpec {
     assert(schema.edges.exists(_.label == "ORDER_PRODUCT"))
     assert(sales.tables("order_product_table").count() == 2823L)
   }
+
+  private val fixtures = Seq(
+    "src/test/resources/fkweb.sqlite", "src/test/resources/edgecases.sqlite")
+
+  test("every table is one partition with exact row-count and byte statistics") {
+    fixtures.foreach { path =>
+      val db = Sqlite.read(spark, path)
+      assert(db.tables.nonEmpty)
+      db.tables.foreach { case (name, df) =>
+        val n = df.count()
+        val stats = df.queryExecution.optimizedPlan.stats
+        assert(stats.rowCount.contains(BigInt(n)), s"$path $name")
+        val bytes = df.queryExecution.toRdd.map(_.asInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.UnsafeRow].getSizeInBytes.toLong).sum()
+        assert(stats.sizeInBytes == BigInt(bytes.toLong), s"$path $name")
+        assert(df.queryExecution.executedPlan.outputPartitioning == SinglePartition, s"$path $name")
+        assert(df.rdd.getNumPartitions == 1, s"$path $name")
+      }
+    }
+  }
+
+  test("rows and schema equal the Row-encoder hand-off, on every fixture table") {
+    fixtures.foreach { path =>
+      val db = Sqlite.read(spark, path)
+      val ref = SqliteSpec.rowPath(spark, path)
+      assert(db.tables.keySet == ref.keySet, path)
+      db.tables.foreach { case (name, df) =>
+        assert(df.schema == ref(name).schema, s"$path $name")
+        assert(SqliteSpec.bag(df) == SqliteSpec.bag(ref(name)), s"$path $name")
+      }
+    }
+    // the fixture's planted values survive as the coercion rules say
+    val emps = Sqlite.read(spark, "src/test/resources/fkweb.sqlite").tables("employees")
+    val byId = emps.collect().map(r => r.getLong(0) -> r).toMap
+    assert(byId(37L).isNullAt(2)) // 'n/a' in a REAL column
+    assert(byId(41L).isNullAt(4)) // 2.5 in an INTEGER column
+    assert(!byId.contains(17L) && !byId.contains(99L)) // deleted rows
+    assert(byId(3L).isNullAt(5) && byId(4L).getAs[Array[Byte]](5).length == 4)
+  }
+}
+
+object SqliteSpec {
+
+  /** The reader's former hand-off to Catalyst, kept as the reference for
+    * the binary-row path: the same decoded records, coerced to `Row`
+    * values and parallelized through the Row encoder.
+    */
+  def rowPath(spark: org.apache.spark.sql.SparkSession, path: String): Map[String, DataFrame] = {
+    val db = new Sqlite.Db(Files.readAllBytes(Paths.get(path)))
+    val master = db.walk(1).map { case (_, rec) => db.record(rec) }.collect {
+      case Array(t: String, name: String, _, rootpage: Long, sql: String)
+          if t == "table" && !name.startsWith("sqlite_") && rootpage >= 1 &&
+            !sql.toUpperCase.contains("VIRTUAL TABLE") =>
+        (name, rootpage.toInt, sql)
+    }.toSeq
+    def affinity(t: String): DataType = {
+      val u = t.toUpperCase
+      if (u.contains("INT") || u.contains("NUMERIC")) LongType
+      else if (u.contains("DEC") || u.contains("REAL") || u.contains("FLOA") ||
+        u.contains("DOUB")) DoubleType
+      else if (u.contains("BLOB")) BinaryType
+      else StringType
+    }
+    def coerce(v: Any, dt: DataType): Any = (v, dt) match {
+      case (null, _) => null
+      case (l: Long, LongType) => l
+      case (d: Double, LongType) => if (d == d.toLong.toDouble) d.toLong else null
+      case (s: String, LongType) => s.trim.toLongOption.orNull
+      case (l: Long, DoubleType) => l.toDouble
+      case (d: Double, DoubleType) => d
+      case (s: String, DoubleType) => s.trim.toDoubleOption.orNull
+      case (b: Array[Byte], BinaryType) => b
+      case (s: String, StringType) => s
+      case (l: Long, StringType) => l.toString
+      case (d: Double, StringType) => d.toString
+      case (b: Array[Byte], StringType) => new String(b, "UTF-8")
+      case _ => null
+    }
+    master.flatMap { case (name, rootpage, sql) =>
+      Try {
+        val td = Sqlite.parseCreateTable(sql)
+        val rowidAlias = td.columns.zipWithIndex.collectFirst {
+          case (c, i) if td.primaryKeys == Seq(c.name) &&
+            c.sqlType.toUpperCase.trim == "INTEGER" => i
+        }
+        val schema = StructType(td.columns.map(c => StructField(c.name, affinity(c.sqlType))))
+        val rows = db.walk(rootpage).map { case (rowid, rec) =>
+          val vals = db.record(rec)
+          Row.fromSeq(td.columns.indices.map { i =>
+            val raw =
+              if (rowidAlias.contains(i)) rowid
+              else if (i < vals.length) vals(i)
+              else null
+            coerce(raw, schema(i).dataType)
+          })
+        }.toSeq
+        name -> spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, math.max(1, rows.size / 50000)), schema)
+      }.toOption
+    }.toMap
+  }
+
+  /** A frame's rows as a multiset, binary values compared by content. */
+  def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).groupBy(identity).map { case (k, v) => k -> v.size }
 }

@@ -82,6 +82,10 @@ private[cypher] object Elision {
     def proj(p: Projection): Unit = {
       if (p.star) star = true
       p.items.foreach(i => expr(i.expr))
+      // `WITH n AS m` re-binds n's node under m (projection carries its
+      // columns): n is read through the item itself, and a later pattern
+      // mention of m names a bound node, never an elidable endpoint
+      p.items.foreach { case Item(Var(_), Some(a)) => refs += a; case _ => () }
       p.where.foreach(expr)
       p.orderBy.foreach(s => expr(s.expr))
     }

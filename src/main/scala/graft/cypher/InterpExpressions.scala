@@ -989,35 +989,36 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
           stage0.copy(items = starItems ++ stage0.items)
         }
       // node and path variables carry their column sets under their own
-      // name, a path also under an alias (`WITH p AS q`); everything else
+      // name or an alias (`WITH n AS m`, `WITH p AS q`); everything else
       // is a plain expression column
       def structural(v: String): Boolean =
         ctx.labels.contains(v) || ctx.multi.contains(v) || ctx.paths.contains(v)
       def carry(i: Item): Option[(String, String)] = i match {
-        case Item(Var(v), None) if structural(v) => Some(v -> v)
-        case Item(Var(v), Some(a)) if ctx.paths.contains(v) => Some(v -> a)
+        case Item(Var(v), a) if structural(v) => Some(v -> a.getOrElse(v))
         case _ => None
       }
+      def carryAs(from: String, to: String): Column =
+        if (from == to) col(from) else col(from).as(to)
       // (bound name, name after the stage)
       val carriedAs = stage.items.flatMap(carry)
-      val carried = carriedAs.map(_._2)
       val plain = stage.items.filter(carry(_).isEmpty)
       val hasAgg = plain.exists(i => containsAgg(i.expr))
 
       def outName(i: Item): String = i.alias.getOrElse(genName(i.expr))
       val carriedCols: Seq[Column] = carriedAs.flatMap { case (v, a) =>
         if (ctx.labels.contains(v))
-          store.nodes(ctx.labels(v)).columns.map(c => col(s"${v}__$c"))
+          store.nodes(ctx.labels(v)).columns.map(c => carryAs(s"${v}__$c", s"${a}__$c"))
         else if (ctx.paths.contains(v))
           // a path's length, plus the node and per-hop type sequences
           // when the query reads them (Elision.pathUsage)
           Seq("len", "nodes", "rels").filter(f => df.columns.contains(s"${v}__$f"))
-            .map(f => col(s"${v}__$f").as(s"${a}__$f"))
+            .map(f => carryAs(s"${v}__$f", s"${a}__$f"))
         else
           // multi-label: carry the superset of the labels' columns plus the
           // per-row label tag (identity under aggregation = label + key)
           ctx.multi(v).flatMap(l => store.nodes(l).columns).distinct
-            .map(c => col(s"${v}__$c")) :+ col(labelColOf(v))
+            .map(c => carryAs(s"${v}__$c", s"${a}__$c")) :+
+            carryAs(labelColOf(v), labelColOf(a))
       }
 
       var out: DataFrame =
@@ -1032,15 +1033,20 @@ private[cypher] trait InterpExpressions { self: CypherEngine.Interp =>
         }
       if (stage.distinct) out = out.distinct()
 
+      // a carried node's label entry (one label or a disjunction's list),
+      // under its alias when renamed
+      def rebound[T](m: Map[String, T]): Map[String, T] =
+        m.filter { case (v, _) => carriedAs.contains(v -> v) } ++
+          carriedAs.collect { case (v, a) if v != a && m.contains(v) => a -> m(v) }
       val newCtx = Ctx(
-        ctx.labels.filter { case (v, _) => carried.contains(v) },
+        rebound(ctx.labels),
         Map.empty,
         plain.map(outName).toSet,
         carriedAs.collect { case (v, a) if ctx.paths.contains(v) => a }.toSet,
         plain.filter(i => elemIsString(i.expr, ctx, Set.empty)).map(outName).toSet,
         pathRels = carriedAs.flatMap { case (v, a) => ctx.pathRels.get(v).map(a -> _) }.toMap,
         pathRelSeqs = carriedAs.collect { case (v, a) if ctx.pathRelSeqs(v) => a }.toSet,
-        multi = ctx.multi.filter { case (v, _) => carried.contains(v) },
+        multi = rebound(ctx.multi),
         strs = plain.filter(i => isStringTyped(i.expr, ctx)).map(outName).toSet,
         times = plain.filter(i => isTimeTyped(i.expr, ctx)).map(outName).toSet,
         relLists = plain.collect {

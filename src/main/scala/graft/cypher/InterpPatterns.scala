@@ -205,8 +205,7 @@ private[cypher] trait InterpPatterns { self: CypherEngine.Interp =>
         val tgtSchema = native.schema
         val derived = pairs.map { case (src, m) =>
           val snt = store.schema.node(src)
-          val srcDf = store.nodes(src)
-          srcDf.join(m, srcDf(snt.key).cast(StringType) === m("__m_key"), "left_semi")
+          GraphStore.memberRows(store.nodes(src), snt.key, m)
             .select(
               col(snt.key).cast(tgtSchema(nt.key).dataType).as(nt.key) +:
                 nt.properties.map(p =>
@@ -283,20 +282,14 @@ private[cypher] trait InterpPatterns { self: CypherEngine.Interp =>
       val chained = store.memberships.keysIterator.collect {
         case (t, s2) if t == src && s2 != src => s2
       }.toSeq.distinct.sorted.flatMap { s2 =>
-        val snt2 = store.schema.node(s2)
-        val src2 = store.nodes(s2)
-        val m = store.memberships((src, s2))
-        val inFrame = src2.join(m,
-          src2(snt2.key).cast(StringType) === m("__m_key"), "left_semi")
+        val key2 = store.schema.node(s2).key
+        val inFrame = store.memberRows(src, s2)
         val holdsL =
           if (s2 == l) Some(inFrame) // the member's own primary label
-          else store.memberships.get((l, s2)).map { m2 =>
-            inFrame.join(m2,
-              inFrame(snt2.key).cast(StringType) === m2("__m_key"),
-              "left_semi")
-          }
-        holdsL.map(_.select(col(snt2.key).cast(srcKeyType).cast(StringType)
-          .as("__mk")).na.drop().distinct())
+          else store.memberships.get((l, s2))
+            .map(m2 => GraphStore.memberRows(inFrame, key2, m2))
+        holdsL.map(_.select(GraphStore.memberKey(key2, srcKeyType).as("__mk"))
+          .na.drop().distinct())
       }
       direct ++ chained
     }

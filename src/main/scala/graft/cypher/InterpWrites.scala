@@ -48,17 +48,82 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
         .partitionBy(col(et.keyS), col(et.keyT)).orderBy(ord: _*))
     }
 
+    /** The SET values of one node or relationship MERGE, resolved once for
+      * the store upsert and the binding refresh alike ([[mergeValues]]).
+      * `touched`: the non-key properties any SET names, in first-SET
+      * order; `valueOf(p)`: p's post-write value column.
+      */
+    final class MergeValues(ctx: Ctx, v: String, props: Seq[(String, Expr)],
+        val touched: Seq[String], val valueOf: String => Column) {
+      /** The merge props from the pattern exprs, then every touched
+        * property, each named by its property: the upsert's incoming row.
+        */
+      def columns: Seq[Column] =
+        props.map { case (p, e) => column(e, ctx).as(p) } ++
+          touched.map(p => valueOf(p).as(p))
+
+      /** `joined` with `v`'s binding refreshed in place — merge props from
+        * the pattern exprs (covers created rows, whose store-side columns
+        * are null), touched properties from the same value expressions the
+        * store got — and the matched marker `mark` dropped.
+        */
+      def refresh(joined: DataFrame, mark: String): DataFrame =
+        joined.withColumns(
+          props.map { case (p, e) => s"${v}__$p" -> column(e, ctx) }.toMap ++
+            touched.map(p => s"${v}__$p" -> valueOf(p)).toMap)
+          .drop(mark)
+    }
+
+    /** The ON CREATE / ON MATCH value resolver node and relationship MERGE
+      * share. The frame has LEFT-joined the CURRENT store on the merge
+      * pattern: `v`'s pre-write columns are bound as `${v}__<p>` and
+      * `matched` marks the rows that found a stored node or edge, so ON
+      * MATCH expressions may read current values (`ON MATCH SET n.cnt =
+      * n.cnt + 1`, standard Cypher counters). A matched row takes ON MATCH,
+      * else SET, else keeps its stored value; a created row takes ON
+      * CREATE, else SET, else null. A SET of a merge-pattern property
+      * (`props`) is ignored: the merge value is authoritative (the
+      * reference's `SET n += {key: row.key, …}` re-sets the key to the
+      * identical value, final/inject_node.py:353-356). `existing` (the
+      * store columns before the write) is None for a brand-new label or
+      * type: nothing can match, and ON MATCH expressions may reference
+      * columns that don't exist yet, so only the create branch compiles.
+      * Value expressions compile under `ctxN`, where `v` is bound.
+      */
+    def mergeValues(ctx: Ctx, ctxN: Ctx, v: String, props: Seq[(String, Expr)],
+        sets: Seq[(String, Expr)], onCreate: Seq[(String, Expr)],
+        onMatch: Seq[(String, Expr)], matched: Column,
+        existing: Option[Seq[String]]): MergeValues = {
+      val mergeKeys = props.map(_._1)
+      def toMap(xs: Seq[(String, Expr)]) = {
+        val m = collection.mutable.LinkedHashMap[String, Expr]()
+        xs.foreach { case (k, e) => if (!mergeKeys.contains(k)) m(k) = e }
+        m
+      }
+      val setMap = toMap(sets)
+      val ocMap = toMap(onCreate)
+      val omMap = toMap(onMatch)
+      def branch(m: collection.Map[String, Expr], p: String, otherwise: Column) =
+        m.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
+          .getOrElse(otherwise)
+      def valueOf(p: String): Column = existing match {
+        case None => branch(ocMap, p, lit(null))
+        case Some(cols) =>
+          when(matched,
+            branch(omMap, p, if (cols.contains(p)) col(s"${v}__$p") else lit(null)))
+            .otherwise(branch(ocMap, p, lit(null)))
+      }
+      new MergeValues(ctx, v, props,
+        (setMap.keys ++ ocMap.keys ++ omMap.keys).toSeq.distinct, valueOf)
+    }
+
     /** `MERGE (n:L {merge props}) [SET n += {…} / SET n.p = e]*` with
       * optional `ON CREATE SET` / `ON MATCH SET`, fused into one
       * [[GraphWriter.mergeNodes]] upsert. The frame first LEFT-joins the
       * CURRENT node store on the merge props, which both binds `n` and
-      * yields a matched marker — so ON MATCH expressions may reference the
-      * node's current properties (`ON MATCH SET n.cnt = n.cnt + 1`,
-      * standard Cypher counters). Post-write values are recomputed onto the
-      * frame column-wise (no second join against the updated store).
-      * A SET of a merge-key column is ignored: the merge value is
-      * authoritative (the reference's `SET n += {key: row.key, …}` re-sets
-      * the key to the identical value, final/inject_node.py:353-356).
+      * yields the matched marker [[mergeValues]] resolves against.
+      * Post-write values are recomputed onto the frame column-wise (no
+      * second join against the updated store).
       */
     def mergeNodeWrite(df: DataFrame, ctx: Ctx, pat: NodePat,
         sets: Seq[(String, Expr)], onCreate: Seq[(String, Expr)],
@@ -75,18 +140,8 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       if (pat.props.isEmpty)
         throw CypherException("MERGE node pattern needs at least one merge property")
       val mergeKeys = pat.props.map(_._1)
-      def toMap(xs: Seq[(String, Expr)]) = {
-        val m = collection.mutable.LinkedHashMap[String, Expr]()
-        xs.foreach { case (k, e) => if (!mergeKeys.contains(k)) m(k) = e }
-        m
-      }
-      val setMap = toMap(sets)
-      val ocMap = toMap(onCreate)
-      val omMap = toMap(onMatch)
-      val touched = (setMap.keys ++ ocMap.keys ++ omMap.keys).toSeq.distinct
       val mark = s"__merged_$v"
-      val existedCols: Seq[String] =
-        store.nodes.get(label).map(_.columns.toSeq).getOrElse(Nil)
+      val existedCols = store.nodes.get(label).map(_.columns.toSeq)
       val joined = store.nodes.get(label) match {
         case Some(_) =>
           val nd = nodeDf(v, label).withColumn(mark, lit(true))
@@ -97,22 +152,9 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       }
       val ctxN = ctx.copy(labels = ctx.labels + (v -> label))
       val matched = col(mark).isNotNull
-      def cur(p: String): Column =
-        if (existedCols.contains(p)) col(s"${v}__$p") else lit(null)
-      def valueOf(p: String): Column =
-        if (existedCols.isEmpty)
-          // brand-new label: nothing can match, and ON MATCH expressions
-          // may reference columns that don't exist yet — compile only the
-          // create branch
-          ocMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-            .getOrElse(lit(null))
-        else
-          when(matched,
-            omMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-              .getOrElse(cur(p)))
-            .otherwise(
-              ocMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-                .getOrElse(lit(null)))
+      val mv = mergeValues(ctx, ctxN, v, pat.props, sets, onCreate, onMatch,
+        matched, existedCols)
+      import mv.{touched, valueOf}
       // membership routing (r13 verdict directive #4 — closes §2.15
       // deviation 6): a MERGE on a label holding membership-derived rows
       // can MATCH a member, whose true home is another source store —
@@ -129,10 +171,8 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       val inboundSrcs = store.memberships.keysIterator
         .collect { case (t, s) if t == label => s }.toSeq.distinct.sorted
       if (inboundSrcs.isEmpty || existedCols.isEmpty) {
-        val incoming = joined.select(
-          pat.props.map { case (p, e) => column(e, ctx).as(p) } ++
-            touched.map(p => valueOf(p).as(p)): _*)
-        store = GraphWriter.mergeNodes(store, label, incoming, mergeKeys)
+        store = GraphWriter.mergeNodes(store, label, joined.select(mv.columns: _*),
+          mergeKeys)
       } else {
         val nt = store.schema.node(label)
         val keyRen = col(s"${v}__${nt.key}").cast(StringType)
@@ -143,16 +183,11 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
             .select(col(nt.key).cast(StringType).as(natM)).distinct(),
           keyRen === col(natM), "left_outer")
         val memCols = inboundSrcs.map { s =>
-          val snt = store.schema.node(s)
-          val srcDf = store.nodes(s)
-          val m = store.memberships((label, s))
+          val sKey = store.schema.node(s).key
           val ren = s"__mrg_ren_$s"
           val sk = s"__mrg_key_$s"
-          val sKeys = srcDf
-            .join(m, srcDf(snt.key).cast(StringType) === m("__m_key"),
-              "left_semi")
-            .select(col(snt.key).cast(tgtType).cast(StringType).as(ren),
-              col(snt.key).as(sk))
+          val sKeys = store.memberRows(label, s)
+            .select(GraphStore.memberKey(sKey, tgtType).as(ren), col(sKey).as(sk))
           marked = marked.join(sKeys, keyRen === col(ren), "left_outer")
           (s, ren, sk)
         }
@@ -176,10 +211,8 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
                 s"— matched membership-derived rows from :$s carry no such " +
                 "stored property (mutate them through their own label)")
         }
-        val incoming = marked.filter(!matched || col(natM).isNotNull).select(
-          pat.props.map { case (p, e) => column(e, ctx).as(p) } ++
-            touched.map(p => valueOf(p).as(p)): _*)
-        store = GraphWriter.mergeNodes(store, label, incoming, mergeKeys)
+        store = GraphWriter.mergeNodes(store, label,
+          marked.filter(!matched || col(natM).isNotNull).select(mv.columns: _*), mergeKeys)
         memCols.foreach { case (s, ren, sk) =>
           if (touched.nonEmpty && memHit(s)) {
             val snt = store.schema.node(s)
@@ -190,14 +223,7 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
           }
         }
       }
-      // refresh the binding in place: merge keys from the pattern exprs
-      // (covers created rows, whose store-side columns are null), touched
-      // properties from the same value expressions the store got
-      var out = joined.withColumns(
-        pat.props.map { case (p, e) => s"${v}__$p" -> column(e, ctx) }.toMap ++
-          touched.map(p => s"${v}__$p" -> valueOf(p)).toMap)
-      out = out.drop(mark)
-      (out, ctxN)
+      (mv.refresh(joined, mark), ctxN)
     }
 
     /** `MERGE (s)-[r:L {props}]->(t)` / CREATE equivalent: both endpoints
@@ -210,8 +236,9 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       * r.n = r.n + 1`), the frame first LEFT-joins the CURRENT edge store
       * on (endpoint keys + merge props), which binds `r`'s current
       * properties and yields a matched marker — the same pre-join shape as
-      * [[mergeNodeWrite]] — then hands the resolved values to
-      * [[GraphWriter.upsertEdges]]'s full-outer upsert.
+      * [[mergeNodeWrite]] and the same [[mergeValues]] resolver — then
+      * hands the resolved values to [[GraphWriter.upsertEdges]]'s
+      * full-outer upsert.
       */
     def mergeEdgeWrite(df: DataFrame, ctx: Ctx, path: PathPat,
         create: Boolean,
@@ -273,22 +300,11 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
         val rv = rel.variable.getOrElse(anonVar())
         if (ctx.rels.contains(rv) || ctx.labels.contains(rv))
           throw CypherException(s"MERGE relationship variable $rv is already bound")
-        val mergeKeys = rel.props.map(_._1)
-        def toMap(xs: Seq[(String, Expr)]) = {
-          val m = collection.mutable.LinkedHashMap[String, Expr]()
-          xs.foreach { case (k, e) => if (!mergeKeys.contains(k)) m(k) = e }
-          m
-        }
-        val setMap = toMap(sets)
-        val ocMap = toMap(onCreate)
-        val omMap = toMap(onMatch)
-        val touched = (setMap.keys ++ ocMap.keys ++ omMap.keys).toSeq.distinct
         val mark = s"__emerged_$rv"
         // captured BEFORE the upsert mutates `store`: valueOf is evaluated
         // again for the post-write frame refresh
-        val brandNew = !store.edges.contains(label)
-        val existedProps: Seq[String] =
-          if (!brandNew) store.schema.edge(label).properties else Nil
+        val existedProps =
+          store.edges.get(label).map(_ => store.schema.edge(label).properties)
         val joined = store.edges.get(label) match {
           case Some(ed0) =>
             val ed = ed0.columns.foldLeft(ed0)((d, c) =>
@@ -301,36 +317,15 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
           case None => df.withColumn(mark, lit(null).cast("boolean"))
         }
         val ctxN = ctx.copy(rels = ctx.rels + (rv -> RelInfo(label, srcVar, dstVar)))
-        val matched = col(mark).isNotNull
-        def cur(p: String): Column =
-          if (existedProps.contains(p)) col(s"${rv}__$p") else lit(null)
-        def valueOf(p: String): Column =
-          if (brandNew)
-            // brand-new type: nothing can match — compile only the create
-            // branch (ON MATCH may reference properties that don't exist)
-            ocMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-              .getOrElse(lit(null))
-          else
-            when(matched,
-              omMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-                .getOrElse(cur(p)))
-              .otherwise(
-                ocMap.get(p).orElse(setMap.get(p)).map(e => columnL(e, ctxN, Map.empty))
-                  .getOrElse(lit(null)))
+        val mv = mergeValues(ctx, ctxN, rv, rel.props, sets, onCreate, onMatch,
+          col(mark).isNotNull, existedProps)
         val incoming = joined.select(
           nodeKeyCol(srcVar, ctx).as(keyS) +: nodeKeyCol(dstVar, ctx).as(keyT) +:
-            (rel.props.map { case (p, e) => column(e, ctx).as(p) } ++
-              touched.map(p => valueOf(p).as(p))): _*)
+            mv.columns: _*)
         store = GraphWriter.upsertEdges(store, label, ctx.labels(srcVar),
-          ctx.labels(dstVar), keyS, keyT, incoming, mergeKeys,
+          ctx.labels(dstVar), keyS, keyT, incoming, rel.props.map(_._1),
           endpointsValidated = true)
-        // refresh the binding in place: merge props from the pattern exprs,
-        // touched properties from the same value expressions the store got
-        var out = joined.withColumns(
-          rel.props.map { case (p, e) => s"${rv}__$p" -> column(e, ctx) }.toMap ++
-            touched.map(p => s"${rv}__$p" -> valueOf(p)).toMap)
-        out = out.drop(mark)
-        (out, ctxN)
+        (mv.refresh(joined, mark), ctxN)
       }
     }
 
@@ -385,14 +380,6 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       (df, ctx)
     }
 
-    /** Standalone SET on an already-bound node or relationship variable:
-      * upsert the store (node key / edge identity), refresh the frame's
-      * columns in place. A relationship's identity is its endpoint keys
-      * plus every property column the match bound — the same parallel-edge
-      * rule as DELETE r ([[deleteVar]]): `SET r.w = 1` on a matched
-      * `()-[r:T {k: 2}]->()` touches only the parallel edges whose
-      * properties matched.
-      */
     /** `SET v:Label` / `REMOVE v:Label` — label membership mutation.
       * Secondary membership is PROVENANCE rows `(targetLabel,
       * sourceLabel) → key` in [[GraphStore.memberships]], never rows in
@@ -446,15 +433,10 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
             Seq("__m_key"), "left_semi")
           val tgtType = store.nodes(label).schema(nt.key).dataType
           val members = inbound.map { s =>
-            val snt = store.schema.node(s)
-            val srcDf = store.nodes(s)
-            val m = store.memberships((label, s))
-            s -> srcDf
-              .join(m, srcDf(snt.key).cast(StringType) === m("__m_key"),
-                "left_semi")
-              .select(col(snt.key).cast(tgtType).cast(StringType)
-                  .as("__t_key"),
-                col(snt.key).cast(StringType).as("__m_key"))
+            val sKey = store.schema.node(s).key
+            s -> store.memberRows(label, s)
+              .select(GraphStore.memberKey(sKey, tgtType).as("__t_key"),
+                col(sKey).cast(StringType).as("__m_key"))
               .join(matchedKeys.withColumnRenamed("__m_key", "__t_key"),
                 Seq("__t_key"), "left_semi")
               .select("__m_key").distinct()
@@ -493,11 +475,9 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
               if (!store.schema.nodes.exists(_.name == l)) {
                 // brand-new label: a node type cloning v's schema, native
                 // store EMPTY — every row is membership-derived
-                store = store.copy(
-                  schema = store.schema.copy(nodes = store.schema.nodes :+
-                    NodeType(l, nt.key, properties = nt.properties,
-                      keyUnique = true)),
-                  nodes = store.nodes + (l -> store.nodes(label).limit(0)))
+                store = store.withNode(
+                  NodeType(l, nt.key, properties = nt.properties, keyUnique = true),
+                  store.nodes(label).limit(0))
               }
               val old = store.memberships.get((l, src))
               val merged = old match {
@@ -566,44 +546,62 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
       (df, ctx)
     }
 
+    /** `SET v = {…}` (replace-all) over label or type `label`'s declared
+      * properties: map keys must be known non-identity properties, and
+      * EVERY stored property is emitted — the map value, or a
+      * [[TypedNull]] of the store column's type (the fixed-schema analogue
+      * of Neo4j's removal). A MERGE's own pattern props are excluded later
+      * by [[mergeValues]] (the merge identity never resets).
+      */
+    def replaceAll(v: String, m: Seq[(String, Expr)], label: String,
+        node: Boolean): Seq[(String, Expr)] = {
+      val (stored, frame, keyNames, what) =
+        if (node) {
+          val nt = store.schema.node(label)
+          (nt.properties, store.nodes(label), Seq(nt.key), s"node :$label")
+        } else {
+          val et = store.schema.edge(label)
+          (et.properties, store.edges(label), Seq(et.keyS, et.keyT),
+            s"relationship :$label")
+        }
+      m.foreach { case (p, _) =>
+        if (keyNames.contains(p)) throw CypherException(
+          s"SET $v = {…} cannot replace '$p' — it is the $what's identity; " +
+            "use explicit SET items for non-identity properties")
+        if (!stored.contains(p)) throw CypherException(
+          s"SET $v = {…}: unknown property '$p' for the $what (the store " +
+            "schema is fixed)")
+      }
+      stored.map(p => p -> m.find(_._1 == p).map(_._2).getOrElse(
+        TypedNull(frame.schema.fields.find(_.name == p).map(_.dataType)
+          .getOrElse(StringType))))
+    }
+
+    /** Standalone SET on an already-bound node or relationship variable:
+      * upsert the store (node key / edge identity), refresh the frame's
+      * columns in place. A relationship's identity is its endpoint keys
+      * plus every property column the match bound — the same parallel-edge
+      * rule as DELETE r ([[deleteVar]]): `SET r.w = 1` on a matched
+      * `()-[r:T {k: 2}]->()` touches only the parallel edges whose
+      * properties matched.
+      */
     def standaloneSet(df: DataFrame, ctx: Ctx, item: SetItem): (DataFrame, Ctx) = {
       item match {
         case SetLabel(v, ls, add) => return setLabels(df, ctx, v, ls, add)
         case _ => ()
       }
-      // normalize to (prop, value-column) pairs; `SET v = {…}` (replace-
-      // all) expands to EVERY stored property — absent ones reset to a
-      // typed null (the fixed-schema analogue of Neo4j's removal)
-      def replaceAll(v: String, m: Seq[(String, Expr)],
-          stored: Seq[String], schema: StructType,
-          keyNames: Seq[String], what: String): Seq[(String, Column)] = {
-        m.foreach { case (p, _) =>
-          if (keyNames.contains(p)) throw CypherException(
-            s"SET $v = {…} cannot replace '$p' — it is the $what's identity; " +
-              "use explicit SET items for non-identity properties")
-          if (!stored.contains(p)) throw CypherException(
-            s"SET $v = {…}: unknown property '$p' for the $what (the store " +
-              "schema is fixed)")
-        }
-        stored.map(p => p -> m.find(_._1 == p).map { case (_, e) => column(e, ctx) }
-          .getOrElse(lit(null).cast(schema(p).dataType)))
-      }
-      val (v, pairs) = item match {
-        case SetPlus(x, m) => (x, m.map { case (p, e) => p -> column(e, ctx) })
-        case SetProp(x, p, e) => (x, Seq(p -> column(e, ctx)))
+      val (v, exprs) = item match {
+        case SetPlus(x, m) => (x, m)
+        case SetProp(x, p, e) => (x, Seq(p -> e))
         case SetAll(x, m) => ctx.labels.get(x) match {
-          case Some(label) =>
-            val nt = store.schema.node(label)
-            (x, replaceAll(x, m, nt.properties, store.nodes(label).schema,
-              Seq(nt.key), s"node :$label"))
+          case Some(label) => (x, replaceAll(x, m, label, node = true))
           case None =>
             val ri = ctx.rels.getOrElse(x, throw CypherException(
               s"SET target $x is not a bound node or single-type relationship variable"))
-            val et = store.schema.edge(ri.label)
-            (x, replaceAll(x, m, et.properties, store.edges(ri.label).schema,
-              Seq(et.keyS, et.keyT), s"relationship :${ri.label}"))
+            (x, replaceAll(x, m, ri.label, node = false))
         }
       }
+      val pairs = exprs.map { case (p, e) => p -> column(e, ctx) }
       ctx.labels.get(v) match {
         case Some(label) =>
           val nt = store.schema.node(label)
@@ -690,44 +688,45 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
         case SetLabel(x, ls, _) => throw CypherException(
           s"SET $x:${ls.mkString(":")} is not supported in this position")
       }.flatten
-      /** Replace-all expansion over a declared property list: map keys
-        * must be known non-identity properties; every stored property is
-        * emitted (map value, or a typed null reset). Merge-pattern props
-        * are excluded downstream by mergeNode/EdgeWrite's toMap (the
-        * merge identity never resets).
+      /** Rejects an ON CREATE/ON MATCH item whose variable is not the
+        * merge's `target` (None: an anonymous relationship, which no item
+        * can name) with `err`. `labelErr`, given for relationship MERGE,
+        * rejects every label item first.
         */
-      def expandOver(v: String, stored: Seq[String], schema: Option[StructType],
-          keyNames: Seq[String], what: String)(
-          m: Seq[(String, Expr)]): Seq[(String, Expr)] = {
-        m.foreach { case (p, _) =>
-          if (keyNames.contains(p)) throw CypherException(
-            s"SET $v = {…} cannot replace '$p' — it is the $what's identity; " +
-              "use explicit SET items for non-identity properties")
-          if (!stored.contains(p)) throw CypherException(
-            s"SET $v = {…}: unknown property '$p' for the $what (the store " +
-              "schema is fixed)")
+      def checkTargets(items: Seq[SetItem], target: Option[String], err: String,
+          labelErr: Option[String]): Unit = items.foreach { item =>
+        val x = item match {
+          case SetPlus(x, _) => x
+          case SetProp(x, _, _) => x
+          case SetAll(x, _) => x
+          case SetLabel(x, _, _) => labelErr.foreach(e => throw CypherException(e)); x
         }
-        stored.map(p => p -> m.find(_._1 == p).map(_._2).getOrElse(
-          TypedNull(schema.flatMap(s => s.fields.find(_.name == p))
-            .map(_.dataType).getOrElse(StringType))))
+        if (!target.contains(x)) throw CypherException(err)
+      }
+      /** The property SETs of `target` fused into the MERGE at `at`: every
+        * immediately-following SET clause whose items all set properties of
+        * `target` (replace-all and labels stay standalone), flattened, and
+        * the index of the first write after them.
+        */
+      def fusedSets(at: Int, target: Option[String]): (Seq[(String, Expr)], Int) = {
+        val fused = writes.drop(at + 1).takeWhile {
+          case SetClause(items) => items.forall {
+            case SetPlus(x, _) => target.contains(x)
+            case SetProp(x, _, _) => target.contains(x)
+            case _ => false
+          }
+          case _ => false
+        }
+        (fused.collect { case SetClause(items) => items }.flatMap(flat(_)),
+          at + 1 + fused.size)
       }
       while (i < writes.length) {
         writes(i) match {
           case MergeClause(path, onCreate, onMatch) if path.hops.isEmpty =>
             val v = path.head.variable.getOrElse(
               throw CypherException("MERGE node pattern needs a variable"))
-            def targets(items: Seq[SetItem], who: String): Unit = items.foreach {
-              case SetPlus(x, _) if x != who => throw CypherException(
-                s"ON CREATE/ON MATCH SET must target the merge variable $who")
-              case SetProp(x, _, _) if x != who => throw CypherException(
-                s"ON CREATE/ON MATCH SET must target the merge variable $who")
-              case SetAll(x, _) if x != who => throw CypherException(
-                s"ON CREATE/ON MATCH SET must target the merge variable $who")
-              case SetLabel(x, _, _) if x != who => throw CypherException(
-                s"ON CREATE/ON MATCH SET must target the merge variable $who")
-              case _ => ()
-            }
-            targets(onCreate, v); targets(onMatch, v)
+            checkTargets(onCreate ++ onMatch, Some(v),
+              s"ON CREATE/ON MATCH SET must target the merge variable $v", None)
             // label additions apply POST-merge to the created / matched
             // subset (discriminated against the label's pre-merge key set)
             val labelOnCreate = onCreate.collect { case sl: SetLabel => sl }
@@ -745,28 +744,14 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
                 // rows after the store advances
                 (n.select(col(k).as("__prek")), k)
               }
-            val sets = Seq.newBuilder[(String, Expr)]
-            var j = i + 1
-            var fusing = true
-            while (fusing && j < writes.length) writes(j) match {
-              case SetClause(items) if items.forall {
-                    case SetPlus(x, _) => x == v
-                    case SetProp(x, _, _) => x == v
-                    case _ => false // replace-all/labels: standalone below
-                  } =>
-                sets ++= flat(items)
-                j += 1
-              case _ => fusing = false
-            }
+            val (sets, next) = fusedSets(i, Some(v))
             // ON-SET replace-all expands against the merge label's
             // declared schema (brand-new labels have none to expand
             // against and keep the rejection)
-            val nodeExpand = path.head.label.flatMap(label =>
-              store.schema.nodes.find(_.name == label).map(nt =>
-                expandOver(v, nt.properties,
-                  store.nodes.get(label).map(_.schema), Seq(nt.key),
-                  s"node :$label") _))
-            val (d2, c2) = mergeNodeWrite(df, ctx, path.head, sets.result(),
+            val nodeExpand = path.head.label
+              .filter(l => store.schema.nodes.exists(_.name == l))
+              .map(l => (m: Seq[(String, Expr)]) => replaceAll(v, m, l, node = true))
+            val (d2, c2) = mergeNodeWrite(df, ctx, path.head, sets,
               flat(onCreateRest, nodeExpand), flat(onMatchRest, nodeExpand))
             df = d2; ctx = c2
             if (labelOnCreate.nonEmpty || labelOnMatch.nonEmpty) {
@@ -782,52 +767,27 @@ private[cypher] trait InterpWrites { self: CypherEngine.Interp =>
               labelOnMatch.foreach(sl =>
                 setLabels(subset(created = false), c2, v, sl.labels, sl.add))
             }
-            i = j
+            i = next
           case MergeClause(path, onCreate, onMatch) if path.hops.size == 1 =>
             // ON CREATE/ON MATCH SET and immediately-following SET clauses
             // must target the merge's relationship variable (node-endpoint
             // SETs are separate standalone clauses, not part of the merge)
             val rvOpt = path.hops.head._1.variable
-            def relTargets(items: Seq[SetItem]): Unit = items.foreach {
-              case SetPlus(x, _) if !rvOpt.contains(x) => throw CypherException(
-                s"ON CREATE/ON MATCH SET on a relationship MERGE must target " +
-                  s"its relationship variable${rvOpt.fold("")(" " + _)}")
-              case SetProp(x, _, _) if !rvOpt.contains(x) => throw CypherException(
-                s"ON CREATE/ON MATCH SET on a relationship MERGE must target " +
-                  s"its relationship variable${rvOpt.fold("")(" " + _)}")
-              case SetAll(x, _) if !rvOpt.contains(x) => throw CypherException(
-                s"ON CREATE/ON MATCH SET on a relationship MERGE must target " +
-                  s"its relationship variable${rvOpt.fold("")(" " + _)}")
-              case SetLabel(_, _, _) => throw CypherException(
-                "SET r:Label on a relationship MERGE — relationships have " +
-                  "a single type; labels apply to nodes")
-              case _ => ()
-            }
-            relTargets(onCreate); relTargets(onMatch)
-            val sets = Seq.newBuilder[(String, Expr)]
-            var j = i + 1
-            var fusing = rvOpt.nonEmpty
-            while (fusing && j < writes.length) writes(j) match {
-              case SetClause(items) if items.forall {
-                    case SetPlus(x, _) => rvOpt.contains(x)
-                    case SetProp(x, _, _) => rvOpt.contains(x)
-                    case _ => false // replace-all/labels: standalone below
-                  } =>
-                sets ++= flat(items)
-                j += 1
-              case _ => fusing = false
-            }
+            checkTargets(onCreate ++ onMatch, rvOpt,
+              s"ON CREATE/ON MATCH SET on a relationship MERGE must target " +
+                s"its relationship variable${rvOpt.fold("")(" " + _)}",
+              Some("SET r:Label on a relationship MERGE — relationships have " +
+                "a single type; labels apply to nodes"))
+            val (sets, next) = fusedSets(i, rvOpt)
             val relExpand = for {
               rv <- rvOpt
               lbl <- path.hops.head._1.labels.headOption
-              et <- store.schema.edges.find(_.label == lbl)
-            } yield expandOver(rv, et.properties,
-              store.edges.get(lbl).map(_.schema), Seq(et.keyS, et.keyT),
-              s"relationship :$lbl") _
+              if store.schema.edges.exists(_.label == lbl)
+            } yield (m: Seq[(String, Expr)]) => replaceAll(rv, m, lbl, node = false)
             val (d2, c2) = mergeEdgeWrite(df, ctx, path, create = false,
-              sets.result(), flat(onCreate, relExpand), flat(onMatch, relExpand))
+              sets, flat(onCreate, relExpand), flat(onMatch, relExpand))
             df = d2; ctx = c2
-            i = j max (i + 1)
+            i = next
           case MergeClause(_, _, _) =>
             throw CypherException(
               "MERGE supports a single node or a single-relationship pattern")

@@ -6,6 +6,42 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, Codegen
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+/** A double-valued kernel over two numeric array columns — the base
+  * [[DotProduct]] and [[CosineSimilarity]] share: the input type check, the
+  * element types, and the interpreted per-element getters (any numeric
+  * element type read as a double). Nullable: a length mismatch yields null
+  * even over non-null inputs.
+  */
+abstract class NumericArrayKernel extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(_: NumericType, _), ArrayType(_: NumericType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects two numeric arrays, got ${l.catalogString} and ${r.catalogString}")
+  }
+
+  protected def elemType(e: Expression): DataType =
+    e.dataType.asInstanceOf[ArrayType].elementType
+
+  private def getter(dt: DataType): (ArrayData, Int) => Double = dt match {
+    case FloatType => (a, i) => a.getFloat(i).toDouble
+    case DoubleType => (a, i) => a.getDouble(i)
+    case IntegerType => (a, i) => a.getInt(i).toDouble
+    case LongType => (a, i) => a.getLong(i).toDouble
+    case ShortType => (a, i) => a.getShort(i).toDouble
+    case ByteType => (a, i) => a.getByte(i).toDouble
+    case d: DecimalType => (a, i) => a.getDecimal(i, d.precision, d.scale).toDouble
+    case other => throw new IllegalStateException(s"$prettyName: unsupported element type $other")
+  }
+
+  @transient protected lazy val getLeft = getter(elemType(left))
+  @transient protected lazy val getRight = getter(elemType(right))
+}
+
 /** Σ aᵢ·bᵢ over two numeric array columns as a NATIVE Catalyst expression
   * with whole-stage codegen — the hot-path kernel of every similarity scan
   * (brute-force cosine, LSH re-rank, IVF assignment).
@@ -21,36 +57,9 @@ import org.apache.spark.sql.types._
   * differ (the HOF version also nulls there via null-padded zip); null
   * ELEMENTS contribute 0.
   */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression) extends NumericArrayKernel {
 
   override def prettyName: String = "graft_dot"
-  override def dataType: DataType = DoubleType
-  // length mismatch yields null even over non-null inputs
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(_: NumericType, _), ArrayType(_: NumericType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two numeric arrays, got ${l.catalogString} and ${r.catalogString}")
-  }
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  private def getter(dt: DataType): (ArrayData, Int) => Double = dt match {
-    case FloatType => (a, i) => a.getFloat(i).toDouble
-    case DoubleType => (a, i) => a.getDouble(i)
-    case IntegerType => (a, i) => a.getInt(i).toDouble
-    case LongType => (a, i) => a.getLong(i).toDouble
-    case ShortType => (a, i) => a.getShort(i).toDouble
-    case ByteType => (a, i) => a.getByte(i).toDouble
-    case d: DecimalType => (a, i) => a.getDecimal(i, d.precision, d.scale).toDouble
-    case other => throw new IllegalStateException(s"$prettyName: unsupported element type $other")
-  }
-
-  @transient private lazy val getLeft = getter(elemType(left))
-  @transient private lazy val getRight = getter(elemType(right))
 
   override protected def nullSafeEval(input1: Any, input2: Any): Any = {
     val a = input1.asInstanceOf[ArrayData]
@@ -108,35 +117,9 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   * null on length mismatch or null input, and null — not NaN — when a
   * norm is exactly zero (matching non-ANSI Divide).
   */
-case class CosineSimilarity(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSimilarity(left: Expression, right: Expression) extends NumericArrayKernel {
 
   override def prettyName: String = "graft_cosine"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(_: NumericType, _), ArrayType(_: NumericType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two numeric arrays, got ${l.catalogString} and ${r.catalogString}")
-  }
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  private def getter(dt: DataType): (ArrayData, Int) => Double = dt match {
-    case FloatType => (a, i) => a.getFloat(i).toDouble
-    case DoubleType => (a, i) => a.getDouble(i)
-    case IntegerType => (a, i) => a.getInt(i).toDouble
-    case LongType => (a, i) => a.getLong(i).toDouble
-    case ShortType => (a, i) => a.getShort(i).toDouble
-    case ByteType => (a, i) => a.getByte(i).toDouble
-    case d: DecimalType => (a, i) => a.getDecimal(i, d.precision, d.scale).toDouble
-    case other => throw new IllegalStateException(s"$prettyName: unsupported element type $other")
-  }
-
-  @transient private lazy val getLeft = getter(elemType(left))
-  @transient private lazy val getRight = getter(elemType(right))
 
   override protected def nullSafeEval(input1: Any, input2: Any): Any = {
     val a = input1.asInstanceOf[ArrayData]

@@ -1,8 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.util.{EngineCache, FrameKey}
 
@@ -78,18 +78,52 @@ final case class GraphStore(
     * column — never a fact-table shuffle.
     */
   def membershipCollisionFrame(t: String, s: String): DataFrame = {
-    val m = memberships((t, s))
     val nt = schema.node(t)
-    val snt = schema.node(s)
-    val srcDf = nodes(s)
-    val tgtType = nodes(t).schema(nt.key).dataType
-    srcDf
-      .join(m, srcDf(snt.key).cast(StringType) === m("__m_key"), "left_semi")
-      .select(col(snt.key).cast(tgtType).cast(StringType).as("__t_key"))
+    memberRows(t, s)
+      .select(GraphStore.memberKey(schema.node(s).key, nodes(t).schema(nt.key).dataType)
+        .as("__t_key"))
       .na.drop()
       .join(nodes(t).select(col(nt.key).cast(StringType).as("__t_key")),
         Seq("__t_key"), "left_semi")
       .distinct()
+  }
+
+  /** The rows of source store `s` that are members of label `t` through
+    * membership pair `(t, s)` ([[GraphStore.memberRows]]).
+    */
+  private[graft] def memberRows(t: String, s: String): DataFrame =
+    GraphStore.memberRows(nodes(s), schema.node(s).key, memberships((t, s)))
+
+  /** `store` with node type `nt` registered over `frame`: a type of the
+    * same name is replaced in place, a new one appended.
+    */
+  private[graft] def withNode(nt: NodeType, frame: DataFrame): GraphStore = {
+    val i = schema.nodes.indexWhere(_.name == nt.name)
+    copy(
+      schema = schema.copy(nodes =
+        if (i < 0) schema.nodes :+ nt else schema.nodes.updated(i, nt)),
+      nodes = nodes + (nt.name -> frame))
+  }
+
+  /** `store` with edge type `et` registered over `frame` (replaced in
+    * place, or appended when new), keeping [[validatedEdges]] true to the
+    * rows: `endpointsValidated` vouches that every row the write added
+    * resolves to stored endpoints. A new type built from validated rows
+    * starts validated; validated new rows keep an already-validated type
+    * validated but cannot retroactively validate existing rows; any
+    * unvalidated row clears the type.
+    */
+  private[graft] def withEdge(et: EdgeType, frame: DataFrame,
+      endpointsValidated: Boolean): GraphStore = {
+    val i = schema.edges.indexWhere(_.label == et.label)
+    copy(
+      schema = schema.copy(edges =
+        if (i < 0) schema.edges :+ et else schema.edges.updated(i, et)),
+      edges = edges + (et.label -> frame),
+      validatedEdges =
+        if (!endpointsValidated) validatedEdges - et.label
+        else if (i < 0) validatedEdges + et.label
+        else validatedEdges)
   }
 
   /** Graph statistics report — nodes by label, edges by type (the
@@ -256,6 +290,21 @@ object GraphStore {
     */
   private[graph] def rowCount(df: DataFrame): Long =
     df.select().queryExecution.toRdd.count()
+
+  /** The membership rule, stated once for every reader and writer of
+    * provenance frames: a member is a row of source frame `src` whose key
+    * column `srcKey`, rendered as a string, appears in the provenance
+    * frame `m`'s `__m_key` column (one semi-join).
+    */
+  private[graft] def memberRows(src: DataFrame, srcKey: String, m: DataFrame): DataFrame =
+    src.join(m, src(srcKey).cast(StringType) === m("__m_key"), "left_semi")
+
+  /** A member's key rendered in the target label's keyspace: the source
+    * key `srcKey` cast to the target key type, then to a string — the
+    * rendering every target-side key join of a member row compares.
+    */
+  private[graft] def memberKey(srcKey: String, targetKeyType: DataType): Column =
+    col(srcKey).cast(targetKeyType).cast(StringType)
 
   def load(spark: SparkSession, root: String, schema: GraphSchema): GraphStore = {
     val (validated, memberPairs) = readMeta(spark, root)

@@ -41,6 +41,47 @@ object GraphWriter {
         .select(keys.map(col) ++ others.map(p => col(s"__s.$p").as(p)): _*)
   }
 
+  /** Schema enforcement: a store column has ONE type. Each incoming column
+    * `in(c)`, for `c` in `cols`, casts to the type of `existing`'s column
+    * `c` where they differ — else a full-outer coalesce/when would silently
+    * promote the whole store column (e.g. Long key + an all-null
+    * String-inferred batch → String store).
+    */
+  private def castToStore(existing: DataFrame, incoming: DataFrame,
+      cols: Seq[String], in: String => String): DataFrame = {
+    val storeType = existing.schema.fields.map(f => f.name -> f.dataType).toMap
+    cols.foldLeft(incoming) { (d, c) =>
+      storeType.get(c).filter(_ != d.schema(in(c)).dataType)
+        .fold(d)(t => d.withColumn(in(c), col(in(c)).cast(t)))
+    }
+  }
+
+  /** The keyed upsert behind [[mergeNodes]] and [[upsertEdges]]: one
+    * full-outer join of the store frame with the deduped incoming rows on
+    * `matchCols` (null-safe). A matched row overwrites exactly the incoming
+    * non-match columns (an explicit incoming null overwrites too); an
+    * unmatched incoming row becomes a new row, null-padded on the store
+    * columns it doesn't carry; a brand-new incoming column is added.
+    */
+  private def upsert(existing: DataFrame, incoming: DataFrame,
+      matchCols: Seq[String]): DataFrame = {
+    val dd = castToStore(existing, incoming, incoming.columns.toSeq, identity)
+    val setCols = dd.columns.filterNot(matchCols.contains).toSeq
+    val allCols = (existing.columns ++ dd.columns).distinct.toSeq
+    val pfx = "__w_"
+    val r = dd.columns.foldLeft(dd)((d, c) => d.withColumnRenamed(c, pfx + c))
+      .withColumn("__w__m", lit(true))
+    val cond = matchCols.map(k => col(k) <=> col(pfx + k)).reduce(_ && _)
+    val out = allCols.map { c =>
+      if (matchCols.contains(c)) coalesce(col(c), col(pfx + c)).as(c)
+      else if (setCols.contains(c) && existing.columns.contains(c))
+        when(col("__w__m"), col(pfx + c)).otherwise(col(c)).as(c)
+      else if (setCols.contains(c)) col(pfx + c).as(c) // brand-new property
+      else col(c).as(c) // untouched existing property (null for created)
+    }
+    existing.join(r, cond, "full_outer").select(out: _*)
+  }
+
   /** MERGE-upsert `incoming` rows into the label's node store: rows whose
     * merge keys match an existing node overwrite exactly the incoming
     * columns (Cypher `SET n += {…}` — an explicit incoming null overwrites,
@@ -67,11 +108,8 @@ object GraphWriter {
           throw new IllegalArgumentException(
             s"MERGE creating new label $label must use a single key property, got ${mergeKeys.mkString(", ")}")
         val key = mergeKeys.head
-        val nt = NodeType(label, key,
-          properties = dd.columns.filterNot(_ == key).toSeq, keyUnique = true)
-        store.copy(
-          schema = store.schema.copy(nodes = store.schema.nodes :+ nt),
-          nodes = store.nodes + (label -> dd))
+        store.withNode(NodeType(label, key,
+          properties = dd.columns.filterNot(_ == key).toSeq, keyUnique = true), dd)
       case Some(existing) =>
         // data-integrity guard: merging an existing label on keys that do
         // not cover ITS key would leave created (unmatched) rows with a
@@ -83,37 +121,11 @@ object GraphWriter {
             s"MERGE on existing label $label must include its key property '$ntKey' " +
               s"(got ${mergeKeys.mkString(", ")}): rows created by the merge would " +
               "carry a null key and could not participate in edge joins")
-        // schema enforcement: a store column has ONE type — incoming values
-        // cast to it (else the full-outer coalesce/when would silently
-        // promote the whole column, e.g. Long key + all-null String-inferred
-        // batch → String store)
-        val existingType = existing.schema.fields.map(f => f.name -> f.dataType).toMap
-        val dd2 = dd.columns.foldLeft(dd) { (d, c) =>
-          existingType.get(c).filter(_ != d.schema(c).dataType)
-            .fold(d)(t => d.withColumn(c, col(c).cast(t)))
-        }
-        val setCols = dd2.columns.filterNot(mergeKeys.contains).toSeq
-        val allCols = (existing.columns ++ dd2.columns).distinct.toSeq
-        val pfx = "__w_"
-        val r = dd2.columns.foldLeft(dd2)((d, c) => d.withColumnRenamed(c, pfx + c))
-          .withColumn("__w__m", lit(true))
-        val cond = mergeKeys.map(k => col(k) <=> col(pfx + k)).reduce(_ && _)
-        val out = allCols.map { c =>
-          if (mergeKeys.contains(c)) coalesce(col(c), col(pfx + c)).as(c)
-          else if (setCols.contains(c) && existing.columns.contains(c))
-            when(col("__w__m"), col(pfx + c)).otherwise(col(c)).as(c)
-          else if (setCols.contains(c)) col(pfx + c).as(c) // brand-new property
-          else col(c).as(c) // untouched existing property (null for created)
-        }
-        val merged = existing.join(r, cond, "full_outer").select(out: _*)
+        val merged = upsert(existing, dd, mergeKeys)
         val nt0 = store.schema.node(label)
-        val nt = nt0.copy(
-          properties = allCols.filterNot(_ == nt0.key),
-          keyUnique = nt0.keyUnique && mergeKeys == Seq(nt0.key))
-        store.copy(
-          schema = store.schema.copy(nodes =
-            store.schema.nodes.map(n => if (n.name == label) nt else n)),
-          nodes = store.nodes + (label -> merged))
+        store.withNode(nt0.copy(
+          properties = merged.columns.toSeq.filterNot(_ == nt0.key),
+          keyUnique = nt0.keyUnique && mergeKeys == Seq(nt0.key)), merged)
     }
   }
 
@@ -124,20 +136,15 @@ object GraphWriter {
     store.nodes.get(label) match {
       case None =>
         val key = incoming.columns.head
-        val nt = NodeType(label, key,
-          properties = incoming.columns.filterNot(_ == key).toSeq, keyUnique = false)
-        store.copy(
-          schema = store.schema.copy(nodes = store.schema.nodes :+ nt),
-          nodes = store.nodes + (label -> incoming))
+        store.withNode(NodeType(label, key,
+          properties = incoming.columns.filterNot(_ == key).toSeq, keyUnique = false),
+          incoming)
       case Some(existing) =>
         val allCols = (existing.columns ++ incoming.columns).distinct.toSeq
         val nt0 = store.schema.node(label)
-        val nt = nt0.copy(properties = allCols.filterNot(_ == nt0.key), keyUnique = false)
-        store.copy(
-          schema = store.schema.copy(nodes =
-            store.schema.nodes.map(n => if (n.name == label) nt else n)),
-          nodes = store.nodes +
-            (label -> conform(existing, allCols).unionByName(conform(incoming, allCols))))
+        store.withNode(
+          nt0.copy(properties = allCols.filterNot(_ == nt0.key), keyUnique = false),
+          conform(existing, allCols).unionByName(conform(incoming, allCols)))
     }
 
   /** MERGE (create=false) or CREATE (create=true) edge rows. `incoming`
@@ -164,17 +171,11 @@ object GraphWriter {
         */
       endpointsValidated: Boolean = false): GraphStore = {
     val inProps = incoming.columns.filterNot(c => c == keyS || c == keyT).toSeq
-    def validated(s: Set[String]): Set[String] =
-      if (endpointsValidated) s + label else s - label
     store.edges.get(label) match {
       case None =>
-        val et = EdgeType(label, srcLabel, dstLabel, keyS, keyT, inProps,
-          pairsUnique = false)
-        val rows = if (create) incoming else incoming.dropDuplicates()
-        store.copy(
-          schema = store.schema.copy(edges = store.schema.edges :+ et),
-          edges = store.edges + (label -> rows),
-          validatedEdges = validated(store.validatedEdges))
+        store.withEdge(
+          EdgeType(label, srcLabel, dstLabel, keyS, keyT, inProps, pairsUnique = false),
+          if (create) incoming else incoming.dropDuplicates(), endpointsValidated)
       case Some(existing) =>
         val et0 = store.schema.edge(label)
         require(keyS == et0.keyS && keyT == et0.keyT,
@@ -192,18 +193,9 @@ object GraphWriter {
             val cond = matchCols.map(c => col(c) <=> col(pfx + c)).reduce(_ && _)
             in.dropDuplicates().join(exKeys, cond, "left_anti")
           }
-        val et = et0.copy(
+        store.withEdge(et0.copy(
           properties = allCols.filterNot(c => c == keyS || c == keyT),
-          pairsUnique = false)
-        store.copy(
-          schema = store.schema.copy(edges =
-            store.schema.edges.map(e => if (e.label == label) et else e)),
-          edges = store.edges + (label -> ex.unionByName(added)),
-          // validated new rows keep an already-validated label validated;
-          // they cannot retroactively validate existing rows
-          validatedEdges =
-            if (endpointsValidated) store.validatedEdges
-            else store.validatedEdges - label)
+          pairsUnique = false), ex.unionByName(added), endpointsValidated)
     }
   }
 
@@ -238,50 +230,17 @@ object GraphWriter {
     val dd = dedupOn(incoming.na.drop("any", Seq(keyS, keyT)), matchCols)
     store.edges.get(label) match {
       case None =>
-        val et = EdgeType(label, srcLabel, dstLabel, keyS, keyT,
+        store.withEdge(EdgeType(label, srcLabel, dstLabel, keyS, keyT,
           properties = dd.columns.filterNot(c => c == keyS || c == keyT).toSeq,
-          pairsUnique = false)
-        store.copy(
-          schema = store.schema.copy(edges = store.schema.edges :+ et),
-          edges = store.edges + (label -> dd),
-          validatedEdges =
-            if (endpointsValidated) store.validatedEdges + label
-            else store.validatedEdges - label)
+          pairsUnique = false), dd, endpointsValidated)
       case Some(existing) =>
         val et0 = store.schema.edge(label)
         require(keyS == et0.keyS && keyT == et0.keyT,
           s"edge $label key columns are ${et0.keyS}/${et0.keyT}")
-        val existingType = existing.schema.fields.map(f => f.name -> f.dataType).toMap
-        val dd2 = dd.columns.foldLeft(dd) { (d, c) =>
-          existingType.get(c).filter(_ != d.schema(c).dataType)
-            .fold(d)(t => d.withColumn(c, col(c).cast(t)))
-        }
-        val setCols = dd2.columns.filterNot(matchCols.contains).toSeq
-        val allCols = (existing.columns ++ dd2.columns).distinct.toSeq
-        val pfx = "__w_"
-        val r = dd2.columns.foldLeft(dd2)((d, c) => d.withColumnRenamed(c, pfx + c))
-          .withColumn("__w__m", lit(true))
-        val cond = matchCols.map(k => col(k) <=> col(pfx + k)).reduce(_ && _)
-        val out = allCols.map { c =>
-          if (matchCols.contains(c)) coalesce(col(c), col(pfx + c)).as(c)
-          else if (setCols.contains(c) && existing.columns.contains(c))
-            when(col("__w__m"), col(pfx + c)).otherwise(col(c)).as(c)
-          else if (setCols.contains(c)) col(pfx + c).as(c) // brand-new property
-          else col(c).as(c) // untouched existing property (null for created)
-        }
-        val merged = existing.join(r, cond, "full_outer").select(out: _*)
-        val et = et0.copy(
-          properties = allCols.filterNot(c => c == keyS || c == keyT),
-          pairsUnique = false)
-        store.copy(
-          schema = store.schema.copy(edges =
-            store.schema.edges.map(e => if (e.label == label) et else e)),
-          edges = store.edges + (label -> merged),
-          // validated new rows keep an already-validated label validated;
-          // they cannot retroactively validate existing rows
-          validatedEdges =
-            if (endpointsValidated) store.validatedEdges
-            else store.validatedEdges - label)
+        val merged = upsert(existing, dd, matchCols)
+        store.withEdge(et0.copy(
+          properties = merged.columns.toSeq.filterNot(c => c == keyS || c == keyT),
+          pairsUnique = false), merged, endpointsValidated)
     }
   }
 
@@ -300,13 +259,7 @@ object GraphWriter {
     require(matchCols.contains(et0.keyS) && matchCols.contains(et0.keyT),
       s"updateEdges pairs for $label need ${et0.keyS}/${et0.keyT} columns")
     val before = store.edges(label)
-    val beforeType = before.schema.fields.map(f => f.name -> f.dataType).toMap
-    val dd0 = dedupOn(pairs, matchCols)
-    // a store column has ONE type — incoming set values cast to it
-    val dd = setCols.foldLeft(dd0) { (d, c) =>
-      beforeType.get(c).filter(_ != d.schema(s"__set_$c").dataType)
-        .fold(d)(t => d.withColumn(s"__set_$c", col(s"__set_$c").cast(t)))
-    }
+    val dd = castToStore(before, dedupOn(pairs, matchCols), setCols, c => s"__set_$c")
     val pfx = "__u_"
     val p = dd.columns.foldLeft(dd)((d, c) => d.withColumnRenamed(c, pfx + c))
       .withColumn("__u__m", lit(true))
@@ -320,11 +273,9 @@ object GraphWriter {
       else col(c).as(c)
     }
     val merged = before.join(p, cond, "left_outer").select(out: _*)
-    val et = et0.copy(properties = (et0.properties ++ setCols).distinct)
-    store.copy(
-      schema = store.schema.copy(edges =
-        store.schema.edges.map(e => if (e.label == label) et else e)),
-      edges = store.edges + (label -> merged))
+    // property updates move no endpoint: the validated state stands
+    store.withEdge(et0.copy(properties = (et0.properties ++ setCols).distinct), merged,
+      endpointsValidated = true)
   }
 
   /** DELETE nodes whose key appears in `keys` (a one-column frame named by
@@ -360,19 +311,16 @@ object GraphWriter {
     // the target label dies by the matched keys; each inbound membership
     // source by the member keys whose target rendering matched
     val tgtType = store.nodes(label).schema(nt.key).dataType
-    val memberDel: Seq[(String, DataFrame)] = store.memberships.toSeq
-      .collect { case ((t, s), m) if t == label && s != label => (s, m) }
-      .sortBy(_._1)
-      .map { case (s, m) =>
-        val snt = store.schema.node(s)
-        val srcDf = store.nodes(s)
-        s -> srcDf
-          .join(m, srcDf(snt.key).cast(StringType) === m("__m_key"),
-            "left_semi")
-          .withColumn("__t_key", col(snt.key).cast(tgtType).cast(StringType))
+    val memberDel: Seq[(String, DataFrame)] = store.memberships.keys.toSeq
+      .collect { case (t, s) if t == label && s != label => s }
+      .sorted
+      .map { s =>
+        val sKey = store.schema.node(s).key
+        s -> store.memberRows(label, s)
+          .withColumn("__t_key", GraphStore.memberKey(sKey, tgtType))
           .join(keyStrs.withColumnRenamed("__m_key", "__t_key"),
             Seq("__t_key"), "left_semi")
-          .select(col(snt.key))
+          .select(col(sKey))
       }
     val perLabel: Seq[(String, DataFrame)] = (label -> keys) +: memberDel
     var nodes = store.nodes

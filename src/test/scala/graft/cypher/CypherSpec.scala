@@ -1427,6 +1427,34 @@ class CypherSpec extends SparkSpec {
     assert(hops == Seq((1L, 2L, "FWD"), (2L, 3L, "BACK")))
   }
 
+  test("WITH n AS m carries a node, single-label or disjunction, under its new name") {
+    def rows(e: CypherEngine, q: String): Seq[Row] =
+      e.run(q).collect().toSeq.sortBy(_.toString)
+    val e = CypherEngine(opChain)
+    // property reads first: a key-only binding fails them inside Spark
+    assert(rows(e, "MATCH (n:OP) WITH n AS m RETURN m.sid, m {.sid}") ==
+      rows(e, "MATCH (n:OP) WITH n RETURN n.sid, n {.sid}"))
+    val plain = rows(e, "MATCH (n:OP) WITH n RETURN n.sid, n {.sid}, labels(n)")
+    assert(plain.size == 4)
+    assert(rows(e, "MATCH (n:OP) WITH n AS m RETURN m.sid, m {.sid}, labels(m)") == plain)
+    // aliased twice, grouped by, and null-extended like the bound name
+    assert(rows(e, "MATCH (n:OP) WITH n AS m WITH m AS k RETURN k.sid, k {.sid}, labels(k)") ==
+      plain)
+    assert(rows(e, "MATCH (n:OP)-[:STEP]->() WITH n AS m, count(*) AS c RETURN m.sid, c") ==
+      Seq(Row(1L, 2L), Row(2L, 1L), Row(3L, 1L)))
+    assert(rows(e,
+      """MATCH (a:OP) OPTIONAL MATCH (a)-[:STEP]->(b:OP {sid: 4})
+         WITH a, b AS c WHERE c IS NULL RETURN a.sid, c.sid""") ==
+      Seq(Row(2L, null), Row(4L, null)))
+    // a label disjunction carries its per-row label tag and property superset
+    var st = CypherEngine(GraphStore.empty).execute("UNWIND [1, 2] AS i MERGE (a:A {aid: i})").store
+    st = CypherEngine(st).execute("UNWIND [3] AS i MERGE (b:B {bid: i})").store
+    val d = CypherEngine(st)
+    val disj = rows(d, "MATCH (x:A|B) WITH x RETURN labels(x), x.aid, x.bid")
+    assert(disj.map(_.getSeq[String](0)) == Seq(Seq("A"), Seq("A"), Seq("B")))
+    assert(rows(d, "MATCH (x:A|B) WITH x AS y RETURN labels(y), y.aid, y.bid") == disj)
+  }
+
   test("OPTIONAL MATCH shortestPath keeps rows with no path as nulls") {
     val e = CypherEngine(opChain)
     // unbound far endpoint with a prop filter: every source keeps its row;

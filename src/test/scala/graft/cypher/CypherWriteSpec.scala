@@ -675,6 +675,59 @@ class CypherWriteSpec extends SparkSpec {
     assert(e.getMessage.contains("must target its relationship variable"))
   }
 
+  test("ON CREATE/ON MATCH SET on a node MERGE must target the merge variable") {
+    // every SET item form, on either branch, naming another bound variable
+    val items = Seq("t += {seen: true}", "t.seen = true", "t = {seen: true}", "t:Seen")
+    for (branch <- Seq("ON CREATE", "ON MATCH"); item <- items) {
+      val e = intercept[CypherEngine.CypherException] {
+        CypherEngine(personCityStore()).execute(
+          s"""MATCH (t:City {city_id: 1})
+              MERGE (p:Person {pid: 10}) $branch SET $item""")
+      }
+      assert(e.getMessage == "ON CREATE/ON MATCH SET must target the merge variable p",
+        s"$branch SET $item")
+    }
+  }
+
+  test("relationship MERGE ON CREATE SET r = {…} / ON MATCH SET r = {…} replaces per branch") {
+    val cypher =
+      """UNWIND $rows AS row
+        MATCH (s:Person) WHERE s.pid = row.pid
+        WITH s, row
+        MATCH (t:City) WHERE t.city_id = row.city_id
+        WITH s, t, row
+        MERGE (s)-[r:STAYED]->(t)
+        ON CREATE SET r = {nights: row.n, tag: 'new'}
+        ON MATCH SET r = {nights: row.n}
+        RETURN s.pid AS pid, r.nights AS nights, r.tag AS tag ORDER BY pid"""
+    // the type exists (empty-property edges would leave nothing to
+    // replace), so both branches expand against its schema
+    val st0 = CypherEngine(personCityStore()).execute(
+      """MATCH (s:Person {pid: 11}), (t:City {city_id: 2})
+         CREATE (s)-[:STAYED {nights: 1, tag: 'old'}]->(t)""").store
+    // pid 10 → city 1 creates (tag set), pid 11 → city 2 matches (tag reset)
+    val r = CypherEngine(st0).execute(cypher, Map("rows" -> rows(
+      Map("pid" -> 10L, "city_id" -> 1L, "n" -> 3L),
+      Map("pid" -> 11L, "city_id" -> 2L, "n" -> 5L))))
+    assert(r.result.collect() === Array(Row(10L, 3L, "new"), Row(11L, 5L, null)))
+    assert(r.store.edges("STAYED").orderBy("pid").collect() ===
+      Array(Row(10L, 1L, 3L, "new"), Row(11L, 2L, 5L, null)))
+  }
+
+  test("replace-all on a brand-new MERGE label or type is not supported inside a fused SET") {
+    val node = intercept[CypherEngine.CypherException] {
+      CypherEngine(personCityStore()).execute(
+        "MERGE (a:Fresh {fid: 1}) ON CREATE SET a = {x: 1}")
+    }
+    assert(node.getMessage.contains("is not supported inside a fused SET"))
+    val rel = intercept[CypherEngine.CypherException] {
+      CypherEngine(personCityStore()).execute(
+        """MATCH (s:Person {pid: 10}), (t:City {city_id: 1})
+           MERGE (s)-[r:FRESH]->(t) ON CREATE SET r = {x: 1}""")
+    }
+    assert(rel.getMessage.contains("is not supported inside a fused SET"))
+  }
+
   test("GraphWriter.upsertEdges full-outer shape matches the Cypher counter result") {
     import spark.implicits._
     var st = personCityStore()
